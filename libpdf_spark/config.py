@@ -15,9 +15,7 @@ from dataclasses import dataclass, field
 class ExtractConfig:
     # --- spatial tolerances (points; 72 pt = 1 inch) ---
     table_margin: float = 8.0           # parameters.py:26 TABLE_MARGIN
-    headline_tolerance: float = 20.0    # parameters.py:47 HEADLINE_TOLERANCE
     chapter_rectangle_extend: float = 20.0  # parameters.py:70 CHAPTER_RECTANGLE_EXTEND
-    chapter_textbox_tolerance: float = 1.0  # parameters.py:76 CHAPTER_TEXTBOX_TOLERANCE
     min_outline_title_similarity: float = 0.6  # parameters.py:81 MIN_OUTLINE_TITLE_TEXTBOX_SIMILARITY
     anno_x_tolerance: float = 3.0       # parameters.py:85 ANNO_X_TOLERANCE
     anno_y_tolerance: float = 3.0       # parameters.py:86 ANNO_Y_TOLERANCE
@@ -78,7 +76,6 @@ class ExtractConfig:
 
     # --- Spark execution ---
     salt_buckets: int = 8               # salted repartition on conv_id (north_star)
-    arrow_max_records: int = 256        # cap payload bytes per Arrow batch
 
     # chapter-number regex — catalog.py:206-218 (verbatim semantics)
     chapter_number_regex: str = (

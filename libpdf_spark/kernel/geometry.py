@@ -118,18 +118,6 @@ def crop_cell_box(
     )
 
 
-def crop_text(
-    chars: CharArrays,
-    page: int,
-    bbox: tuple[float, float, float, float],
-    cfg: ExtractConfig,
-) -> str:
-    """Assembled text of all chars in bbox; boxes join with "\\n"
-    (figure text assembly, ``process.py:94``)."""
-    boxes = crop_boxes(chars, page, bbox, cfg)
-    return "\n".join(b.text for b in boxes)
-
-
 def bbox_contains(outer, inner, margin: float = 0.0) -> bool:
     """``inner`` fully inside ``outer`` expanded by ``margin``."""
     return (

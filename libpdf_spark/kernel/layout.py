@@ -22,15 +22,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from libpdf_spark.config import ExtractConfig
-
-
-def _object_array(items: list) -> np.ndarray:
-    """1-D object array even when items are equal-length tuples
-    (plain ``np.array`` would broadcast those to 2-D)."""
-    arr = np.empty(len(items), dtype=object)
-    for i, it in enumerate(items):
-        arr[i] = it
-    return arr
+from libpdf_spark.payload import decode_chars
 
 
 @dataclass
@@ -38,7 +30,7 @@ class CharArrays:
     """Struct-of-arrays view of a document's chars (one page or all)."""
 
     page: np.ndarray    # int32
-    text: np.ndarray    # object (1-char str)
+    text: np.ndarray    # object (str), or <U1 from packed payloads
     x0: np.ndarray
     y0: np.ndarray
     x1: np.ndarray
@@ -50,55 +42,10 @@ class CharArrays:
         return len(self.page)
 
     @classmethod
-    def from_records(cls, chars: list[dict]) -> "CharArrays":
-        n = len(chars)
-        return cls(
-            page=np.fromiter((c["page"] for c in chars), dtype=np.int32, count=n),
-            text=np.array([c["text"] for c in chars], dtype=object),
-            x0=np.fromiter((c["x0"] for c in chars), dtype=np.float64, count=n),
-            y0=np.fromiter((c["y0"] for c in chars), dtype=np.float64, count=n),
-            x1=np.fromiter((c["x1"] for c in chars), dtype=np.float64, count=n),
-            y1=np.fromiter((c["y1"] for c in chars), dtype=np.float64, count=n),
-            fontname=np.array([c.get("fontname") for c in chars], dtype=object),
-            ncolor=_object_array(
-                [tuple(c["ncolor"]) if c.get("ncolor") else None for c in chars]
-            ),
-        )
-
-    @classmethod
-    def from_columnar(cls, cols: dict) -> "CharArrays":
-        """Columnar payload encoding (payload.to_columnar_chars) —
-        near-zero-copy into numpy."""
-        n = len(cols["page"])
-        text = cols["text"]
-        fontname = cols.get("fontname")
-        ncolor = cols.get("ncolor")
-        return cls(
-            page=np.asarray(cols["page"], dtype=np.int32),
-            # r8: pass prebuilt arrays through untouched (the packed
-            # fast path, payload.unpack_chars_arrays, delivers <U1
-            # text and run-filled object attrs — re-coercing to
-            # object would copy per char)
-            text=text if isinstance(text, np.ndarray)
-            else np.asarray(text, dtype=object),
-            x0=np.asarray(cols["x0"], dtype=np.float64),
-            y0=np.asarray(cols["y0"], dtype=np.float64),
-            x1=np.asarray(cols["x1"], dtype=np.float64),
-            y1=np.asarray(cols["y1"], dtype=np.float64),
-            fontname=fontname if isinstance(fontname, np.ndarray)
-            else np.asarray(fontname or [None] * n, dtype=object),
-            ncolor=ncolor if isinstance(ncolor, np.ndarray)
-            else _object_array(
-                [tuple(c) if c else None for c in (ncolor or [None] * n)]
-            ),
-        )
-
-    @classmethod
     def from_payload(cls, chars) -> "CharArrays":
-        """Accept any payload encoding: row dicts, columnar dict, or
-        the v2 packed form (base64 buffers → ``np.frombuffer``).
-
-        Applies the anno-noise filter (F2, ``extract.py:446-486``
+        """Decode payload chars in any encoding
+        (:func:`libpdf_spark.payload.decode_chars`), then apply the
+        anno-noise filter (F2, ``extract.py:446-486``
         ``delete_page_ann``): pdfminer's layout analysis injects
         virtual ``anno`` objects whose text is ``" "`` or ``"\\n"``
         (pdfplumber issue #1); a producer that serialized that object
@@ -115,15 +62,7 @@ class CharArrays:
         gap geometry, which reconstructs the same word boundaries
         (covered by ``test_kernel_robustness.py::
         test_f2_real_space_glyph_word_segmentation``)."""
-        if isinstance(chars, dict):
-            if chars.get("v") == 2:
-                from libpdf_spark.payload import unpack_chars_arrays
-
-                arr = cls.from_columnar(unpack_chars_arrays(chars))
-            else:
-                arr = cls.from_columnar(chars)
-        else:
-            arr = cls.from_records(chars or [])
+        arr = cls(**decode_chars(chars))
         # vectorized keep-mask (VERDICT r3: np.isin is 3x the Python
         # generator on this every-char hot path; semantics identical)
         keep = (arr.text != " ") & (arr.text != "\n")  # r8: 2 vector
@@ -291,17 +230,14 @@ def assemble_lines_bulk(
     texts_np = chars.text[members]
     # r8: when text is the packed-payload <U1 array, the page's full
     # concatenation is ONE UTF-32 buffer reinterpretation (each slot
-    # is exactly one char) — no per-char Python string creation. A
+    # is exactly one char) — no per-char Python string creation. The
+    # guard pins little-endian <U1: a byte-swapped >U1 array would
+    # reinterpret to garbage code points, so it takes the list path. A
     # numpy U-slot holding "" is NUL padding, indistinguishable from
     # a real "\x00" glyph under the view, so any empty slot falls
     # back to the list path (which renders "" exactly as before).
     page_str = None
-    if (
-        n
-        and texts_np.dtype.kind == "U"
-        and texts_np.dtype.itemsize == 4
-        and (texts_np != "").all()
-    ):
+    if n and texts_np.dtype == np.dtype("<U1") and (texts_np != "").all():
         page_str = np.ascontiguousarray(texts_np).view(f"<U{n}")[0]
     else:
         texts_all = texts_np.tolist()

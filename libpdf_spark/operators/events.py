@@ -152,8 +152,9 @@ def q_hourly_windows(spark, sf_dir):
     shape in ``streaming/``). The window key is pure integer
     arithmetic on epoch micros (``F.window`` would work too, but a
     computed BIGINT group key aggregates without the struct plumbing
-    and is engine-portable bit-for-bit); value sums accumulate in
-    DECIMAL and ship as DOUBLE for cross-engine dtype parity."""
+    and is engine-portable bit-for-bit); value sums accumulate as
+    exact 10⁶-scaled longs and ship as DOUBLE for cross-engine dtype
+    parity."""
     F = _F()
     hour_us = 3_600_000_000
     ev = load(spark, sf_dir, "events").withColumn("ts_us", _ts_us())

@@ -24,15 +24,6 @@ def _F():
     return F
 
 
-def _dot(a, b):
-    F = _F()
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 QUANT = 1_000_000  # 1e-6 embedding quantization grid
 
 

@@ -60,8 +60,8 @@ def to_columnar_chars(chars: list[dict]) -> dict:
     The row encoding costs ~120 JSON bytes per char (key repetition);
     columnar cuts payload size and parse time ~6×, which directly
     reduces Arrow transfer + memory bandwidth in the hot path. All
-    three encodings are accepted on read (``chars`` as list = rows, as
-    dict = columns, as dict with ``"v": 2`` = packed, below).
+    three encodings (rows, this one, and :func:`to_packed_chars`) are
+    read by one decoder, :func:`decode_chars`.
     """
     return {
         "page": [c["page"] for c in chars],
@@ -126,76 +126,68 @@ def to_packed_chars(cols: dict) -> dict | None:
     }
 
 
-def rle_expand(rle: list, n: int) -> list:
-    out: list = []
-    for v, k in rle:
-        out.extend([v] * int(k))
-    if len(out) != n:
-        raise ValueError("corrupt RLE char attribute")
-    return out
-
-
-def unpack_chars(packed: dict) -> dict:
-    """PACKED (``"v": 2``) → plain columnar dict (lists)."""
-    import base64
-
+def _object_array(items: list) -> "np.ndarray":
+    """1-D object array even when items are equal-length tuples
+    (plain ``np.array`` would broadcast those to 2-D)."""
     import numpy as np
 
-    n = int(packed["n"])
-    text = packed["text"]
+    arr = np.empty(len(items), dtype=object)
+    for i, it in enumerate(items):
+        arr[i] = it
+    return arr
+
+
+def decode_chars(chars) -> dict:
+    """Payload chars in any encoding → numpy-ready columns.
+
+    The one place the char encoding is decided: ``None`` or a list of
+    row dicts, a v1 columnar dict (:func:`to_columnar_chars`) or a v2
+    packed dict (``"v": 2``, :func:`to_packed_chars`). Returns the
+    fields of ``kernel.layout.CharArrays``: ``page`` int32,
+    ``x0``/``y0``/``x1``/``y1`` float64, ``text``, and object arrays
+    ``fontname`` (str | None) and ``ncolor`` (tuple | None).
+
+    Packed input is the hot path of every JSON turn (r8): coordinates
+    and pages are ``np.frombuffer`` views of the base64 buffers,
+    ``text`` is a ``<U1`` array read straight from the UTF-32 buffer
+    (no per-char Python string) and fontname/ncolor are filled once
+    per RLE run, not once per char. Row and v1 text stays an object
+    array (glyphs may be multi-char ligatures). A packed column whose
+    length, or RLE runs whose total, disagree with ``n`` raise
+    ``ValueError`` — the payload is outside input."""
+    import numpy as np
+
+    if not isinstance(chars, dict):
+        chars = to_columnar_chars(chars or [])
+    if chars.get("v") != 2:
+        n = len(chars["page"])
+        fontname = chars.get("fontname")
+        ncolor = chars.get("ncolor")
+        return {
+            "page": np.asarray(chars["page"], dtype=np.int32),
+            "text": np.asarray(chars["text"], dtype=object),
+            "x0": np.asarray(chars["x0"], dtype=np.float64),
+            "y0": np.asarray(chars["y0"], dtype=np.float64),
+            "x1": np.asarray(chars["x1"], dtype=np.float64),
+            "y1": np.asarray(chars["y1"], dtype=np.float64),
+            "fontname": np.asarray(fontname or [None] * n, dtype=object),
+            "ncolor": _object_array(
+                [tuple(c) if c else None for c in (ncolor or [None] * n)]
+            ),
+        }
+
+    import base64
+
+    n = int(chars["n"])
+    text = chars["text"]
     if len(text) != n:
         raise ValueError("corrupt packed chars: text length mismatch")
 
-    def funpack(key: str) -> "np.ndarray":
-        buf = base64.b64decode(packed[key])
-        arr = np.frombuffer(buf, dtype="<f8")
+    def unpack(key: str, dtype: str = "<f8") -> "np.ndarray":
+        arr = np.frombuffer(base64.b64decode(chars[key]), dtype=dtype)
         if len(arr) != n:
             raise ValueError(f"corrupt packed chars: {key} length mismatch")
         return arr
-
-    pages = np.frombuffer(base64.b64decode(packed["page"]), dtype="<i4")
-    if len(pages) != n:
-        raise ValueError("corrupt packed chars: page length mismatch")
-    return {
-        "page": pages,
-        "text": list(text),
-        "x0": funpack("x0"), "y0": funpack("y0"),
-        "x1": funpack("x1"), "y1": funpack("y1"),
-        "fontname": rle_expand(packed.get("fontname_rle") or [[None, n]], n),
-        "ncolor": rle_expand(packed.get("ncolor_rle") or [[None, n]], n),
-    }
-
-
-def unpack_chars_arrays(packed: dict) -> dict:
-    """PACKED (``"v": 2``) → numpy-ready columnar dict (r8 hot path).
-
-    Same values as :func:`unpack_chars` but built for
-    ``CharArrays.from_columnar``: ``text`` is a ``<U1`` array decoded
-    straight from the UTF-32 buffer (no per-char Python list),
-    ``fontname``/``ncolor`` are object arrays filled per RLE RUN (one
-    broadcast per run instead of one Python object per char; ncolor
-    values arrive as the tuples the kernel stores anyway).
-    :func:`unpack_chars` keeps the list-based contract for the
-    writer/renderer/tests."""
-    import base64
-
-    import numpy as np
-
-    n = int(packed["n"])
-    text = packed["text"]
-    if len(text) != n:
-        raise ValueError("corrupt packed chars: text length mismatch")
-
-    def funpack(key: str) -> "np.ndarray":
-        buf = base64.b64decode(packed[key])
-        arr = np.frombuffer(buf, dtype="<f8")
-        if len(arr) != n:
-            raise ValueError(f"corrupt packed chars: {key} length mismatch")
-        return arr
-
-    pages = np.frombuffer(base64.b64decode(packed["page"]), dtype="<i4")
-    if len(pages) != n:
-        raise ValueError("corrupt packed chars: page length mismatch")
 
     def rle_obj(rle: list, conv=None) -> "np.ndarray":
         arr = np.empty(n, dtype=object)
@@ -212,12 +204,12 @@ def unpack_chars_arrays(packed: dict) -> dict:
         return arr
 
     return {
-        "page": pages,
+        "page": unpack("page", "<i4"),
         "text": np.frombuffer(text.encode("utf-32-le"), dtype="<U1"),
-        "x0": funpack("x0"), "y0": funpack("y0"),
-        "x1": funpack("x1"), "y1": funpack("y1"),
-        "fontname": rle_obj(packed.get("fontname_rle") or [[None, n]]),
-        "ncolor": rle_obj(packed.get("ncolor_rle") or [[None, n]], conv=tuple),
+        "x0": unpack("x0"), "y0": unpack("y0"),
+        "x1": unpack("x1"), "y1": unpack("y1"),
+        "fontname": rle_obj(chars.get("fontname_rle") or [[None, n]]),
+        "ncolor": rle_obj(chars.get("ncolor_rle") or [[None, n]], conv=tuple),
     }
 
 

@@ -2047,15 +2047,11 @@ def _expand_objstm(stm: Stream, objects: dict[int, object]) -> None:
 
 
 def _rows_from_chars(chars) -> list[dict]:
-    if isinstance(chars, dict):  # columnar/packed → rows
-        if chars.get("v") == 2:
-            from libpdf_spark.payload import unpack_chars
+    """Payload chars in any encoding → one plain-Python dict per char."""
+    from libpdf_spark.payload import decode_chars
 
-            chars = unpack_chars(chars)
-        n = len(chars["page"])
-        keys = [k for k in ("page", "text", "x0", "y0", "x1", "y1", "fontname", "ncolor") if k in chars]
-        return [{k: chars[k][i] for k in keys} for i in range(n)]
-    return list(chars or [])
+    cols = decode_chars(chars)
+    return [dict(zip(cols, row)) for row in zip(*(v.tolist() for v in cols.values()))]
 
 
 _META_TO_INFO = {

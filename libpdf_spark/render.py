@@ -25,6 +25,8 @@ import zlib
 
 import numpy as np
 
+from libpdf_spark.payload import decode_chars
+
 # reference parameters.py:200-206 (RGB + alpha/255)
 VIS_DBG_MAP_ELEMENTS_COLOR = {
     "chapter": ((0, 128, 0), 80),
@@ -126,31 +128,11 @@ def _draw_payload(r: _Raster, doc: dict, page: int) -> None:
     for ln in doc.get("lines") or []:
         if int(ln["page"]) == page:
             r.fill((ln["x0"], ln["y0"], ln["x1"], ln["y1"]), (0, 0, 0))
-    chars = doc.get("chars")
-    if isinstance(chars, dict) and chars.get("v") == 2:
-        from libpdf_spark.payload import unpack_chars
-
-        chars = unpack_chars(chars)
-    if isinstance(chars, dict):
-        n = len(chars["page"])
-        get = lambda k, i: (chars.get(k) or [None] * n)[i]  # noqa: E731
-        rows = (
-            {
-                "page": chars["page"][i], "x0": chars["x0"][i],
-                "y0": chars["y0"][i], "x1": chars["x1"][i],
-                "y1": chars["y1"][i], "ncolor": get("ncolor", i),
-            }
-            for i in range(n)
-        )
-    else:
-        rows = chars or []
-    for c in rows:
-        if int(c["page"]) == page:
-            r.fill(
-                (c["x0"], c["y0"], c["x1"], c["y1"]),
-                _rgb255(c.get("ncolor")),
-                alpha=230,
-            )
+    cols = decode_chars(doc.get("chars"))
+    on_page = cols["page"] == page
+    bboxes = zip(*(cols[k][on_page].tolist() for k in ("x0", "y0", "x1", "y1")))
+    for bbox, ncolor in zip(bboxes, cols["ncolor"][on_page]):
+        r.fill(bbox, _rgb255(ncolor), alpha=230)
 
 
 def render_region(

@@ -31,28 +31,25 @@ TRANSCRIPT_DDL = (
 )
 
 
+def _read_transcript_stream(spark, input_path: str):
+    return (
+        spark.readStream.schema(TRANSCRIPT_DDL)
+        .option("maxFilesPerTrigger", 16)
+        .parquet(input_path)
+    )
+
+
 def extract_turns_stream(
     spark,
     input_path: str,
     cfg: ExtractConfig = DEFAULT_CONFIG,
 ):
     """Streaming DataFrame of extraction results over a parquet
-    file-source directory (new files = new micro-batches)."""
-    from pyspark.sql import functions as F
+    file-source directory (new files = new micro-batches): the batch
+    plan of ``pipeline.extract_turns``, salted on the input side."""
+    from libpdf_spark.pipeline import extract_turns
 
-    from libpdf_spark.pipeline import EXTRACT_SCHEMA, make_extract_batch
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_path)
-        .select("conv_id", "turn_idx", "text", "tool")
-    )
-    salt = F.pmod(F.hash("turn_idx"), F.lit(cfg.salt_buckets))
-    key = F.concat_ws("#", F.col("conv_id"), salt.cast("string"))
-    return stream.repartition(key).mapInPandas(
-        make_extract_batch(cfg), schema=EXTRACT_SCHEMA
-    )
+    return extract_turns(_read_transcript_stream(spark, input_path), cfg, salt_stage="input")
 
 
 def run_stream_once(
@@ -78,14 +75,6 @@ def run_stream_once(
     if q.isActive:
         q.stop()
         raise TimeoutError("streaming extraction did not drain in time")
-
-
-def _read_transcript_stream(spark, input_path: str):
-    return (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_path)
-    )
 
 
 def windowed_turn_metrics(

@@ -160,8 +160,9 @@ def test_build_boxes_conserves_every_char(doc):
 
     from libpdf_spark.config import ExtractConfig
     from libpdf_spark.kernel.layout import CharArrays, build_boxes
+    from libpdf_spark.payload import decode_chars
 
-    chars = CharArrays.from_records(doc["chars"])
+    chars = CharArrays(**decode_chars(doc["chars"]))
     boxes = build_boxes(chars, ExtractConfig())
     seen = np.concatenate([b.char_idx for b in boxes]) if boxes else np.array([])
     assert sorted(seen.tolist()) == list(range(len(chars)))
@@ -182,9 +183,10 @@ def test_words_lines_partition_box_chars(doc):
         box_words_lines,
         build_boxes,
     )
+    from libpdf_spark.payload import decode_chars
 
     cfg = ExtractConfig()
-    chars = CharArrays.from_records(doc["chars"])
+    chars = CharArrays(**decode_chars(doc["chars"]))
     for b in build_boxes(chars, cfg):
         words, lines = box_words_lines(chars, b, cfg.word_margin)
         assert len(lines) == len(b.line_spans)
@@ -216,21 +218,21 @@ def test_packed_payload_roundtrip_bit_exact(doc):
     """v2 packed chars decode to EXACTLY the v1 columnar values
     (float64 buffers round-trip bit-exact; glyphs/attrs verbatim)."""
     from libpdf_spark.payload import (
+        decode_chars,
         to_columnar_chars,
         to_packed_chars,
-        unpack_chars,
     )
 
     cols = to_columnar_chars(doc["chars"])
     packed = to_packed_chars(cols)
     assert packed is not None and packed["v"] == 2
-    back = unpack_chars(packed)
-    assert list(back["text"]) == cols["text"]
-    assert list(back["page"]) == cols["page"]
+    back = decode_chars(packed)
+    assert back["text"].tolist() == cols["text"]
+    assert back["page"].tolist() == cols["page"]
     for k in ("x0", "y0", "x1", "y1"):
         assert back[k].tolist() == cols[k]  # bit-exact, no rounding
-    assert back["fontname"] == cols["fontname"]
-    assert back["ncolor"] == [list(c) if c else None for c in cols["ncolor"]]
+    assert back["fontname"].tolist() == cols["fontname"]
+    assert back["ncolor"].tolist() == [tuple(c) if c else None for c in cols["ncolor"]]
 
 
 def test_multichar_glyphs_fall_back_to_v1():
