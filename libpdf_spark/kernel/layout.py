@@ -17,6 +17,7 @@ per-char text offsets retained for link-index computation
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -323,19 +324,17 @@ def assemble_line_text(
     return text, offsets
 
 
-def _connected_components(adjacent: np.ndarray) -> np.ndarray:
-    """Connected-component labels of a small boolean adjacency matrix
-    (N is lines/boxes per page — tens, not thousands).
+def _connected_components(n: int, ii: np.ndarray, jj: np.ndarray) -> np.ndarray:
+    """Connected-component labels of ``n`` nodes from the edge list
+    ``(ii[k], jj[k])``; edge direction and duplicate edges do not
+    matter, and time and memory are linear in nodes + edges.
 
-    Union-find over the adjacency pairs, always attaching the larger
-    root under the smaller, so every component's root — and therefore
-    its label — is its minimum member index: identical labels to the
-    min-label propagation this replaces (the label VALUE matters —
-    ``order_boxes_reading`` uses it as a sort tie-break), without
-    rebuilding an n×n matrix per propagation round. Input must be
-    symmetric (both call sites build symmetric adjacency; only the
-    upper triangle is traversed)."""
-    n = adjacent.shape[0]
+    Union-find that always attaches the larger root under the smaller,
+    so every component's root — and therefore its label — is its
+    minimum member index, the same labels min-label propagation gives
+    (the label VALUE matters: it orders ``group_boxes``' groups). A
+    node's parent is never above the node itself, so one ascending
+    pass resolves every final label without a ``find`` per node."""
     parent = list(range(n))
 
     def find(x: int) -> int:
@@ -344,9 +343,6 @@ def _connected_components(adjacent: np.ndarray) -> np.ndarray:
             x = parent[x]
         return x
 
-    ii, jj = np.nonzero(adjacent)
-    keep = ii < jj  # upper triangle only (symmetric input)
-    ii, jj = ii[keep], jj[keep]
     for i, j in zip(ii.tolist(), jj.tolist()):
         ri, rj = find(i), find(j)
         if ri != rj:
@@ -354,7 +350,17 @@ def _connected_components(adjacent: np.ndarray) -> np.ndarray:
                 parent[rj] = ri
             else:
                 parent[ri] = rj
-    return np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
+    for x in range(n):
+        parent[x] = parent[parent[x]]
+    return np.array(parent, dtype=np.int64)
+
+
+def _window_pairs(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Every ``(p, q)`` with ``lo[p] <= q < hi[p]``, grouped by ``p``."""
+    counts = hi - lo
+    p = np.repeat(np.arange(len(lo)), counts)
+    first = np.cumsum(counts) - counts  # p's first slot in the pair list
+    return p, np.arange(len(p)) + np.repeat(lo - first, counts)
 
 
 def group_boxes(
@@ -366,13 +372,28 @@ def group_boxes(
 
     pdfminer groups two lines into one box when they overlap
     horizontally and their vertical gap is below
-    ``line_margin * line_height``. We build the adjacency with a
-    numpy O(L²) broadcast (L = lines/page, small) and take connected
-    components.
+    ``line_margin * line_height``. Candidate pairs come from a y-band
+    sweep (SparkER's blocking: generate the pairs that can match, then
+    test them): lines sorted by bottom edge ``ly0``; a pair can only
+    match when its ``ly0`` values lie within ``(1 + |line_margin|) ×
+    |height|`` of its taller line, so each line's window is that wide
+    on both sides (widened by 1e-9 relative for float rounding) and
+    each pair is kept from one window only. Sizing the window per line
+    keeps one very tall line from widening every other line's window.
+    The exact pairwise predicate then runs on the candidates and the
+    surviving edges go to :func:`_connected_components`, so time and
+    memory follow lines + candidate pairs, not L².
+
+    A line with a NaN coordinate fails every comparison of the
+    predicate and stays a box of its own. A line whose y extent is not
+    finite has no finite window, so it is tested against every other
+    line directly (it can truly match them all); such lines, and many
+    lines sharing one y-band, are the inputs whose candidates grow
+    faster than L.
 
     Returns ``(groups, line_hulls)``: lists of line indices per box
-    (unordered) and the per-line hulls (lx0, ly0, lx1, ly1) so callers
-    don't recompute them per char.
+    (ordered by their smallest line index) and the per-line hulls
+    (lx0, ly0, lx1, ly1) so callers don't recompute them per char.
     """
     L = len(lines)
     if L == 0:
@@ -386,49 +407,105 @@ def group_boxes(
         np.fromiter((len(l) for l in lines), dtype=np.int64, count=L)[:-1],
         out=starts[1:],
     )
-    lx0 = np.minimum.reduceat(chars.x0[cat], starts)
-    lx1 = np.maximum.reduceat(chars.x1[cat], starts)
-    ly0 = np.minimum.reduceat(chars.y0[cat], starts)
-    ly1 = np.maximum.reduceat(chars.y1[cat], starts)
-    height = ly1 - ly0
-    # pairwise: horizontal overlap AND vertical gap < line_margin * max(height)
-    x_overlap = (lx0[:, None] < lx1[None, :]) & (lx1[:, None] > lx0[None, :])
-    gap = np.maximum(
-        ly0[:, None] - ly1[None, :], ly0[None, :] - ly1[:, None]
-    )  # positive gap between vertically disjoint lines
-    tol = line_margin * np.maximum(height[:, None], height[None, :])
-    adjacent = x_overlap & (gap < tol)
-    labels = _connected_components(adjacent)
+    hull = np.empty((5, L))
+    lx0, ly0, lx1, ly1, height = hull
+    np.minimum.reduceat(chars.x0[cat], starts, out=lx0)
+    np.minimum.reduceat(chars.y0[cat], starts, out=ly0)
+    np.maximum.reduceat(chars.x1[cat], starts, out=lx1)
+    np.maximum.reduceat(chars.y1[cat], starts, out=ly1)
+    np.subtract(ly1, ly0, out=height)
+    swept = np.isfinite(ly0 + height)  # finite only if both terms are
+    all_swept = swept.all()
+    s = np.argsort(ly0, kind="stable")
+    if not all_swept:
+        s = s[swept[s]]
+    ci = cj = s
+    if len(s):
+        ys = ly0[s]
+        hs = np.abs(height[s])
+        m = abs(line_margin)
+        w = (1.0 + m) * hs + 1e-9 * (max(-ys[0], ys[-1]) + (2.0 + m) * hs.max())
+        lo = np.searchsorted(ys, ys - w)
+        hi = np.searchsorted(ys, ys + w, side="right")
+        a, b = _window_pairs(lo, hi)
+        # keep (a, b) from a's window when b is above a, and from below
+        # only when a is outside b's own upward window
+        keep = (b > a) | (hi[b] <= a)
+        ci, cj = s[a[keep]], s[b[keep]]
+    if not all_swept:
+        no_nan = ~np.isnan(hull).any(axis=0)
+        wild = np.flatnonzero(no_nan & ~swept)
+        every = np.flatnonzero(no_nan)
+        ci = np.concatenate([ci, np.repeat(wild, len(every))])
+        cj = np.concatenate([cj, np.tile(every, len(wild))])
+    # exact predicate: horizontal overlap AND vertical gap < line_margin
+    # * max(height) (gap > 0 between vertically disjoint lines)
+    x0i, y0i, x1i, y1i, hgt_i = hull[:, ci]
+    x0j, y0j, x1j, y1j, hgt_j = hull[:, cj]
+    edge = (
+        (x0i < x1j) & (x1i > x0j)
+        & (np.maximum(y0i - y1j, y0j - y1i) < line_margin * np.maximum(hgt_i, hgt_j))
+    )
+    labels = _connected_components(L, ci[edge], cj[edge])
     boxes: dict[int, list[int]] = {}
-    for i, lab in enumerate(labels):
-        boxes.setdefault(int(lab), []).append(i)
+    for i, lab in enumerate(labels.tolist()):
+        boxes.setdefault(lab, []).append(i)
     return list(boxes.values()), (lx0, ly0, lx1, ly1)
 
 
 def order_boxes_reading(boxes_meta: list[tuple[float, float, float, float]]) -> list[int]:
     """Reading order for boxes on one page (boxes_flow behavior).
 
-    Column-aware: boxes whose x-intervals transitively overlap form a
-    column; columns read left-to-right, boxes within a column
-    top-to-bottom. On single-column pages this degenerates to plain
-    top-down order, matching the reference's sort key
-    ``(page, page_height - y0)`` (``process.py:202-207``); on
-    multi-column fixtures it yields column-major order like
-    pdfminer's boxes_flow.
+    Column-aware: boxes whose x-intervals transitively overlap
+    (strictly: ``x0ᵢ < x1ⱼ and x0ⱼ < x1ᵢ``) form a column; columns read
+    left-to-right, boxes within a column top-to-bottom. On
+    single-column pages this degenerates to plain top-down order,
+    matching the reference's sort key ``(page, page_height - y0)``
+    (``process.py:202-207``); on multi-column fixtures it yields
+    column-major order like pdfminer's boxes_flow.
+
+    Columns come from a 1-D interval sweep: the boxes with ``x0 < x1``
+    sorted by ``x0``, a new column wherever ``x0`` reaches the running
+    max of ``x1``. A box with ``x1 <= x0`` (zero width, or inverted)
+    overlaps no other such box and joins at most one column: the
+    column of the last sorted box whose ``x0`` is below its ``x1``, if
+    the running max there passes its ``x0``. A box with a NaN x
+    overlaps nothing. Each column is labelled by its smallest box index
+    and keyed by its smallest ``x0`` (inf for a lone box whose ``x0``
+    is NaN) — the labels and keys of the all-pairs form. Plain Python:
+    pages hold few boxes, and a dozen numpy calls cost more than the
+    loop.
     """
     B = len(boxes_meta)
-    if B == 0:
-        return []
-    bx0 = np.array([b[0] for b in boxes_meta])
-    bx1 = np.array([b[2] for b in boxes_meta])
-    by1 = np.array([b[3] for b in boxes_meta])
-    overlap = (bx0[:, None] < bx1[None, :]) & (bx1[:, None] > bx0[None, :])
-    labels = _connected_components(overlap)
-    col_minx = {}
-    for i, lab in enumerate(labels):
-        col_minx[lab] = min(col_minx.get(lab, np.inf), bx0[i])
-    keys = [(col_minx[labels[i]], labels[i], -by1[i], bx0[i]) for i in range(B)]
-    return sorted(range(B), key=lambda i: keys[i])
+    bx0 = [b[0] for b in boxes_meta]
+    bx1 = [b[2] for b in boxes_meta]
+    order = sorted((i for i in range(B) if bx0[i] < bx1[i]), key=bx0.__getitem__)
+    x0s = [bx0[i] for i in order]
+    columns: list[list[int]] = []
+    col: list[int] = []    # column of each sorted box
+    reach: list[float] = []  # running max of x1 up to each sorted box
+    r = -np.inf
+    for i, x0 in zip(order, x0s):
+        if x0 >= r:
+            columns.append([])
+        columns[-1].append(i)
+        r = max(r, bx1[i])
+        col.append(len(columns) - 1)
+        reach.append(r)
+    for i in range(B):
+        if bx1[i] <= bx0[i]:
+            k = bisect_left(x0s, bx1[i])
+            if k and reach[k - 1] > bx0[i]:
+                columns[col[k - 1]].append(i)
+    label = list(range(B))
+    col_minx = [x if x == x else np.inf for x in bx0]
+    for members in columns:
+        lab, minx = min(members), bx0[members[0]]
+        for i in members:
+            label[i] = lab
+            col_minx[i] = minx
+    keys = [(col_minx[i], label[i], -boxes_meta[i][3], bx0[i]) for i in range(B)]
+    return sorted(range(B), key=keys.__getitem__)
 
 
 def build_boxes(
