@@ -5,17 +5,20 @@ metrics tables enabling EXACT resume.
 
 Design (no custom Catalyst work — idempotent partition overwrites):
 
-* the corpus is bucketed by ``pmod(hash(conv_id), n_buckets)``;
-* buckets are processed in CHUNKS; each chunk's output lands in
-  ``<out>/data/bucket=<k>/`` via dynamic partition overwrite —
+* the corpus is bucketed by ``pmod(hash(conv_id), n_buckets)``
+  (``pipeline.conv_bucket``);
+* buckets are processed in CHUNKS; each chunk is one unsalted
+  extraction whose only exchange is on ``bucket``, and its output lands
+  in ``<out>/data/bucket=<k>/`` via dynamic partition overwrite —
   re-running a chunk replaces exactly its partitions (idempotent);
 * after each chunk commits, one lineage row per bucket is appended to
-  ``<out>/lineage`` with extraction metrics (turns, docs, parse
-  failures, elements, bytes) and wall time;
-* resume = run again: pending buckets are derived by anti-joining the
-  bucket universe against completed lineage rows — a killed run
-  restarts at the first uncommitted chunk, never re-doing committed
-  work and never producing duplicates.
+  ``<out>/lineage`` with the ``pipeline.extraction_metrics`` sums of
+  its written rows (turns, docs, parse failures, elements, bytes) and
+  wall time;
+* resume = run again: the pending buckets are the bucket universe minus
+  the buckets of the ``done`` lineage rows (a set difference on the
+  driver) — a killed run restarts at the first uncommitted chunk,
+  never re-doing committed work and never producing duplicates.
 
 On Iceberg the same structure maps to ``overwrite ... where bucket=k``
 snapshots; parquet dynamic partition overwrite is the sandbox
@@ -64,7 +67,6 @@ def completed_buckets(spark, output_dir: str) -> set[int]:
         read_lineage(spark, output_dir)
         .filter("status = 'done'")
         .select("bucket")
-        .distinct()
         .collect()
     )
     return {r.bucket for r in rows}
@@ -86,7 +88,7 @@ def run_resumable(
     """
     from pyspark.sql import functions as F
 
-    from libpdf_spark.pipeline import extract_turns
+    from libpdf_spark.pipeline import conv_bucket, extract_turns, extraction_metrics
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     run_id = uuid.uuid4().hex[:12]
@@ -99,16 +101,16 @@ def run_resumable(
     if max_chunks is not None:
         chunks = chunks[:max_chunks]
 
-    bucketed = transcripts.withColumn(
-        "bucket", F.pmod(F.hash("conv_id"), F.lit(n_buckets))
-    )
+    bucketed = transcripts.withColumn("bucket", conv_bucket(n_buckets))
 
     committed = []
     for chunk in chunks:
         t0 = time.time()
-        part = bucketed.filter(F.col("bucket").isin([int(b) for b in chunk]))
-        extracted = extract_turns(part, cfg).withColumn(
-            "bucket", F.pmod(F.hash("conv_id"), F.lit(n_buckets))
+        part = bucketed.filter(F.col("bucket").isin(chunk))
+        # unsalted: the bucket exchange below is the only one, and it
+        # already decides which task writes each row
+        extracted = extract_turns(part, cfg, salted=False).withColumn(
+            "bucket", conv_bucket(n_buckets)
         )
         (
             extracted.repartition("bucket")
@@ -120,46 +122,23 @@ def run_resumable(
         wall = time.time() - t0
 
         # metrics per bucket from the just-written data (reading back
-        # keeps lineage consistent with what is actually on disk)
+        # keeps lineage consistent with what is actually on disk); a
+        # bucket with no rows still gets a lineage row, of zeros
         spark.catalog.refreshByPath(_data_path(output_dir))
         written = spark.read.parquet(_data_path(output_dir)).filter(
-            F.col("bucket").isin([int(b) for b in chunk])
+            F.col("bucket").isin(chunk)
         )
-        stats = (
-            written.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_turns"),
-                F.sum(F.col("doc_found").cast("long")).alias("n_docs"),
-                F.sum(
-                    (F.col("doc_found").cast("long"))
-                    - (F.col("parse_ok").cast("long"))
-                ).alias("n_parse_failures"),
-                F.sum("n_elements").alias("n_elements"),
-                F.sum("bytes_in").alias("bytes_in"),
-            )
-            .withColumn("status", F.lit("done"))
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("wall_sec", F.lit(float(wall)))
-            .withColumn("finished_at", F.current_timestamp())
+        metrics = extraction_metrics(written, n_buckets).select(
+            "bucket", "turns", "docs", "parse_failures", "elements", "bytes_in"
         )
-        # buckets with zero rows still need a lineage row
-        present = {r.bucket for r in stats.select("bucket").collect()}
-        empty = [int(b) for b in chunk if b not in present]
-        if empty:
-            empties = spark.createDataFrame(
-                [
-                    (b, "done", run_id, 0, 0, 0, 0, 0, float(wall), None)
-                    for b in empty
-                ],
-                LINEAGE_SCHEMA,
-            ).withColumn("finished_at", F.current_timestamp())
-            stats = stats.unionByName(empties.select(*stats.columns))
+        counts = {r[0]: tuple(r[1:]) for r in metrics.collect()}
+        rows = [
+            (b, "done", run_id, *counts.get(b, (0, 0, 0, 0, 0)), float(wall), None)
+            for b in chunk
+        ]
         (
-            stats.select(
-                "bucket", "status", "run_id", "n_turns", "n_docs",
-                "n_parse_failures", "n_elements", "bytes_in", "wall_sec",
-                "finished_at",
-            )
+            spark.createDataFrame(rows, LINEAGE_SCHEMA)
+            .withColumn("finished_at", F.current_timestamp())
             .write.mode("append")
             .parquet(_lineage_path(output_dir))
         )

@@ -972,32 +972,18 @@ def _aes_dec_block(rks: list[list[int]], block: bytes) -> bytes:
 
 
 def _aes_cbc_encrypt(key: bytes, data: bytes, iv: bytes) -> bytes:
-    rks = _aes_key_expand(key)
     pad = 16 - len(data) % 16
-    data += bytes([pad]) * pad
-    out = bytearray(iv)
-    prev = iv
-    for i in range(0, len(data), 16):
-        blk = bytes(d ^ p for d, p in zip(data[i : i + 16], prev))
-        prev = _aes_enc_block(rks, blk)
-        out += prev
-    return bytes(out)
+    return iv + _aes_cbc_encrypt_nopad(key, data + bytes([pad]) * pad, iv)
 
 
 def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     if len(data) < 32 or len(data) % 16:
         raise ValueError("bad AES-CBC ciphertext length")
-    rks = _aes_key_expand(key)
-    out = bytearray()
-    prev = data[:16]
-    for i in range(16, len(data), 16):
-        blk = data[i : i + 16]
-        out += bytes(d ^ p for d, p in zip(_aes_dec_block(rks, blk), prev))
-        prev = blk
+    out = _aes_cbc_decrypt_nopad(key, data[16:], data[:16])
     pad = out[-1]
     if not 1 <= pad <= 16:
         raise ValueError("bad AES-CBC padding")
-    return bytes(out[:-pad])
+    return out[:-pad]
 
 
 def _aes_cbc_encrypt_nopad(key: bytes, data: bytes, iv: bytes) -> bytes:

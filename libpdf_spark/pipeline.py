@@ -36,7 +36,7 @@ from libpdf_spark.kernel.document import extract_document
 from libpdf_spark.payload import find_payload
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import Column, DataFrame, SparkSession
 
 # ---------------------------------------------------------------------------
 # output schemas (DDL strings keep this module importable without a JVM)
@@ -286,13 +286,23 @@ def extract_turns(
     return out
 
 
-def extraction_metrics(extracted: "DataFrame") -> "DataFrame":
+def conv_bucket(n_buckets: int) -> "Column":
+    """``pmod(hash(conv_id), n_buckets)``: the bucket a conversation
+    lands in. The resumable job partitions its output and its lineage
+    by it, so resume is exact only while every caller computes it here."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.hash("conv_id"), F.lit(n_buckets))
+
+
+def extraction_metrics(extracted: "DataFrame", n_buckets: int = 64) -> "DataFrame":
     """Per-conversation-bucket extraction metrics (north_star: elements/
-    turn, parse failures, bytes processed) — plain hash aggregation."""
+    turn, parse failures, bytes processed) — plain hash aggregation.
+    The lineage rows of ``lineage.run_resumable`` are these sums."""
     from pyspark.sql import functions as F
 
     return (
-        extracted.groupBy(F.pmod(F.hash("conv_id"), F.lit(64)).alias("bucket"))
+        extracted.groupBy(conv_bucket(n_buckets).alias("bucket"))
         .agg(
             F.count("*").alias("turns"),
             F.sum(F.col("doc_found").cast("int")).alias("docs"),

@@ -39,6 +39,24 @@ def _read_transcript_stream(spark, input_path: str):
     )
 
 
+def _drain(df, output_path: str, checkpoint_path: str, timeout_sec: int, what: str) -> None:
+    """Append everything currently available in the stream ``df`` to
+    parquet at ``output_path`` (``Trigger.AvailableNow``), then stop.
+    The checkpoint makes a re-run process only what arrived since."""
+    q = (
+        df.writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout_sec)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"{what} did not drain in time")
+
+
 def extract_turns_stream(
     spark,
     input_path: str,
@@ -63,18 +81,10 @@ def run_stream_once(
     """Process everything currently available, exactly once, then stop
     (``Trigger.AvailableNow``). Re-invoking with the same checkpoint
     processes ONLY files that arrived since — incremental resume."""
-    q = (
-        extract_turns_stream(spark, input_path, cfg)
-        .writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        extract_turns_stream(spark, input_path, cfg),
+        output_path, checkpoint_path, timeout_sec, "streaming extraction",
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("streaming extraction did not drain in time")
 
 
 def windowed_turn_metrics(
@@ -119,21 +129,12 @@ def run_windowed_metrics_once(
 ) -> None:
     """Drain currently-available files through the watermarked window
     aggregation (append mode → only CLOSED windows reach the sink)."""
-    q = (
+    _drain(
         windowed_turn_metrics(
             _read_transcript_stream(spark, input_path), window, watermark
-        )
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        output_path, checkpoint_path, timeout_sec, "windowed metrics stream",
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("windowed metrics stream did not drain in time")
 
 
 CONV_STATE_DDL = "n_turns long, n_docs long"
@@ -194,19 +195,10 @@ def run_state_stream_once(
     checkpoint_path: str,
     timeout_sec: int = 300,
 ) -> None:
-    q = (
-        conversation_state_stream(spark, input_path)
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        conversation_state_stream(spark, input_path),
+        output_path, checkpoint_path, timeout_sec, "stateful stream",
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("stateful stream did not drain in time")
 
 
 # --- streaming gap sessionization (round 6) ---------------------------------
@@ -359,16 +351,7 @@ def run_sessionize_stream_once(
     gap_s: int = SESSION_GAP_S,
     timeout_sec: int = 300,
 ) -> None:
-    q = (
-        sessionize_stream(spark, input_path, gap_s)
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        sessionize_stream(spark, input_path, gap_s),
+        output_path, checkpoint_path, timeout_sec, "sessionize stream",
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("sessionize stream did not drain in time")

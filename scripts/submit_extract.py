@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="output dir (data/ + lineage/)")
     ap.add_argument("--n-buckets", type=int, default=256)
     ap.add_argument("--chunk-size", type=int, default=16)
-    ap.add_argument("--salt-buckets", type=int, default=8)
     ap.add_argument("--smart-page-crop", action="store_true")
     ap.add_argument("--pdf-password", default="",
                     help="document password for encrypted PDFs")
@@ -42,7 +41,6 @@ def main() -> None:
 
     spark = configure_session(SparkSession.builder.appName("libpdf-extract")).getOrCreate()
     cfg = ExtractConfig(
-        salt_buckets=args.salt_buckets,
         smart_page_crop=args.smart_page_crop,
         pdf_password=args.pdf_password,
     )

@@ -5,19 +5,51 @@ from __future__ import annotations
 
 import shutil
 
+import pandas as pd
 import pytest
 
 from libpdf_spark.config import ExtractConfig
 from libpdf_spark.fixtures import gen_transcripts
 from libpdf_spark.lineage import completed_buckets, read_lineage, run_resumable
+from libpdf_spark.pipeline import extract_turns
 
 OUT = "/tmp/libpdf_spark_test_lineage"
+COUNTS = ["n_turns", "n_docs", "n_parse_failures", "n_elements", "bytes_in"]
 
 
 @pytest.fixture()
 def corpus_df(spark):
     transcripts, expected_text, _ = gen_transcripts(n_convs=10, seed=11)
+    # one malformed document turn: a parse-failure row, never a job abort
+    bad = transcripts.iloc[[0]].assign(
+        conv_id="conv-malformed", turn_idx=0,
+        text="<<<LIBPDF_DOC>>>{oops<<<END_LIBPDF_DOC>>>",
+    )
+    transcripts = pd.concat([transcripts, bad], ignore_index=True)
     return spark.createDataFrame(transcripts), transcripts, expected_text
+
+
+def _assert_lineage_matches_data(spark, out: str, n_buckets: int) -> None:
+    """Each bucket has exactly one lineage row, and its counts are the
+    aggregates of that bucket's rows in ``data/`` (zeros when empty)."""
+    data = (
+        spark.read.parquet(f"{out}/data")
+        .select("bucket", "doc_found", "parse_ok", "n_elements", "bytes_in")
+        .toPandas()
+    )
+    lin = read_lineage(spark, out).toPandas()
+    assert sorted(lin.bucket) == list(range(n_buckets))
+    assert set(range(n_buckets)) - set(data.bucket), "corpus must leave a bucket empty"
+    for row in lin.itertuples():
+        rows = data[data.bucket == row.bucket]
+        want = (
+            len(rows),
+            int(rows.doc_found.sum()),
+            int(rows.doc_found.sum() - rows.parse_ok.sum()),
+            int(rows.n_elements.sum()),
+            int(rows.bytes_in.sum()),
+        )
+        assert tuple(getattr(row, c) for c in COUNTS) == want, row
 
 
 def test_interrupt_and_resume(spark, corpus_df):
@@ -66,13 +98,116 @@ def test_interrupt_and_resume(spark, corpus_df):
     assert len(merged) == len(expected_text)
     assert (merged.extracted_text_x == merged.extracted_text_y).all()
 
-    # lineage metrics reconcile with the data
+    # lineage metrics reconcile with the data, bucket by bucket
     lin = read_lineage(spark, OUT).toPandas()
     assert lin.status.eq("done").all()
     assert lin.n_turns.sum() == len(transcripts)
-    assert lin.n_parse_failures.sum() == 0
+    assert lin.n_parse_failures.sum() == 1
+    _assert_lineage_matches_data(spark, OUT, 8)
 
     # idempotence: a third run has nothing to do
     r3 = run_resumable(spark, df, OUT, cfg, n_buckets=8, chunk_size=2)
     assert r3["committed_chunks"] == []
     assert spark.read.parquet(f"{OUT}/data").count() == len(transcripts)
+
+
+# Jobs the earlier commit path (salted extraction, then a stats collect
+# and a second stats evaluation for the lineage append) ran for a full
+# 8-bucket, 2-bucket-chunk run over ``corpus_df`` in the test session.
+TWO_EXCHANGE_JOBS = 33
+
+
+def test_one_exchange_per_chunk_and_fewer_jobs(spark, corpus_df, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    df, transcripts, _ = corpus_df
+    out = OUT + "_jobs"
+    shutil.rmtree(out, ignore_errors=True)
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if path.endswith("/data"):
+            plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage-job-count", "run_resumable")
+    try:
+        r = run_resumable(spark, df, out, ExtractConfig(), n_buckets=8, chunk_size=2)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("lineage-job-count"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(r["committed_chunks"]) == len(plans) == 4
+    for plan in plans:
+        exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+        assert len(exchanges) == 1, plan
+        assert "hashpartitioning(bucket#" in exchanges[0], plan
+    assert 0 < jobs < TWO_EXCHANGE_JOBS
+    assert spark.read.parquet(f"{out}/data").count() == len(transcripts)
+
+
+def _commit_chunk_earlier_schema(spark, df, out: str, chunk: list[int], n_buckets: int):
+    """Commit one chunk the way the earlier commit path wrote it: a
+    salted extraction, and lineage rows from a Spark aggregation (its
+    ``status``, ``run_id``, ``n_turns`` and ``wall_sec`` columns are
+    non-nullable in the parquet footer)."""
+    from pyspark.sql import functions as F
+
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    bucket = F.pmod(F.hash("conv_id"), F.lit(n_buckets))
+    part = df.withColumn("bucket", bucket).filter(F.col("bucket").isin(chunk))
+    (
+        extract_turns(part, ExtractConfig())
+        .withColumn("bucket", bucket)
+        .repartition("bucket")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.partitionBy("bucket")
+        .mode("overwrite")
+        .parquet(f"{out}/data")
+    )
+    written = spark.read.parquet(f"{out}/data").filter(F.col("bucket").isin(chunk))
+    (
+        written.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_turns"),
+            F.sum(F.col("doc_found").cast("long")).alias("n_docs"),
+            F.sum(
+                F.col("doc_found").cast("long") - F.col("parse_ok").cast("long")
+            ).alias("n_parse_failures"),
+            F.sum("n_elements").alias("n_elements"),
+            F.sum("bytes_in").alias("bytes_in"),
+        )
+        .withColumn("status", F.lit("done"))
+        .withColumn("run_id", F.lit("earlier"))
+        .withColumn("wall_sec", F.lit(1.0))
+        .withColumn("finished_at", F.current_timestamp())
+        .select("bucket", "status", "run_id", *COUNTS, "wall_sec", "finished_at")
+        .write.mode("append")
+        .parquet(f"{out}/lineage")
+    )
+
+
+def test_resume_from_earlier_lineage_schema(spark, corpus_df):
+    from pyspark.sql import functions as F
+
+    df, transcripts, _ = corpus_df
+    out = OUT + "_earlier"
+    shutil.rmtree(out, ignore_errors=True)
+    nonempty = sorted(
+        r.b for r in df.select(F.pmod(F.hash("conv_id"), F.lit(8)).alias("b")).distinct().collect()
+    )
+    first = nonempty[:2]
+    _commit_chunk_earlier_schema(spark, df, out, first, 8)
+    assert completed_buckets(spark, out) == set(first)
+
+    r = run_resumable(spark, df, out, ExtractConfig(), n_buckets=8, chunk_size=2)
+    assert r["pending_before"] == [b for b in range(8) if b not in first]
+    assert r["remaining"] == []
+    assert completed_buckets(spark, out) == set(range(8))
+    data = spark.read.parquet(f"{out}/data")
+    assert data.count() == len(transcripts)
+    assert data.select("conv_id", "turn_idx").distinct().count() == len(transcripts)
+    _assert_lineage_matches_data(spark, out, 8)

@@ -138,13 +138,25 @@ def test_null_turn_idx_does_not_kill_task(spark):
     assert 4 in [v for v in vals if not pd.isna(v)]
 
 
-def test_metrics_aggregation(spark, corpus):
+def test_metrics_aggregation(spark, corpus, tmp_path):
+    from libpdf_spark.lineage import run_resumable
+
     transcripts, expected_text, _ = corpus
     df = spark.createDataFrame(transcripts)
     m = extraction_metrics(extract_turns(df, ExtractConfig())).toPandas()
     assert m.turns.sum() == len(transcripts)
     assert m.parsed.sum() == len(expected_text)
     assert m.parse_failures.sum() == 0
+
+    # with run_resumable's bucket count, the metric buckets are the
+    # buckets the job writes each conversation to
+    m8 = extraction_metrics(extract_turns(df, ExtractConfig()), 8).toPandas()
+    out = str(tmp_path / "resumable")
+    run_resumable(spark, df, out, ExtractConfig(), n_buckets=8, chunk_size=4)
+    written = (
+        spark.read.parquet(f"{out}/data").groupBy("bucket").count().toPandas()
+    )
+    assert dict(zip(m8.bucket, m8.turns)) == dict(zip(written.bucket, written["count"]))
 
 
 def test_salted_repartition_spreads_hot_conversation(spark):
