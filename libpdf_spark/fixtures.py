@@ -696,28 +696,6 @@ def family_full_features(seed: int = 0) -> DocBuilder:
 # transcript corpus generation (input_hint shape)
 # --------------------------------------------------------------------------
 
-# families expressible in the mini-PDF byte-stream subset — since the
-# round-2 pdfmini upgrade (multi-font /Widths, text color, image-XObject
-# figures, outline tree, link annos, named dests, /Info) that is ALL of
-# them; round-trip parity is asserted per-family in tests/test_pdfmini.py
-PDF_CAPABLE_FAMILIES = {
-    "plain_paragraphs",
-    "multi_column",
-    "nested_chapters",
-    "virtual_chapters",
-    "ghost_chapter",
-    "split_heading",
-    "ruled_tables",
-    "merged_cells",
-    "figures_filtering",
-    "rects_code",
-    "word_colors",
-    "header_footer",
-    "links",
-    "catalog_edge",
-    "full_features",
-}
-
 
 def _pdf_variant(pdf_seq: int) -> int:
     """Serialization-variant index for the ``pdf_seq``-th PDF-embedded
@@ -810,14 +788,16 @@ def gen_transcripts(
                 # smart-crop behavior is covered by the kernel tests
                 smart = False
                 doc = builder.build()
-                if fam in PDF_CAPABLE_FAMILIES and (ci + ti) % 2 == 0:
+                if (ci + ti) % 2 == 0:
                     # real PDF byte-stream embedding (same ground truth);
-                    # serialization variants rotate deterministically so
-                    # the corpus carries the real-world mix: plain,
-                    # FlateDecode, RC4/AES-encrypted (empty password),
-                    # and Identity-H CID files
+                    # the ten serialization variants rotate
+                    # deterministically (see _pdf_variant) so the corpus
+                    # carries the real-world mix: plain, FlateDecode,
+                    # RC4/AES-128/AES-256-encrypted (empty password),
+                    # Identity-H, UniJIS-UCS2-H, 90ms-RKSJ-H and
+                    # embedded-CMap CID fonts, and form-wrapped pages
                     from libpdf_spark.payload import embed_pdf
-                    from libpdf_spark.pdfmini import write_pdf
+                    from libpdf_spark.pdfwrite import write_pdf
 
                     variant = _pdf_variant(pdf_seq)
                     pdf_seq += 1

@@ -16,7 +16,7 @@ import pytest
 
 import libpdf_spark
 from libpdf_spark.fixtures import FAMILIES
-from libpdf_spark.pdfmini import write_pdf
+from libpdf_spark.pdfwrite import write_pdf
 from libpdf_spark.render import read_png_size, write_png
 
 
@@ -234,7 +234,7 @@ def test_load_pdf_password():
 
     from libpdf_spark.api import load
     from libpdf_spark.fixtures import doc_from_text
-    from libpdf_spark.pdfmini import write_pdf
+    from libpdf_spark.pdfwrite import write_pdf
 
     data = write_pdf(
         doc_from_text("locked api doc").build(),
@@ -255,7 +255,7 @@ def test_load_corpus_pdf_password(spark):
     from libpdf_spark import load_corpus
     from libpdf_spark.fixtures import doc_from_text
     from libpdf_spark.payload import embed_pdf
-    from libpdf_spark.pdfmini import write_pdf
+    from libpdf_spark.pdfwrite import write_pdf
 
     locked = embed_pdf(
         write_pdf(doc_from_text("corpus locked body").build(),

@@ -20,7 +20,7 @@ from libpdf_spark.fixtures import FAMILIES
 from libpdf_spark.kernel.document import extract_document
 from libpdf_spark.kernel.layout import CharArrays, build_boxes
 from libpdf_spark.payload import decode_chars, to_columnar_chars, to_packed_chars
-from libpdf_spark.pdfmini import write_pdf
+from libpdf_spark.pdfwrite import write_pdf
 from libpdf_spark.render import render_region
 
 ENCODINGS = ("rows", "v1", "v2")

@@ -16,17 +16,14 @@ import zlib
 import pytest
 
 from libpdf_spark.config import DEFAULT_CONFIG
-from libpdf_spark.fixtures import FAMILIES, PDF_CAPABLE_FAMILIES
+from libpdf_spark.fixtures import FAMILIES
 from libpdf_spark.kernel.document import extract_document
 from libpdf_spark.payload import embed_pdf, find_payload
-from libpdf_spark.pdfmini import decode_pdf_string, parse_pdf, write_pdf
+from libpdf_spark.pdfmini import decode_pdf_string, parse_pdf
+from libpdf_spark.pdfwrite import write_pdf
 
 # since round 2 every fixture family round-trips through the PDF path
 PDF_FAMILIES = sorted(FAMILIES)
-
-
-def test_every_family_is_pdf_capable():
-    assert PDF_CAPABLE_FAMILIES == set(FAMILIES)
 
 
 @pytest.mark.parametrize("family", PDF_FAMILIES)
@@ -682,9 +679,9 @@ def test_aes128_known_answer_and_cbc():
     """FIPS-197 Appendix C.1 known-answer vector + CBC round trips —
     pins the from-scratch AES implementation to the public spec."""
     from libpdf_spark.pdfmini import (
-        _aes_cbc_decrypt, _aes_cbc_encrypt, _aes_dec_block,
-        _aes_enc_block, _aes_key_expand, _rc4,
+        _aes_cbc_decrypt, _aes_dec_block, _aes_enc_block, _aes_key_expand, _rc4,
     )
+    from libpdf_spark.pdfwrite import _aes_cbc_encrypt
 
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
@@ -797,7 +794,8 @@ def test_aes256_v5_r6_handler_details():
     round-trips the 'adb' marker; R5 hash is a bare SHA-256."""
     import hashlib
 
-    from libpdf_spark.pdfmini import _hash_2b, _make_encrypt_dict
+    from libpdf_spark.pdfmini import _hash_2b
+    from libpdf_spark.pdfwrite import _make_encrypt_dict
 
     body, sec = _make_encrypt_dict("aes256", b"\x01" * 16)
     assert b"/V 5 /R 6 /Length 256" in body and b"/CFM /AESV3" in body
@@ -1786,7 +1784,8 @@ def test_password_owner_path_distinct():
     password DIFFERS from the user password, either one must derive
     the same file key — the print-protected shape that pdfminer also
     opens via its owner-password branch."""
-    from libpdf_spark.pdfmini import _StdSecurity, _make_encrypt_dict, _parse_obj
+    from libpdf_spark.pdfmini import _StdSecurity, _parse_obj
+    from libpdf_spark.pdfwrite import _make_encrypt_dict
 
     for mode in ("rc4", "aes", "aes256"):
         body, sec = _make_encrypt_dict(
@@ -1797,6 +1796,27 @@ def test_password_owner_path_distinct():
         assert _StdSecurity(enc, b"\x01" * 16, b"owner-pw").key == sec.key
         with pytest.raises(ValueError, match="password"):
             _StdSecurity(enc, b"\x01" * 16, b"neither")
+
+
+def test_r2_handler_user_and_owner_password():
+    """R 2 (40-bit RC4): no 50-round rehash and a single RC4 pass over
+    /O. The /Encrypt entries are built here straight from Algorithms
+    2/3/4; the user and the owner password must both open it."""
+    import hashlib
+
+    from libpdf_spark.pdfmini import _PAD, Name, _StdSecurity, _pad_pwd, _rc4
+
+    id0, p = b"\x05" * 16, -4
+    o = _rc4(hashlib.md5(_pad_pwd(b"own")).digest()[:5], _pad_pwd(b"usr"))
+    key = hashlib.md5(
+        _pad_pwd(b"usr") + o + p.to_bytes(4, "little", signed=True) + id0
+    ).digest()[:5]
+    enc = {"Filter": Name("Standard"), "V": 1, "R": 2, "O": o,
+           "U": _rc4(key, _PAD), "P": p}
+    for pw in (b"usr", b"own"):
+        assert _StdSecurity(enc, id0, pw).key == key
+    with pytest.raises(ValueError, match="wrong password"):
+        _StdSecurity(enc, id0, b"bad")
 
 
 def _form_pdf(page_content: bytes, forms: dict[str, tuple[bytes, bytes]],
@@ -2178,3 +2198,101 @@ def test_decode_pdf_string_gb2312_short_and_cyrillic_uniform_case():
     # 2-4-syllable Korean titles; the hangul first claim wins there
     # by pinned policy (test_decode_pdf_string_korean_property), so
     # 'ВВЕДЕНИЕ' in cp1251 reads as hangul — ambiguity, not a bug.
+
+
+# md5 over the write_pdf bytes of every fixture family (sorted by name),
+# one per writer keyword set: the ten corpus serialization variants
+# (fixtures.gen_transcripts) plus the xref-stream, custom-encoding and
+# passworded shapes. The digests were taken before the writer moved out
+# of pdfmini; a refactor of pdfwrite must leave every byte alone. The
+# compressed shapes assume stock zlib deflate output.
+WRITER_DIGESTS = [
+    ({}, "5f08543e613ef42def769cee7072870c"),
+    ({"compress": True}, "1abeafa97e680028b9ef18b97fa611d1"),
+    ({"encrypt": "rc4"}, "1b54159aab021bf41919ef0eb8c30f10"),
+    ({"compress": True, "encrypt": "aes"}, "d330b783706492d8dcebf36591a6974b"),
+    ({"compress": True, "cid_font": True}, "0b460615124790ab7299de683bc1a7fd"),
+    ({"compress": True, "encrypt": "aes256"}, "f556d4b26381bfdb24d8cca17ef20a48"),
+    ({"compress": True, "cid_font": "ucs2"}, "9274ba5cc1a4a77d865f43ee59df5a85"),
+    ({"compress": True, "cid_font": "rksj"}, "69e4d40c6c3379db4d146fed3add985e"),
+    ({"compress": True, "cid_font": "embedded"}, "f0879069f7ba5af2b610ff0b34325314"),
+    ({"compress": True, "encrypt": "aes", "cid_font": True, "form_wrap": True},
+     "04640f8d7439b716bd044d8e3a7e41cb"),
+    ({"xref_stream": True}, "788287152026e1f9a930e30df3b6e2d7"),
+    ({"custom_encoding": True}, "c94f392c6e077dae903c1940d038d5b6"),
+    ({"encrypt": "rc4", "encrypt_password": "pw"}, "3b7b2c35137f2ce0824dd07e04598e47"),
+]
+
+
+@pytest.mark.parametrize(
+    "kw, digest", WRITER_DIGESTS,
+    ids=["-".join(f"{k}={v}" for k, v in kw.items()) or "plain" for kw, _ in WRITER_DIGESTS],
+)
+def test_writer_bytes_pinned(kw, digest):
+    import hashlib
+
+    h = hashlib.md5()
+    for family in PDF_FAMILIES:
+        h.update(write_pdf(FAMILIES[family]().build(), **kw))
+    assert h.hexdigest() == digest
+
+
+_RUNTIME_CHILD = """
+import sys
+
+import pandas as pd
+
+import libpdf_spark
+from libpdf_spark.config import ExtractConfig
+from libpdf_spark.payload import embed_pdf
+from libpdf_spark.pipeline import make_extract_batch
+
+aes_path, form_path, turn_path = sys.argv[1:4]
+turn = open(turn_path, encoding="utf-8").read()
+pdfs = [open(p, "rb").read() for p in (aes_path, form_path)]
+for source in (aes_path, form_path, turn):
+    assert libpdf_spark.load(source, init_logging=False).root.extracted_text
+batch = pd.DataFrame({
+    "conv_id": ["c"] * 3,
+    "turn_idx": pd.array([0, 1, 2], dtype="int32"),
+    "text": [turn] + [embed_pdf(p) for p in pdfs],
+    "tool": [None] * 3,
+})
+out = pd.concat(list(make_extract_batch(ExtractConfig())(iter([batch]))))
+assert out["parse_ok"].all(), out["error"].tolist()
+assert "libpdf_spark.pdfwrite" not in sys.modules, "runtime path loaded the writer"
+
+from libpdf_spark import pdfwrite
+from libpdf_spark.pdfmini import write_pdf
+
+assert write_pdf is pdfwrite.write_pdf
+print("RUNTIME-OK")
+"""
+
+
+def test_runtime_path_does_not_import_writer(tmp_path):
+    """``load`` and one extraction batch over an AES-256 PDF, an
+    Identity-H form-wrapped PDF and a layout turn never import
+    ``pdfwrite``; the inputs are written here, the check runs in a fresh
+    interpreter. ``pdfmini.write_pdf`` still resolves to the writer."""
+    import os
+    import subprocess
+    import sys
+
+    from libpdf_spark.payload import embed
+
+    doc = FAMILIES["full_features"]().build()
+    aes = tmp_path / "aes256.pdf"
+    aes.write_bytes(write_pdf(doc, compress=True, encrypt="aes256"))
+    form = tmp_path / "form.pdf"
+    form.write_bytes(write_pdf(doc, compress=True, cid_font=True, form_wrap=True))
+    turn = tmp_path / "turn.txt"
+    turn.write_text(embed(doc, prefix="a layout turn: "), encoding="utf-8")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    res = subprocess.run(
+        [sys.executable, "-c", _RUNTIME_CHILD, str(aes), str(form), str(turn)],
+        capture_output=True, text=True, env=env, cwd=str(tmp_path), timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert "RUNTIME-OK" in res.stdout

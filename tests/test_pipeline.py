@@ -342,7 +342,7 @@ def test_unsupported_pdf_feature_is_recorded_failure_e2e(spark):
     the same Arrow batch extract normally."""
     from libpdf_spark.fixtures import FAMILIES, doc_from_text
     from libpdf_spark.payload import embed_pdf
-    from libpdf_spark.pdfmini import write_pdf
+    from libpdf_spark.pdfwrite import write_pdf
 
     good = FAMILIES["plain_paragraphs"]()
     bad_pdf = write_pdf(doc_from_text("apple banana").build(), cid_font="ucs2")
@@ -380,7 +380,7 @@ def test_password_protected_pdf_turn_e2e(spark):
     from libpdf_spark.config import ExtractConfig
     from libpdf_spark.fixtures import FAMILIES, doc_from_text
     from libpdf_spark.payload import embed_pdf
-    from libpdf_spark.pdfmini import write_pdf
+    from libpdf_spark.pdfwrite import write_pdf
     from libpdf_spark.pipeline import extract_turns
 
     builder = doc_from_text("locked document body text")

@@ -7,7 +7,8 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from libpdf_spark.pdfmini import parse_pdf, write_pdf
+from libpdf_spark.pdfmini import parse_pdf
+from libpdf_spark.pdfwrite import write_pdf
 
 SETTINGS = dict(max_examples=30, deadline=None)
 

@@ -111,7 +111,8 @@ def test_mixed_chars_within_word_do_not_lift():
 
 
 def test_words_survive_pdf_byte_stream_roundtrip():
-    from libpdf_spark.pdfmini import parse_pdf, write_pdf
+    from libpdf_spark.pdfmini import parse_pdf
+    from libpdf_spark.pdfwrite import write_pdf
 
     doc = _doc_from_words([[
         ("roses", RED, "Mono"), ("are", BLACK, "Mono"),

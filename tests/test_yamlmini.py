@@ -76,7 +76,7 @@ def test_trailing_newline_literal_vs_chomped():
 def test_cli_yaml_output(tmp_path):
     from libpdf_spark.__main__ import main
     from libpdf_spark.fixtures import FAMILIES
-    from libpdf_spark.pdfmini import write_pdf
+    from libpdf_spark.pdfwrite import write_pdf
 
     pdf = tmp_path / "doc.pdf"
     pdf.write_bytes(write_pdf(FAMILIES["plain_paragraphs"]().build(), compress=True))
@@ -133,7 +133,7 @@ def test_cli_yaml_cell_text_folded(tmp_path):
 
     from libpdf_spark.__main__ import main
     from libpdf_spark.fixtures import FAMILIES
-    from libpdf_spark.pdfmini import write_pdf
+    from libpdf_spark.pdfwrite import write_pdf
 
     pdf = tmp_path / "doc.pdf"
     pdf.write_bytes(write_pdf(FAMILIES["merged_cells"]().build(), compress=True))
