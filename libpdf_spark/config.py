@@ -46,7 +46,6 @@ class ExtractConfig:
     char_margin: float = 6.0
     line_margin: float = 0.4
     word_margin: float = 0.1
-    boxes_flow: float = 0.5
 
     # --- table grid (pdfplumber 'lines' strategy) — tables.py:62-79 ---
     snap_tolerance: float = 3.0

@@ -322,7 +322,7 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
                 continue
             el.words, el.tlines = [], []
             for b in el_boxes:
-                ws, ls = box_words_lines(chars, b, cfg.word_margin)
+                ws, ls = box_words_lines(chars, b)
                 base = len(el.tlines)
                 for w in ws:
                     w["line"] += base

@@ -13,7 +13,14 @@ from __future__ import annotations
 import numpy as np
 
 from libpdf_spark.config import ExtractConfig
-from libpdf_spark.kernel.layout import Box, CharArrays, build_boxes
+from libpdf_spark.kernel.layout import (
+    Box,
+    CharArrays,
+    assemble_lines_bulk,
+    build_boxes,
+    group_lines,
+    lines_to_box,
+)
 
 
 def chars_in_bbox_mask(
@@ -52,69 +59,29 @@ def crop_cell_box(
     bbox: tuple[float, float, float, float],
     cfg: ExtractConfig,
 ) -> Box | None:
-    """Single-textbox cell crop — exact ``lt_textbox_crop`` semantics
+    """Single-textbox cell crop — ``lt_textbox_crop`` semantics
     (``utils.py:547-582`` + ``assemble_to_lt_textlines``
-    ``utils.py:585-631``): the chars inside ``bbox`` are regrouped into
-    lines by an ABSOLUTE y-center tolerance (the reference passes
-    LA_PARAMS["line_overlap"] = 0.5 as plain points), comparing each
-    char to the PREVIOUS one in flatten order, with NO char_margin
-    column split; every line joins into ONE returned box.
+    ``utils.py:585-631``): the chars inside ``bbox`` run through
+    :func:`group_lines` with an ABSOLUTE y-center tolerance (the
+    reference passes LA_PARAMS["line_overlap"] = 0.5 as plain points)
+    and NO char_margin column split, then through the page path's
+    :func:`assemble_lines_bulk` and :func:`lines_to_box`; every line
+    joins into ONE returned box.
 
     This differs from :func:`crop_boxes`/``build_boxes`` (height-
-    relative tolerance + column splits): a wide in-cell horizontal gap
-    must stay one space-joined line here, and link scanning must see
-    every line — the reference returns one LTTextBoxHorizontal.
+    relative tolerance + column splits + box grouping): a wide in-cell
+    horizontal gap must stay one space-joined line here, and link
+    scanning must see every line — the reference returns one
+    LTTextBoxHorizontal.
     """
     idx = np.where(chars_in_bbox_mask(chars, page, bbox))[0]
     if len(idx) == 0:
         return None
     sub = chars.take(idx)
-    yc = (sub.y0 + sub.y1) * 0.5
-    order = np.lexsort((sub.x0, -yc))  # flatten order: top-down, then x
-    tol = cfg.line_overlap  # absolute points, reference quirk
-    lines: list[np.ndarray] = []
-    cur = [int(order[0])]
-    for k in range(1, len(order)):
-        i = int(order[k])
-        if abs(yc[i] - yc[cur[-1]]) < tol:
-            cur.append(i)
-        else:
-            lines.append(np.asarray(cur, dtype=np.int64))
-            cur = [i]
-    lines.append(np.asarray(cur, dtype=np.int64))
-    lines = [l[np.argsort(sub.x0[l], kind="stable")] for l in lines]
-
-    from libpdf_spark.kernel.layout import _uniform, assemble_line_text
-
-    text_parts: list[str] = []
-    all_idx: list[np.ndarray] = []
-    all_off: list[np.ndarray] = []
-    line_spans: list[tuple[int, int]] = []
-    cursor = 0
-    nchars = 0
-    for k, line in enumerate(lines):
-        ltext, loff = assemble_line_text(sub, line, cfg.word_margin)
-        if k > 0:
-            cursor += 1  # the "\n" separator
-        text_parts.append(ltext)
-        all_idx.append(idx[line])
-        all_off.append(loff + cursor)
-        line_spans.append((nchars, nchars + len(line)))
-        nchars += len(line)
-        cursor += len(ltext)
-    members = np.concatenate(lines)
-    return Box(
-        page=page,
-        x0=float(sub.x0.min()),
-        y0=float(sub.y0.min()),
-        x1=float(sub.x1.max()),
-        y1=float(sub.y1.max()),
-        text="\n".join(text_parts),
-        char_idx=np.concatenate(all_idx),
-        offsets=np.concatenate(all_off),
-        line_spans=line_spans,
-        fontname=_uniform(sub.fontname[members]),
-        ncolor=_uniform(sub.ncolor[members]),
+    lines = group_lines(sub, cfg.line_overlap)  # absolute points, reference quirk
+    return lines_to_box(
+        page, sub, lines, assemble_lines_bulk(sub, lines, cfg.word_margin), idx,
+        (float(sub.x0.min()), float(sub.y0.min()), float(sub.x1.max()), float(sub.y1.max())),
     )
 
 

@@ -2,8 +2,8 @@
 
 Re-implements, vectorized, the grouping pdfminer performs for the
 reference (LA_PARAMS ``parameters.py:220-228``: line_overlap 0.5,
-char_margin 6.0, line_margin 0.4, word_margin 0.1, boxes_flow 0.5)
-plus the reference's own custom regrouping
+char_margin 6.0, line_margin 0.4, word_margin 0.1) plus the
+reference's own custom regrouping
 (``utils.py:585-631`` assemble_to_lt_textlines — new line when the
 vertical char-center deviates by >= y_tolerance) and its text-assembly
 joins (``models/horizontal_box.py:93-200``: chars join "" → word,
@@ -139,14 +139,14 @@ def group_lines(
     """Cluster char indices into text lines by vertical center.
 
     Vectorized form of the reference's line grouping
-    (``utils.py:585-631``): chars whose vertical centers lie within
-    ``y_tolerance`` of the running line center share a line. We sort
-    centers descending (top of page first) and cut where the gap
-    between consecutive centers >= tolerance, then order each line's
-    chars left-to-right. When ``char_margin`` is given, a y-line is
-    additionally split where the horizontal gap between consecutive
-    chars exceeds ``char_margin × char_width`` (pdfminer LAParams
-    char_margin — this is what separates side-by-side columns).
+    (``utils.py:585-631``): sort the vertical centers descending (top
+    of page first) and start a new line wherever the gap between two
+    consecutive centers is >= ``y_tolerance``, then order each line's
+    chars left-to-right (ties keep the y-order). When ``char_margin``
+    is given, a y-line is additionally split where the horizontal gap
+    between consecutive chars exceeds ``char_margin × char_width``
+    (pdfminer LAParams char_margin — this is what separates
+    side-by-side columns).
 
     Returns a list of index arrays (into ``chars``), top-to-bottom,
     each sorted by x0.
@@ -197,12 +197,20 @@ def group_lines(
 def assemble_lines_bulk(
     chars: CharArrays, lines: list[np.ndarray], word_margin: float
 ) -> list[tuple[str, np.ndarray]]:
-    """Assemble EVERY line of a page in one vectorized pass.
+    """Assemble the text of every line in ``lines`` in one vectorized
+    pass.
 
-    Equivalent to calling :func:`assemble_line_text` per line, but the
-    gap/space/offset math runs once over the page's chars — per-line
-    numpy call overhead dominated the kernel profile (24 lines × ~8
-    small numpy ops each per document).
+    pdfminer semantics: a space separator is inserted before a char
+    whose horizontal gap to the previous char exceeds
+    ``word_margin * width(char)`` (LTTextLineHorizontal.add). Words
+    join with "" internally and with " " across
+    (``horizontal_box.py:93-95,144-147``).
+
+    Returns one ``(text, offsets)`` per line, where ``offsets[i]`` is
+    the position of line char ``i`` in ``text``. The gap/space/offset
+    math runs once over all the chars: per-line numpy call overhead
+    dominated the kernel profile (24 lines × ~8 small numpy ops each
+    per document).
     """
     if not lines:
         return []
@@ -279,49 +287,6 @@ def assemble_lines_bulk(
             )
         out.append((joined, offsets_all[a:b]))
     return out
-
-
-def assemble_line_text(
-    chars: CharArrays, line: np.ndarray, word_margin: float
-) -> tuple[str, np.ndarray]:
-    """Assemble one line's text, inserting spaces at word gaps.
-
-    pdfminer semantics: a space separator is inserted before a char
-    whose horizontal gap to the previous char exceeds
-    ``word_margin * width(char)`` (LTTextLineHorizontal.add). Words
-    join with "" internally and with " " across
-    (``horizontal_box.py:93-95,144-147``).
-
-    Returns ``(text, offsets)`` where ``offsets[i]`` is the position
-    of line char ``i`` in ``text``.
-    """
-    xs0 = chars.x0[line]
-    xs1 = chars.x1[line]
-    widths = xs1 - xs0
-    gaps = np.empty(len(line))
-    gaps[0] = 0.0
-    if len(line) > 1:
-        gaps[1:] = xs0[1:] - xs1[:-1]
-    space_before = gaps > word_margin * widths
-    space_before[0] = False
-    offsets = np.arange(len(line), dtype=np.int64) + np.cumsum(space_before)
-    texts = chars.text[line].tolist()
-    joined = "".join(texts)
-    if not space_before.any():
-        return joined, offsets
-    if len(joined) == len(texts):  # all 1-char glyphs: slice per WORD
-        bounds = np.flatnonzero(space_before).tolist()
-        segs = []
-        prev = 0
-        for b in bounds:
-            segs.append(joined[prev:b])
-            prev = b
-        segs.append(joined[prev:])
-        return " ".join(segs), offsets
-    # rare multi-char glyphs (ligatures): per-char fallback
-    flags = space_before.tolist()
-    text = "".join(" " + t if sp else t for t, sp in zip(texts, flags))
-    return text, offsets
 
 
 def _connected_components(n: int, ii: np.ndarray, jj: np.ndarray) -> np.ndarray:
@@ -454,7 +419,7 @@ def group_boxes(
 
 
 def order_boxes_reading(boxes_meta: list[tuple[float, float, float, float]]) -> list[int]:
-    """Reading order for boxes on one page (boxes_flow behavior).
+    """Reading order for boxes on one page (column-major).
 
     Column-aware: boxes whose x-intervals transitively overlap
     (strictly: ``x0ᵢ < x1ⱼ and x0ⱼ < x1ᵢ``) form a column; columns read
@@ -462,7 +427,7 @@ def order_boxes_reading(boxes_meta: list[tuple[float, float, float, float]]) -> 
     single-column pages this degenerates to plain top-down order,
     matching the reference's sort key ``(page, page_height - y0)``
     (``process.py:202-207``); on multi-column fixtures it yields
-    column-major order like pdfminer's boxes_flow.
+    column-major order like pdfminer's box-flow ordering.
 
     Columns come from a 1-D interval sweep: the boxes with ``x0 < x1``
     sorted by ``x0``, a new column wherever ``x0`` reaches the running
@@ -508,6 +473,44 @@ def order_boxes_reading(boxes_meta: list[tuple[float, float, float, float]]) -> 
     return sorted(range(B), key=keys.__getitem__)
 
 
+def lines_to_box(
+    page: int,
+    chars: CharArrays,
+    lines: list[np.ndarray],
+    assembled: list[tuple[str, np.ndarray]],
+    char_index_base: np.ndarray,
+    bbox: tuple[float, float, float, float],
+) -> Box:
+    """One text box from its lines, given top to bottom with their
+    :func:`assemble_lines_bulk` output: line texts join with "\\n"
+    (``horizontal_box.py:197-200``), each line's offsets shift past
+    the text before it, and fontname/ncolor lift iff uniform across
+    the member chars. ``char_index_base`` maps positions in ``chars``
+    to document char indices; ``bbox`` is the caller's."""
+    text_parts: list[str] = []
+    all_off: list[np.ndarray] = []
+    line_spans: list[tuple[int, int]] = []
+    cursor = nchars = 0
+    for line, (ltext, loff) in zip(lines, assembled):
+        text_parts.append(ltext)
+        all_off.append(loff + cursor)
+        line_spans.append((nchars, nchars + len(line)))
+        nchars += len(line)
+        cursor += len(ltext) + 1  # past the "\n" separator
+    members = np.concatenate(lines)
+    x0, y0, x1, y1 = bbox
+    return Box(
+        page=page,
+        x0=x0, y0=y0, x1=x1, y1=y1,
+        text="\n".join(text_parts),
+        char_idx=char_index_base[members],
+        offsets=np.concatenate(all_off),
+        line_spans=line_spans,
+        fontname=_uniform(chars.fontname[members]),
+        ncolor=_uniform(chars.ncolor[members]),
+    )
+
+
 def build_boxes(
     chars: CharArrays,
     cfg: ExtractConfig,
@@ -530,46 +533,22 @@ def build_boxes(
     lx0, ly0, lx1, ly1 = hulls if hulls else (None, None, None, None)
     assembled = assemble_lines_bulk(chars, lines, cfg.word_margin)
 
+    page = int(chars.page[0])
     boxes: list[Box] = []
     metas: list[tuple[float, float, float, float]] = []
     for group in line_groups:
         # order lines inside the box top-to-bottom
         group_sorted = sorted(group, key=lambda li: -ly1[li])
-        text_parts: list[str] = []
-        all_idx: list[np.ndarray] = []
-        all_off: list[np.ndarray] = []
-        line_spans: list[tuple[int, int]] = []
-        cursor = 0
-        nchars = 0
-        for k, li in enumerate(group_sorted):
-            line = lines[li]
-            ltext, loff = assembled[li]
-            if k > 0:
-                cursor += 1  # the "\n" separator (horizontal_box.py:197-200)
-            text_parts.append(ltext)
-            all_idx.append(char_index_base[line])
-            all_off.append(loff + cursor)
-            line_spans.append((nchars, nchars + len(line)))
-            nchars += len(line)
-            cursor += len(ltext)
-        text = "\n".join(text_parts)
-        idx = np.concatenate(all_idx)
-        off = np.concatenate(all_off)
-        member_chars = np.concatenate([lines[li] for li in group_sorted])
         x0 = float(min(lx0[li] for li in group))
         y0 = float(min(ly0[li] for li in group))
         x1 = float(max(lx1[li] for li in group))
         y1 = float(max(ly1[li] for li in group))
         boxes.append(
-            Box(
-                page=int(chars.page[0]),
-                x0=x0, y0=y0, x1=x1, y1=y1,
-                text=text,
-                char_idx=idx,
-                offsets=off,
-                line_spans=line_spans,
-                fontname=_uniform(chars.fontname[member_chars]),
-                ncolor=_uniform(chars.ncolor[member_chars]),
+            lines_to_box(
+                page, chars,
+                [lines[li] for li in group_sorted],
+                [assembled[li] for li in group_sorted],
+                char_index_base, (x0, y0, x1, y1),
             )
         )
         metas.append((x0, y0, x1, y1))
@@ -579,7 +558,7 @@ def build_boxes(
 
 
 def box_words_lines(
-    chars: CharArrays, box: Box, word_margin: float
+    chars: CharArrays, box: Box
 ) -> tuple[list[dict], list[dict]]:
     """Word/line tree of an assembled box with uniform attr lift at
     EACH level (reference ``models/horizontal_box.py:50-147``): a word
@@ -587,27 +566,18 @@ def box_words_lines(
     identical across its words, mirroring the Word/HorizontalLine
     constructors the reference's ``tests/test_word_colors.py`` asserts.
 
-    Word boundaries re-use the assembly rule (gap > word_margin ×
-    char width). Returns ``(words, lines)``; each word carries its
-    0-based ``line`` index so the tree is recoverable downstream.
+    A word starts where the line assembly put a space, i.e. where the
+    box offsets of two neighbouring chars differ by more than one.
+    Returns ``(words, lines)``; each word carries its 0-based ``line``
+    index so the tree is recoverable downstream.
     """
     words: list[dict] = []
     lines: list[dict] = []
     for li, (a, b) in enumerate(box.line_spans):
         idx = box.char_idx[a:b]  # document-level indices, x-ordered
-        n = len(idx)
-        x0s = chars.x0[idx]
-        x1s = chars.x1[idx]
-        widths = x1s - x0s
-        if n > 1:
-            gaps = x0s[1:] - x1s[:-1]
-            breaks = np.flatnonzero(gaps > word_margin * widths[1:]) + 1
-            segs = np.split(np.arange(n), breaks)
-        else:
-            segs = [np.arange(n)]
+        starts = np.flatnonzero(np.diff(box.offsets[a:b]) > 1) + 1
         line_words: list[dict] = []
-        for seg in segs:
-            w_idx = idx[seg]
+        for w_idx in np.split(idx, starts):
             rec = {
                 "line": li,
                 "text": "".join(chars.text[w_idx].tolist()),

@@ -32,7 +32,7 @@ import numpy as np
 
 from libpdf_spark.config import ExtractConfig
 from libpdf_spark.kernel.geometry import bbox_contains, crop_cell_box
-from libpdf_spark.kernel.layout import CharArrays
+from libpdf_spark.kernel.layout import CharArrays, _connected_components
 
 
 @dataclass
@@ -176,30 +176,21 @@ def detect_tables(
         return []
 
     # group cells into tables: connected via shared snapped coordinates
-    parent = list(range(len(cells)))
-
-    def find(i):
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    def union(i, j):
-        ri, rj = find(i), find(j)
-        if ri != rj:
-            parent[rj] = ri
-
+    ii, jj = [], []
     for i in range(len(cells)):
         for j in range(i + 1, len(cells)):
             a, b = cells[i], cells[j]
             touch_x = abs(a.x1 - b.x0) <= tol or abs(b.x1 - a.x0) <= tol or (a.x0 < b.x1 and a.x1 > b.x0)
             touch_y = abs(a.y0 - b.y1) <= tol or abs(b.y0 - a.y1) <= tol or (a.y0 < b.y1 and a.y1 > b.y0)
             if touch_x and touch_y:
-                union(i, j)
+                ii.append(i)
+                jj.append(j)
+    labels = _connected_components(len(cells), np.array(ii, dtype=np.int64), np.array(jj, dtype=np.int64))
 
+    # groups in first-member order, members in cell order
     groups: dict[int, list[Cell]] = {}
-    for i, c in enumerate(cells):
-        groups.setdefault(find(i), []).append(c)
+    for lab, c in zip(labels.tolist(), cells):
+        groups.setdefault(lab, []).append(c)
 
     tables: list[Table] = []
     for group in groups.values():

@@ -480,18 +480,18 @@ def _cc_alternating_star(edges, F, max_rounds: int = 64):
     return labels, rounds
 
 
-def q_dedup_clusters(spark, sf_dir, algorithm: str = "star"):
+def q_dedup_clusters(spark, sf_dir):
     """Near-duplicate CLUSTERS: connected components over the
     MinHash-LSH candidate-pair graph — the step that turns pairs into
     keep/drop decisions for a training pipeline. ``cluster_id`` is the
     minimum doc_id of the component; the survivor is that doc.
 
-    ``algorithm="star"`` (default) runs alternating large/small-star
-    (O(log^2 n) rounds — survives the long duplicate chains of a web
-    corpus); ``algorithm="propagate"`` keeps plain min-label
-    propagation (rounds = diameter) — both produce identical
-    components (tested on a chain fixture, where star converges in a
-    fraction of the rounds).
+    Components come from alternating large/small-star
+    (:func:`_cc_alternating_star`, O(log^2 n) rounds — survives the
+    long duplicate chains of a web corpus). Plain min-label propagation
+    (:func:`_cc_propagate`, rounds = diameter) gives identical
+    components and is kept as the test reference (a chain fixture,
+    where star converges in a fraction of the rounds).
 
     Oracle: DuckDB recursive CTE computing transitive min-label
     reachability over the identical pair set.
@@ -503,8 +503,7 @@ def q_dedup_clusters(spark, sf_dir, algorithm: str = "star"):
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .persist()
     )
-    cc = _cc_alternating_star if algorithm == "star" else _cc_propagate
-    labels, _rounds = cc(edges, F)
+    labels, _rounds = _cc_alternating_star(edges, F)
     from pyspark.sql import Window
 
     w_size = F.count("*").over(Window.partitionBy("label"))

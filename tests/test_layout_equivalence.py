@@ -13,7 +13,13 @@ change grouping or medians:
   char_margin cut) vs the per-line reference loop;
 * the sort-based sweeps of ``group_boxes`` (y-band candidate pairs)
   and ``order_boxes_reading`` (1-D interval sweep) vs the all-pairs
-  dense forms they replaced, kept below as oracles.
+  dense forms they replaced, kept below as oracles;
+* the one char→line→box path (``group_lines`` → ``assemble_lines_bulk``
+  → ``lines_to_box``) for table cells and pages, and word cuts read
+  from the assembled offsets, vs the per-char cell loop with
+  ``assemble_line_text``, the inline box loop of ``build_boxes`` and
+  the gap-rule ``box_words_lines`` they replaced, kept below as
+  oracles.
 """
 from __future__ import annotations
 
@@ -21,9 +27,17 @@ import warnings
 
 import numpy as np
 
+from libpdf_spark.config import ExtractConfig
+from libpdf_spark.kernel.geometry import chars_in_bbox_mask, crop_cell_box
 from libpdf_spark.kernel.layout import (
+    Box,
+    CharArrays,
     _connected_components,
     _median1d,
+    _uniform,
+    assemble_lines_bulk,
+    box_words_lines,
+    build_boxes,
     group_boxes,
     group_lines,
     order_boxes_reading,
@@ -392,3 +406,316 @@ def test_order_boxes_reading_degenerate_boxes():
     ]
     for metas in cases:
         assert order_boxes_reading(metas) == _dense_order_boxes_reading(metas), metas
+
+
+# --- the single box path vs the cell loop, box loop and gap-rule words ------
+# Verbatim copies of the forms the shared path replaced: the cell crop
+# regrouped chars in a per-char Python loop and assembled each line
+# with ``assemble_line_text``; ``build_boxes`` built each Box inline;
+# ``box_words_lines`` re-derived word cuts from the gap rule.
+def _old_assemble_line_text(
+    chars: CharArrays, line: np.ndarray, word_margin: float
+) -> tuple[str, np.ndarray]:
+    xs0 = chars.x0[line]
+    xs1 = chars.x1[line]
+    widths = xs1 - xs0
+    gaps = np.empty(len(line))
+    gaps[0] = 0.0
+    if len(line) > 1:
+        gaps[1:] = xs0[1:] - xs1[:-1]
+    space_before = gaps > word_margin * widths
+    space_before[0] = False
+    offsets = np.arange(len(line), dtype=np.int64) + np.cumsum(space_before)
+    texts = chars.text[line].tolist()
+    joined = "".join(texts)
+    if not space_before.any():
+        return joined, offsets
+    if len(joined) == len(texts):  # all 1-char glyphs: slice per WORD
+        bounds = np.flatnonzero(space_before).tolist()
+        segs = []
+        prev = 0
+        for b in bounds:
+            segs.append(joined[prev:b])
+            prev = b
+        segs.append(joined[prev:])
+        return " ".join(segs), offsets
+    # rare multi-char glyphs (ligatures): per-char fallback
+    flags = space_before.tolist()
+    text = "".join(" " + t if sp else t for t, sp in zip(texts, flags))
+    return text, offsets
+
+
+def _old_build_boxes(
+    chars: CharArrays,
+    cfg: ExtractConfig,
+    char_index_base: np.ndarray | None = None,
+) -> list[Box]:
+    if len(chars) == 0:
+        return []
+    if char_index_base is None:
+        char_index_base = np.arange(len(chars), dtype=np.int64)
+    heights = chars.y1 - chars.y0
+    med_h = _median1d(heights) if len(heights) else 10.0
+    y_tol = max(cfg.line_overlap * med_h, 1e-9)
+    lines = group_lines(chars, y_tol, char_margin=cfg.char_margin)
+    line_groups, hulls = group_boxes(chars, lines, cfg.line_margin)
+    lx0, ly0, lx1, ly1 = hulls if hulls else (None, None, None, None)
+    assembled = assemble_lines_bulk(chars, lines, cfg.word_margin)
+
+    boxes: list[Box] = []
+    metas: list[tuple[float, float, float, float]] = []
+    for group in line_groups:
+        # order lines inside the box top-to-bottom
+        group_sorted = sorted(group, key=lambda li: -ly1[li])
+        text_parts: list[str] = []
+        all_idx: list[np.ndarray] = []
+        all_off: list[np.ndarray] = []
+        line_spans: list[tuple[int, int]] = []
+        cursor = 0
+        nchars = 0
+        for k, li in enumerate(group_sorted):
+            line = lines[li]
+            ltext, loff = assembled[li]
+            if k > 0:
+                cursor += 1  # the "\n" separator (horizontal_box.py:197-200)
+            text_parts.append(ltext)
+            all_idx.append(char_index_base[line])
+            all_off.append(loff + cursor)
+            line_spans.append((nchars, nchars + len(line)))
+            nchars += len(line)
+            cursor += len(ltext)
+        text = "\n".join(text_parts)
+        idx = np.concatenate(all_idx)
+        off = np.concatenate(all_off)
+        member_chars = np.concatenate([lines[li] for li in group_sorted])
+        x0 = float(min(lx0[li] for li in group))
+        y0 = float(min(ly0[li] for li in group))
+        x1 = float(max(lx1[li] for li in group))
+        y1 = float(max(ly1[li] for li in group))
+        boxes.append(
+            Box(
+                page=int(chars.page[0]),
+                x0=x0, y0=y0, x1=x1, y1=y1,
+                text=text,
+                char_idx=idx,
+                offsets=off,
+                line_spans=line_spans,
+                fontname=_uniform(chars.fontname[member_chars]),
+                ncolor=_uniform(chars.ncolor[member_chars]),
+            )
+        )
+        metas.append((x0, y0, x1, y1))
+
+    order = order_boxes_reading(metas)
+    return [boxes[i] for i in order]
+
+
+def _old_box_words_lines(
+    chars: CharArrays, box: Box, word_margin: float
+) -> tuple[list[dict], list[dict]]:
+    words: list[dict] = []
+    lines: list[dict] = []
+    for li, (a, b) in enumerate(box.line_spans):
+        idx = box.char_idx[a:b]  # document-level indices, x-ordered
+        n = len(idx)
+        x0s = chars.x0[idx]
+        x1s = chars.x1[idx]
+        widths = x1s - x0s
+        if n > 1:
+            gaps = x0s[1:] - x1s[:-1]
+            breaks = np.flatnonzero(gaps > word_margin * widths[1:]) + 1
+            segs = np.split(np.arange(n), breaks)
+        else:
+            segs = [np.arange(n)]
+        line_words: list[dict] = []
+        for seg in segs:
+            w_idx = idx[seg]
+            rec = {
+                "line": li,
+                "text": "".join(chars.text[w_idx].tolist()),
+                "x0": float(chars.x0[w_idx].min()),
+                "y0": float(chars.y0[w_idx].min()),
+                "x1": float(chars.x1[w_idx].max()),
+                "y1": float(chars.y1[w_idx].max()),
+                "fontname": _uniform(chars.fontname[w_idx]),
+                "ncolor": _uniform(chars.ncolor[w_idx]),
+            }
+            line_words.append(rec)
+            words.append(rec)
+        lines.append(
+            {
+                "text": " ".join(w["text"] for w in line_words),
+                "x0": min(w["x0"] for w in line_words),
+                "y0": min(w["y0"] for w in line_words),
+                "x1": max(w["x1"] for w in line_words),
+                "y1": max(w["y1"] for w in line_words),
+                "fontname": _uniform(w["fontname"] for w in line_words),
+                "ncolor": _uniform(w["ncolor"] for w in line_words),
+            }
+        )
+    return words, lines
+
+
+def _old_crop_cell_box(
+    chars: CharArrays,
+    page: int,
+    bbox: tuple[float, float, float, float],
+    cfg: ExtractConfig,
+) -> Box | None:
+    idx = np.where(chars_in_bbox_mask(chars, page, bbox))[0]
+    if len(idx) == 0:
+        return None
+    sub = chars.take(idx)
+    yc = (sub.y0 + sub.y1) * 0.5
+    order = np.lexsort((sub.x0, -yc))  # flatten order: top-down, then x
+    tol = cfg.line_overlap  # absolute points, reference quirk
+    lines: list[np.ndarray] = []
+    cur = [int(order[0])]
+    for k in range(1, len(order)):
+        i = int(order[k])
+        if abs(yc[i] - yc[cur[-1]]) < tol:
+            cur.append(i)
+        else:
+            lines.append(np.asarray(cur, dtype=np.int64))
+            cur = [i]
+    lines.append(np.asarray(cur, dtype=np.int64))
+    lines = [l[np.argsort(sub.x0[l], kind="stable")] for l in lines]
+
+    text_parts: list[str] = []
+    all_idx: list[np.ndarray] = []
+    all_off: list[np.ndarray] = []
+    line_spans: list[tuple[int, int]] = []
+    cursor = 0
+    nchars = 0
+    for k, line in enumerate(lines):
+        ltext, loff = _old_assemble_line_text(sub, line, cfg.word_margin)
+        if k > 0:
+            cursor += 1  # the "\n" separator
+        text_parts.append(ltext)
+        all_idx.append(idx[line])
+        all_off.append(loff + cursor)
+        line_spans.append((nchars, nchars + len(line)))
+        nchars += len(line)
+        cursor += len(ltext)
+    members = np.concatenate(lines)
+    return Box(
+        page=page,
+        x0=float(sub.x0.min()),
+        y0=float(sub.y0.min()),
+        x1=float(sub.x1.max()),
+        y1=float(sub.y1.max()),
+        text="\n".join(text_parts),
+        char_idx=np.concatenate(all_idx),
+        offsets=np.concatenate(all_off),
+        line_spans=line_spans,
+        fontname=_uniform(sub.fontname[members]),
+        ncolor=_uniform(sub.ncolor[members]),
+    )
+
+
+_NCOLORS = (None, (0.0, 0.0, 0.0), (1.0, 0.0, 0.0))
+
+
+def _chars(x0, x1, y0, y1, glyphs, page=None, fonts=None, colors=None, u1=False):
+    n = len(x0)
+    ncolor = np.empty(n, dtype=object)
+    ncolor[:] = [None] * n if colors is None else colors
+    fontname = np.empty(n, dtype=object)
+    fontname[:] = ["F1"] * n if fonts is None else fonts
+    text = np.array(glyphs, dtype="<U1" if u1 else object)
+    return CharArrays(
+        np.ones(n, dtype=np.int32) if page is None else np.asarray(page, dtype=np.int32),
+        text, np.asarray(x0, float), np.asarray(y0, float),
+        np.asarray(x1, float), np.asarray(y1, float), fontname, ncolor,
+    )
+
+
+def _random_chars(rng, trial):
+    """A few text rows with y-center and x0 ties, zero widths and
+    heights, close rows, word gaps, 'fi' and '' glyphs, as <U1 or
+    object text, some chars on another page."""
+    nrows = int(rng.integers(1, 7))
+    step = float(rng.choice([12.0, 3.0, 0.6, 0.3]))
+    xs, ys, ws, hs = [], [], [], []
+    for r in range(nrows):
+        k = int(rng.integers(1, 13))
+        gaps = rng.choice([0.0, 0.0, 0.2, 1.0, 3.0, 20.0], k)
+        w = rng.choice([5.0, 5.0, 3.0, 0.0], k)
+        x = 40.0 + np.cumsum(gaps + w) - w
+        if trial % 3 == 0:  # integer grid: x0 ties
+            x = np.round(x / 6.0) * 6.0
+        y = 700.0 - step * r + rng.choice([0.0, 0.0, 0.25, -0.25, 0.1], k)
+        xs.append(x); ws.append(w); ys.append(y)
+        hs.append(rng.choice([10.0, 10.0, 6.0, 0.0], k))
+    x0, w, y0, h = (np.concatenate(a) for a in (xs, ws, ys, hs))
+    n = len(x0)
+    perm = rng.permutation(n)
+    x0, w, y0, h = x0[perm], w[perm], y0[perm], h[perm]
+    u1 = trial % 2 == 0
+    pool = list("abcdefgh") + ([""] if u1 else ["fi", ""])
+    glyphs = [pool[i] for i in rng.integers(0, len(pool), n)]
+    fonts = None if trial % 4 else [("F1", "F2")[i] for i in rng.integers(0, 2, n)]
+    colors = [_NCOLORS[1]] * n if trial % 5 == 0 else [_NCOLORS[i] for i in rng.integers(0, 3, n)]
+    page = np.where(rng.random(n) < 0.1, 2, 1) if trial % 7 == 0 else None
+    return _chars(x0, x0 + w, y0, y0 + h, glyphs, page, fonts, colors, u1)
+
+
+def _box_fields(b):
+    return (
+        type(b.page), b.page, b.x0, b.y0, b.x1, b.y1, b.text,
+        b.char_idx.dtype, b.char_idx.tolist(), b.offsets.dtype, b.offsets.tolist(),
+        b.line_spans, b.fontname, b.ncolor,
+    )
+
+
+def _same_box_and_words(chars, got, exp, word_margin):
+    if exp is None:
+        return got is None
+    return (
+        _box_fields(got) == _box_fields(exp)
+        and box_words_lines(chars, got) == _old_box_words_lines(chars, exp, word_margin)
+    )
+
+
+def test_cells_and_pages_match_old_paths():
+    rng = np.random.default_rng(29)
+    for trial in range(3000):
+        chars = _random_chars(rng, trial)
+        cfg = ExtractConfig(
+            line_overlap=(0.1, 0.5, 2.0, 5.0)[trial % 4],
+            word_margin=(0.0, 0.1, 0.5)[trial // 4 % 3],
+        )
+        # the cell bbox clips a random margin off each side
+        x0, y0 = chars.x0.min(), chars.y0.min()
+        x1, y1 = chars.x1.max(), chars.y1.max()
+        cut = rng.choice([0.0, 0.0, 0.0, 1.0, 4.0], 4)
+        bbox = (x0 + cut[0], y0 + cut[1], x1 - cut[2], y1 - cut[3])
+        exp = _old_crop_cell_box(chars, 1, bbox, cfg)
+        got = crop_cell_box(chars, 1, bbox, cfg)
+        assert _same_box_and_words(chars, got, exp, cfg.word_margin), trial
+        on_page = np.flatnonzero(chars.page == 1)
+        sub = chars.take(on_page)
+        exp_boxes = _old_build_boxes(sub, cfg, char_index_base=on_page)
+        got_boxes = build_boxes(sub, cfg, char_index_base=on_page)
+        assert len(got_boxes) == len(exp_boxes), trial
+        for g, e in zip(got_boxes, exp_boxes):
+            assert _same_box_and_words(chars, g, e, cfg.word_margin), trial
+
+
+def test_cell_with_overflowing_y_centers_splits_like_build_boxes():
+    # y0 + y1 overflows to inf, so each gap between consecutive
+    # y-centers is inf - inf = NaN: the page rule keeps such chars on
+    # one line (a NaN gap is not >= tolerance); the old cell loop put
+    # each char on a line of its own (a NaN |gap| is not < tolerance)
+    y = np.full(4, 1.7e308)
+    x0 = np.array([10.0, 15.0, 40.0, 45.0])
+    chars = _chars(x0, x0 + 5.0, y, y, list("abcd"))
+    cfg = ExtractConfig()
+    bbox = (0.0, 1.0e308, 100.0, 1.79e308)
+    with np.errstate(over="ignore", invalid="ignore"):
+        (page_box,) = build_boxes(chars, cfg)
+        cell = crop_cell_box(chars, 1, bbox, cfg)
+        old = _old_crop_cell_box(chars, 1, bbox, cfg)
+    assert page_box.line_spans == cell.line_spans == [(0, 4)]
+    assert page_box.text == cell.text == "ab cd"
+    assert old.text == "a\nb\nc\nd"

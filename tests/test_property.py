@@ -189,7 +189,7 @@ def test_words_lines_partition_box_chars(doc):
     cfg = ExtractConfig()
     chars = CharArrays(**decode_chars(doc["chars"]))
     for b in build_boxes(chars, cfg):
-        words, lines = box_words_lines(chars, b, cfg.word_margin)
+        words, lines = box_words_lines(chars, b)
         assert len(lines) == len(b.line_spans)
         for li, line in enumerate(lines):
             lw = [w["text"] for w in words if w["line"] == li]
