@@ -7,14 +7,22 @@ Design (no custom Catalyst work — idempotent partition overwrites):
 
 * the corpus is bucketed by ``pmod(hash(conv_id), n_buckets)``
   (``pipeline.conv_bucket``);
-* buckets are processed in CHUNKS; each chunk is one unsalted
-  extraction whose only exchange is on ``bucket``, and its output lands
-  in ``<out>/data/bucket=<k>/`` via dynamic partition overwrite —
-  re-running a chunk replaces exactly its partitions (idempotent);
-* after each chunk commits, one lineage row per bucket is appended to
-  ``<out>/lineage`` with the ``pipeline.extraction_metrics`` sums of
-  its written rows (turns, docs, parse failures, elements, bytes) and
-  wall time;
+* buckets are processed in CHUNKS; each chunk is one Spark job, the
+  data write: one unsalted extraction whose only exchange is on
+  ``bucket``, landing in ``<out>/data/bucket=<k>/`` via dynamic
+  partition overwrite — re-running a chunk replaces exactly its
+  partitions (idempotent);
+* the write's result stage observes the ``pipeline.BUCKET_SUMS`` of
+  each bucket of the chunk (turns, docs, parse failures, elements,
+  bytes — the ``pipeline.extraction_metrics`` sums) through
+  ``DataFrame.observe``, so the lineage counts need no read-back;
+* after the write, the driver appends the chunk's lineage rows (one
+  per bucket, with wall time) to ``<out>/lineage`` as ONE parquet
+  file, written through the output's Hadoop ``FileSystem`` under a
+  hidden temporary name and then renamed into place: a reader sees the
+  whole file or none of it, and an append killed before its rename
+  leaves only a hidden file that Spark, pyarrow and
+  :func:`completed_buckets` all skip;
 * resume = run again: the pending buckets are the bucket universe minus
   the buckets of the ``done`` lineage rows (a set difference on the
   driver) — a killed run restarts at the first uncommitted chunk,
@@ -29,6 +37,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from datetime import datetime, timezone
 
 from libpdf_spark.config import DEFAULT_CONFIG, ExtractConfig
 
@@ -49,27 +58,78 @@ def _data_path(output_dir: str) -> str:
     return f"{output_dir}/data"
 
 
-def read_lineage(spark, output_dir: str):
-    from pyspark.errors import AnalysisException
+def _lineage_fs(spark, output_dir: str):
+    """The Hadoop ``FileSystem`` of ``<out>/lineage`` — the one Spark
+    writes the data through, with its credentials — and the path."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(_lineage_path(output_dir))
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
-    path = _lineage_path(output_dir)
-    try:
-        # drop any cached file listing — appends from this same session
-        # are otherwise intermittently invisible to the next read
-        spark.catalog.refreshByPath(path)
-        return spark.read.parquet(path)
-    except AnalysisException:
+
+def _lineage_files(spark, output_dir: str):
+    """The lineage ``FileSystem`` and its visible parquet files (none
+    when the directory does not exist)."""
+    fs, path = _lineage_fs(spark, output_dir)
+    if not fs.exists(path):
+        return fs, []
+    files = [st.getPath() for st in fs.listStatus(path)]
+    return fs, [
+        f for f in files
+        if f.getName().endswith(".parquet") and not f.getName().startswith(("_", "."))
+    ]
+
+
+def read_lineage(spark, output_dir: str):
+    if not _lineage_files(spark, output_dir)[1]:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
+    path = _lineage_path(output_dir)
+    # drop any cached file listing — files appended since the last read
+    # are otherwise intermittently invisible to the next read
+    spark.catalog.refreshByPath(path)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
 
 
 def completed_buckets(spark, output_dir: str) -> set[int]:
-    rows = (
-        read_lineage(spark, output_dir)
-        .filter("status = 'done'")
-        .select("bucket")
-        .collect()
-    )
-    return {r.bucket for r in rows}
+    """Buckets with a ``done`` lineage row, read on the driver (no
+    Spark job): ``bucket, status`` of each visible lineage file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fs, files = _lineage_files(spark, output_dir)
+    done = set()
+    for f in files:
+        stream = fs.open(f)
+        try:
+            data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        finally:
+            stream.close()
+        t = pq.read_table(pa.BufferReader(data), columns=["bucket", "status"]).to_pydict()
+        done.update(b for b, s in zip(t["bucket"], t["status"]) if s == "done")
+    return done
+
+
+def _append_lineage(spark, output_dir: str, name: str, rows: list[tuple]) -> None:
+    """Append ``rows`` (tuples in ``LINEAGE_SCHEMA`` order) as the one
+    parquet file ``<out>/lineage/<name>``, written from the driver:
+    under a hidden temporary name first, then renamed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = to_arrow_schema(DataType.fromDDL(LINEAGE_SCHEMA))
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema), buf)
+
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, path = _lineage_fs(spark, output_dir)
+    tmp = Path(path, f"_tmp-{name}")
+    out = fs.create(tmp, True)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, Path(path, name)):
+        raise OSError(f"lineage append: cannot rename {tmp.toString()} to {name}")
 
 
 def run_resumable(
@@ -86,9 +146,10 @@ def run_resumable(
     Returns a summary dict. ``max_chunks`` bounds how many chunks this
     invocation commits (useful to simulate interruption in tests).
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from libpdf_spark.pipeline import conv_bucket, extract_turns, extraction_metrics
+    from libpdf_spark.pipeline import BUCKET_SUMS, conv_bucket, extract_turns
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     run_id = uuid.uuid4().hex[:12]
@@ -112,8 +173,19 @@ def run_resumable(
         extracted = extract_turns(part, cfg, salted=False).withColumn(
             "bucket", conv_bucket(n_buckets)
         )
+        # the lineage sums of each bucket, observed AFTER the exchange:
+        # CollectMetrics then sits in the write's result stage, where
+        # each partition's update is merged once (a shuffle-map stage
+        # can be recomputed, and its updates would count twice)
+        obs = Observation()
+        sums = [
+            F.sum(F.when(F.col("bucket") == b, F.expr(e))).alias(f"{k}_{b}")
+            for b in chunk
+            for k, e in BUCKET_SUMS.items()
+        ]
         (
             extracted.repartition("bucket")
+            .observe(obs, *sums)
             .sortWithinPartitions("conv_id", "turn_idx")  # stable ordering
             .write.partitionBy("bucket")
             .mode("overwrite")
@@ -121,27 +193,15 @@ def run_resumable(
         )
         wall = time.time() - t0
 
-        # metrics per bucket from the just-written data (reading back
-        # keeps lineage consistent with what is actually on disk); a
-        # bucket with no rows still gets a lineage row, of zeros
-        spark.catalog.refreshByPath(_data_path(output_dir))
-        written = spark.read.parquet(_data_path(output_dir)).filter(
-            F.col("bucket").isin(chunk)
-        )
-        metrics = extraction_metrics(written, n_buckets).select(
-            "bucket", "turns", "docs", "parse_failures", "elements", "bytes_in"
-        )
-        counts = {r[0]: tuple(r[1:]) for r in metrics.collect()}
+        # a bucket with no rows observes NULL sums: a lineage row of zeros
+        observed = obs.get
+        finished_at = datetime.now(timezone.utc)
         rows = [
-            (b, "done", run_id, *counts.get(b, (0, 0, 0, 0, 0)), float(wall), None)
+            (b, "done", run_id, *(observed[f"{k}_{b}"] or 0 for k in BUCKET_SUMS),
+             wall, finished_at)
             for b in chunk
         ]
-        (
-            spark.createDataFrame(rows, LINEAGE_SCHEMA)
-            .withColumn("finished_at", F.current_timestamp())
-            .write.mode("append")
-            .parquet(_lineage_path(output_dir))
-        )
+        _append_lineage(spark, output_dir, f"part-{run_id}-{chunk[0]}.parquet", rows)
         committed.append(chunk)
 
     done_now = {b for ch in committed for b in ch}

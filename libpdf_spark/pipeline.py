@@ -295,25 +295,36 @@ def conv_bucket(n_buckets: int) -> "Column":
     return F.pmod(F.hash("conv_id"), F.lit(n_buckets))
 
 
+# The per-bucket sums of an extraction, as SQL over ``EXTRACT_SCHEMA``
+# rows: ``extraction_metrics`` aggregates them per bucket, and
+# ``lineage.run_resumable`` observes them on its data write as the
+# ``n_turns, n_docs, n_parse_failures, n_elements, bytes_in`` of its
+# lineage rows (same order).
+BUCKET_SUMS = {
+    "turns": "1",
+    "docs": "CAST(doc_found AS INT)",
+    "parse_failures": "CAST(doc_found AS INT) - CAST(parse_ok AS INT)",
+    "elements": "n_elements",
+    "bytes_in": "bytes_in",
+}
+
+
 def extraction_metrics(extracted: "DataFrame", n_buckets: int = 64) -> "DataFrame":
     """Per-conversation-bucket extraction metrics (north_star: elements/
     turn, parse failures, bytes processed) — plain hash aggregation.
-    The lineage rows of ``lineage.run_resumable`` are these sums."""
+    The summed columns are ``BUCKET_SUMS``, the one definition the
+    lineage rows of ``lineage.run_resumable`` observe as well."""
     from pyspark.sql import functions as F
 
     return (
         extracted.groupBy(conv_bucket(n_buckets).alias("bucket"))
         .agg(
-            F.count("*").alias("turns"),
-            F.sum(F.col("doc_found").cast("int")).alias("docs"),
+            *(F.sum(F.expr(v)).alias(k) for k, v in BUCKET_SUMS.items()),
             F.sum(F.col("parse_ok").cast("int")).alias("parsed"),
-            F.sum(
-                (F.col("doc_found").cast("int")) - (F.col("parse_ok").cast("int"))
-            ).alias("parse_failures"),
-            F.sum("n_elements").alias("elements"),
-            F.sum("bytes_in").alias("bytes_in"),
             F.avg("n_elements").alias("elements_per_turn"),
         )
+        .select("bucket", "turns", "docs", "parsed", "parse_failures",
+                "elements", "bytes_in", "elements_per_turn")
     )
 
 

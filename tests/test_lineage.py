@@ -4,13 +4,14 @@ exact completion with no duplicates (north-rule checkpoint semantics)."""
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 
 import pandas as pd
 import pytest
 
 from libpdf_spark.config import ExtractConfig
 from libpdf_spark.fixtures import gen_transcripts
-from libpdf_spark.lineage import completed_buckets, read_lineage, run_resumable
+from libpdf_spark.lineage import _append_lineage, completed_buckets, read_lineage, run_resumable
 from libpdf_spark.pipeline import extract_turns
 
 OUT = "/tmp/libpdf_spark_test_lineage"
@@ -207,6 +208,127 @@ def test_resume_from_earlier_lineage_schema(spark, corpus_df):
     assert r["pending_before"] == [b for b in range(8) if b not in first]
     assert r["remaining"] == []
     assert completed_buckets(spark, out) == set(range(8))
+    data = spark.read.parquet(f"{out}/data")
+    assert data.count() == len(transcripts)
+    assert data.select("conv_id", "turn_idx").distinct().count() == len(transcripts)
+    _assert_lineage_matches_data(spark, out, 8)
+
+
+# Jobs a full 8-bucket, 2-bucket-chunk run over ``corpus_df`` started in
+# the test session once each chunk became one write job (an adaptive
+# plan runs its shuffle-map stage as a job of its own). The commit path
+# before it ran 25: a Spark ``completed_buckets`` query, then per chunk
+# the write, a read-back, a metrics collect and a lineage write.
+ONE_WRITE_PER_CHUNK_JOBS = 8
+
+
+def _jobs_in_group(sc, group: str, fn):
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_observe_on_result_stage_and_one_job_per_chunk(spark, corpus_df, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    df, transcripts, _ = corpus_df
+    out = OUT + "_observe"
+    shutil.rmtree(out, ignore_errors=True)
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append((path, self._df._jdf.queryExecution().executedPlan().toString()))
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    sc = spark.sparkContext
+    r, jobs = _jobs_in_group(
+        sc, "lineage-observe",
+        lambda: run_resumable(spark, df, out, ExtractConfig(), n_buckets=8, chunk_size=2),
+    )
+    # the data writes are the only Spark writes: the lineage is not one
+    assert len(r["committed_chunks"]) == 4
+    assert [p for p, _ in plans] == [f"{out}/data"] * 4
+    for _, plan in plans:
+        lines = plan.splitlines()
+        exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+        assert len(exchanges) == 1, plan
+        assert "hashpartitioning(bucket#" in lines[exchanges[0]], plan
+        # CollectMetrics is an ancestor of the exchange: in the result stage
+        observed = [i for i, ln in enumerate(lines) if "CollectMetrics" in ln]
+        assert len(observed) == 1 and observed[0] < exchanges[0], plan
+    assert 0 < jobs <= ONE_WRITE_PER_CHUNK_JOBS
+    _assert_lineage_matches_data(spark, out, 8)
+
+    # the lineage side is driver-only: neither reading nor appending it
+    # starts a Spark job
+    done, jobs = _jobs_in_group(sc, "lineage-read", lambda: completed_buckets(spark, out))
+    assert done == set(range(8)) and jobs == 0
+    # and read_lineage has its schema: no parquet schema inference job
+    _, jobs = _jobs_in_group(sc, "lineage-df", lambda: read_lineage(spark, out))
+    assert jobs == 0
+    shutil.rmtree(out + "_append", ignore_errors=True)
+    row = (0, "done", "append", 1, 0, 0, 0, 0, 0.0, None)
+    _, jobs = _jobs_in_group(
+        sc, "lineage-append",
+        lambda: _append_lineage(spark, out + "_append", "part-append-0.parquet", [row]),
+    )
+    assert jobs == 0
+    assert completed_buckets(spark, out + "_append") == {0}
+
+
+def _visible_lineage_files(out: str) -> dict[str, bytes]:
+    lineage = Path(out, "lineage")
+    files = lineage.iterdir() if lineage.is_dir() else []
+    return {f.name: f.read_bytes() for f in files if not f.name.startswith(("_", "."))}
+
+
+def test_lineage_append_only_and_crash_safe(spark, corpus_df):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df, transcripts, _ = corpus_df
+    out = OUT + "_append_only"
+    shutil.rmtree(out, ignore_errors=True)
+    cfg = ExtractConfig()
+
+    files = {}
+    for i in range(4):
+        r = run_resumable(spark, df, out, cfg, n_buckets=8, chunk_size=2, max_chunks=1)
+        assert len(r["committed_chunks"]) == 1
+        now = _visible_lineage_files(out)
+        # one new visible file per committed chunk; earlier files untouched
+        assert set(now) > set(files) and len(now) == len(files) + 1
+        assert all(now[n] == body for n, body in files.items())
+        files = now
+
+        if i == 0:
+            # what appends killed before their rename leave behind: a
+            # complete hidden temporary file, and a truncated one, both
+            # claiming every bucket that is not yet committed
+            (name, body), = files.items()
+            done = set(r["committed_chunks"][0])
+            claims = [b for b in range(8) if b not in done]
+            killed = (
+                pq.read_table(f"{out}/lineage/{name}")
+                .take([0] * len(claims))
+                .set_column(0, "bucket", pa.array(claims, pa.int32()))
+            )
+            pq.write_table(killed, f"{out}/lineage/_tmp-part-killed-0.parquet")
+            with open(f"{out}/lineage/_tmp-part-killed-1.parquet", "wb") as fh:
+                fh.write(body[: len(body) // 2])
+            assert completed_buckets(spark, out) == done
+            assert sorted(read_lineage(spark, out).toPandas().bucket) == sorted(done)
+            assert sorted(pq.read_table(f"{out}/lineage").column("bucket").to_pylist()) == sorted(done)
+
+    assert completed_buckets(spark, out) == set(range(8))
+    assert run_resumable(spark, df, out, cfg, n_buckets=8, chunk_size=2)["committed_chunks"] == []
+    assert _visible_lineage_files(out) == files
     data = spark.read.parquet(f"{out}/data")
     assert data.count() == len(transcripts)
     assert data.select("conv_id", "turn_idx").distinct().count() == len(transcripts)
