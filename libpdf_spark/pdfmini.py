@@ -3,7 +3,8 @@
 The north star's turns carry "embedded PDF byte-streams or serialized
 layout markup". The markup path is primary; this module closes the
 byte-stream loop so the extraction kernel runs unchanged on true PDFs.
-:func:`parse_pdf` is a tolerant sequential scanner with a real PDF
+:func:`parse_pdf` loads objects through the cross-reference data
+(a sequential object scan when that is unreadable), with a real PDF
 object parser (dicts/arrays/strings/names/refs/streams) and a
 content-stream interpreter (graphics + text state machines, CTM and
 text-matrix tracking, per-font /Widths) that recovers the SAME
@@ -1214,15 +1215,15 @@ def _decrypt_value(v, num: int, sec: "_StdSecurity"):
 
 def _decrypt_all_objects(
     objects: dict, trailer: dict, password: bytes = b""
-) -> bool:
+) -> None:
     """Decrypt every loaded top-level object in place per the trailer's
-    /Encrypt dictionary (empty or supplied password). Returns True on
-    success; raises ``ValueError`` for unsupported handlers. The
-    /Encrypt object itself and xref streams are never encrypted
-    (PDF 32000 §7.5.8.2) and are skipped."""
+    /Encrypt dictionary (empty or supplied password); a no-op without
+    one. Raises ``ValueError`` for unsupported handlers and wrong
+    passwords. The /Encrypt object itself and xref streams are never
+    encrypted (PDF 32000 §7.5.8.2) and are skipped."""
     encref = trailer.get("Encrypt")
     if encref is None:
-        return False
+        return
     skip: set[int] = set()
     enc = encref
     if isinstance(encref, Ref):
@@ -1241,7 +1242,6 @@ def _decrypt_all_objects(
         if isinstance(v, Stream) and str(v.dict.get("Type")) == "XRef":
             continue
         objects[num] = _decrypt_value(v, num, sec)
-    return True
 
 
 # ---------------------------------------------------------------------------
@@ -1516,22 +1516,17 @@ def _xref_stream_entries(
             )
 
 
-def _load_via_xref(
-    data: bytes, password: bytes = b""
-) -> tuple[dict[int, object], dict, bool]:
-    """Authoritative object load driven by the cross-reference data at
-    ``startxref`` — classic ``xref`` tables AND PDF 1.5 xref STREAMS
-    (``/Type /XRef``: /W field-width decoding, /Index subsections,
-    optional FlateDecode + PNG predictors), following /Prev chains
-    across incremental updates (first-seen entry wins — newest update
-    is read first). Type-2 entries load their object from the owning
-    ``/Type /ObjStm`` object stream. Raises ``ValueError`` when the
-    xref data is missing or malformed; :func:`parse_pdf` then falls
-    back to the tolerant sequential scan. When the trailer carries
-    /Encrypt, all objects are decrypted (empty-user-password standard
-    security handler) BEFORE ObjStm expansion — ObjStm payloads are
-    themselves encrypted streams; third return value reports whether
-    decryption ran."""
+def _load_via_xref(data: bytes) -> tuple[dict[int, object], dict, list[int]]:
+    """Object load driven by the cross-reference data at ``startxref``
+    — classic ``xref`` tables AND PDF 1.5 xref STREAMS (``/Type
+    /XRef``: /W field-width decoding, /Index subsections, optional
+    FlateDecode + PNG predictors), following /Prev chains across
+    incremental updates (first-seen entry wins — newest update is
+    read first). Returns (top-level objects, merged trailer, the
+    ``/Type /ObjStm`` object numbers named by type-2 entries in
+    first-member order); the objects are neither decrypted nor
+    expanded (:func:`_decrypt_and_expand`). Raises ``ValueError``
+    when the xref data is missing or malformed."""
     sx = data.rfind(b"startxref")
     if sx < 0:
         raise ValueError("no startxref")
@@ -1594,7 +1589,7 @@ def _load_via_xref(
         pos = prev
 
     objects: dict[int, object] = {}
-    in_streams: dict[int, list[int]] = {}  # objstm num → member nums
+    objstm_nums: dict[int, None] = {}  # ordered set, first member first
     for num, (typ, f2, _) in sorted(entries.items()):
         if typ == 1:
             try:
@@ -1604,13 +1599,8 @@ def _load_via_xref(
             if hnum == num and val is not None:
                 objects[num] = val
         elif typ == 2:
-            in_streams.setdefault(f2, []).append(num)
-    decrypted = _decrypt_all_objects(objects, trailer, password)
-    for snum in in_streams:
-        stm = objects.get(snum)
-        if isinstance(stm, Stream) and str(stm.dict.get("Type")) == "ObjStm":
-            _expand_objstm(stm, objects)
-    return objects, trailer, decrypted
+            objstm_nums.setdefault(f2)
+    return objects, trailer, list(objstm_nums)
 
 
 def _png_unpredict(data: bytes, columns: int) -> bytes:
@@ -1818,6 +1808,111 @@ def _expand_objstm(stm: Stream, objects: dict[int, object]) -> None:
         except ValueError:
             continue  # tolerate one bad member, keep the rest
         objects.setdefault(num, val)
+
+
+def _scan_trailer(data: bytes, objects: dict[int, object]) -> dict:
+    """Trailer of a file whose cross-reference data is unreadable: the
+    last ``trailer`` keyword dictionary, with a missing /Root, /Info,
+    /Encrypt or /ID filled from the ``/Type /XRef`` stream dictionaries
+    in object order (a PDF 1.5 file has no keyword trailer)."""
+    trailer: dict = {}
+    tpos = data.rfind(b"trailer")
+    if tpos >= 0:
+        try:
+            tdict, _ = _parse_obj(data, tpos + 7)
+        except ValueError:
+            tdict = None
+        if isinstance(tdict, dict):
+            trailer = tdict
+    for v in objects.values():
+        if isinstance(v, Stream) and str(v.dict.get("Type")) == "XRef":
+            for key in ("Root", "Info", "Encrypt", "ID"):
+                if trailer.get(key) is None and v.dict.get(key) is not None:
+                    trailer[key] = v.dict[key]
+    return trailer
+
+
+def _decrypt_and_expand(
+    objects: dict[int, object], trailer: dict, objstm_nums: list[int],
+    password: bytes,
+) -> None:
+    """Decrypt every object per the trailer's /Encrypt (a no-op without
+    one), THEN add the members of each listed ``/Type /ObjStm`` —
+    object-stream payloads are themselves encrypted streams. A corrupt
+    object stream is skipped; the others still expand."""
+    _decrypt_all_objects(objects, trailer, password)
+    for snum in objstm_nums:
+        stm = objects.get(snum)
+        if isinstance(stm, Stream) and str(stm.dict.get("Type")) == "ObjStm":
+            try:
+                _expand_objstm(stm, objects)
+            except ValueError:
+                pass
+
+
+def _open_document(
+    data: bytes, password: bytes
+) -> tuple[dict[int, object], dict, object]:
+    """PDF bytes → (object map, catalog dict, /Info value or None).
+
+    Two candidates run the same steps — load the objects, find the
+    trailer, decrypt then expand object streams
+    (:func:`_decrypt_and_expand`), resolve /Root:
+
+    1. the cross-reference data at ``startxref`` (:func:`_load_via_xref`);
+    2. when that raises ``ValueError`` or its /Root is not a
+       dictionary, the sequential object scan (:func:`_scan_objects`)
+       with :func:`_scan_trailer`, expanding every object stream found.
+       Its last resort for the catalog is the first ``/Type /Catalog``
+       dictionary, with no /Info.
+
+    This mirrors pdfminer's ``PDFXRefFallback`` behind the reference:
+    a rebuilt cross-reference, then the same decryption and object
+    streams as an intact file. An encrypted file whose scan trailer
+    has no /Encrypt (the xref trailer named one, or a standard
+    security-handler dictionary is present) raises ``ValueError`` —
+    a recorded failure, never ciphertext extracted as text."""
+    xref_encrypt = None
+    try:
+        objects, trailer, objstm_nums = _load_via_xref(data)
+        xref_encrypt = trailer.get("Encrypt")
+        _decrypt_and_expand(objects, trailer, objstm_nums, password)
+        resolve = _Resolver(objects)
+        catalog = resolve(trailer.get("Root"))
+        if isinstance(catalog, dict):
+            return objects, catalog, resolve(trailer.get("Info"))
+    except ValueError:
+        pass
+    objects = _scan_objects(data)
+    trailer = _scan_trailer(data, objects)
+    if trailer.get("Encrypt") is None and (
+        xref_encrypt is not None
+        or any(
+            isinstance(v, dict) and str(v.get("Filter")) == "Standard"
+            and "O" in v and "U" in v
+            for v in objects.values()
+        )
+    ):
+        raise ValueError("encrypted PDF: no readable trailer /Encrypt")
+    objstm_nums = [
+        num for num, v in objects.items()
+        if isinstance(v, Stream) and str(v.dict.get("Type")) == "ObjStm"
+    ]
+    _decrypt_and_expand(objects, trailer, objstm_nums, password)
+    resolve = _Resolver(objects)
+    catalog = resolve(trailer.get("Root"))
+    if isinstance(catalog, dict):
+        return objects, catalog, resolve(trailer.get("Info"))
+    catalog = next(
+        (
+            v for v in objects.values()
+            if isinstance(v, dict) and str(v.get("Type")) == "Catalog"
+        ),
+        None,
+    )
+    if catalog is None:
+        raise ValueError("no /Catalog found in PDF")
+    return objects, catalog, None
 
 
 # ---------------------------------------------------------------------------
@@ -2230,7 +2325,6 @@ for _n in ("ETen-B5-H", "ETen-B5-V", "B5pc-H", "B5pc-V"):
     _VWIDTH_SPECS[_n] = (
         "big5", ((0x81, 0xFE),), ((0x40, 0x7E), (0xA1, 0xFE))
     )
-_RKSJ_CMAPS = set(_VWIDTH_SPECS)  # historical name; all variable CMaps
 _CODE_TEXT_MEMO: dict[tuple[str, int], str] = {}  # (codec, code) → char
 
 # UTF-16 predefined CMaps: 2-byte code UNITS like the UCS-2 family,
@@ -2294,7 +2388,7 @@ def _predefined_cid_map(name: str) -> dict[int, int]:
             # falls to /DW (real producers key /W on Latin and set
             # /DW 1000 for the full-width rows)
             m = {c: c - 0x1F for c in range(0x20, 0x7F)}
-        elif name in _RKSJ_CMAPS:
+        elif name in _VWIDTH_SPECS:
             # keys are RAW CODES (cp932 byte values), not code points.
             # 90ms maps single-byte Latin to the half-width row,
             # 90msp to the proportional row; half-width katakana
@@ -2320,6 +2414,23 @@ def _predefined_cid_map(name: str) -> dict[int, int]:
                 m.update({cp0 + k: cid0 + k for k in range(n)})
         _CID_MAP_CACHE[name] = m
     return m
+
+
+def _predefined_cmap(name: str) -> dict | None:
+    """Font-info entries of a predefined CMap: ``cidmap`` (code→CID
+    for /W lookup) plus its text model — ``utf16`` (chr + surrogate
+    merge) or ``variable``/``vspec`` (mixed 1/2-byte codespace, codec
+    decode); UCS-2 needs neither (chr(code) is exact). None outside
+    every supported family."""
+    if name in _UCS2_CMAPS:
+        return {"cidmap": _predefined_cid_map(name)}
+    if name in _UTF16_CMAPS:
+        ucs2 = _predefined_cid_map(name.replace("UTF16", "UCS2"))
+        return {"cidmap": ucs2, "utf16": True}
+    if name in _VWIDTH_SPECS:
+        spec = _VWIDTH_SPECS[name]
+        return {"cidmap": _predefined_cid_map(name), "variable": True, "vspec": spec}
+    return None
 
 
 def _font_info(res: dict, resolve, cache: dict | None = None) -> dict[str, dict]:
@@ -2448,37 +2559,26 @@ def _font_info(res: dict, resolve, cache: dict | None = None) -> dict[str, dict]
                     # code-keyed /W lookup (ADVICE r5: a previously-
                     # correct extraction must not become a failure)
                     cidmap, cspace, use = None, None, None
-                if cidmap is not None and use:
-                    base: dict[int, int] = {}
-                    if use in _UCS2_CMAPS or use in _VWIDTH_SPECS:
-                        base = _predefined_cid_map(use)
-                    elif use in _UTF16_CMAPS:
-                        base = _predefined_cid_map(
-                            use.replace("UTF16", "UCS2")
-                        )
-                    if base:
-                        merged = dict(base)
-                        merged.update(cidmap)  # local entries win
-                        cidmap = merged
+                base = _predefined_cmap(use) if use else None
+                if cidmap is not None and base:
+                    # local entries win over the base table
+                    cidmap = {**base["cidmap"], **cidmap}
                 if info["tounicode"] is None:
                     # no /ToUnicode: text must come from the usecmap
                     # base family's own text model
-                    if use in _UTF16_CMAPS:
-                        info["utf16"] = True  # chr + surrogate merge
-                    elif use in _VWIDTH_SPECS:
-                        # inherit the base CMap's tokenizer + codec
-                        # decode wholesale (its codespace supersedes
-                        # any local ranges, matching usecmap
-                        # inheritance semantics)
-                        info["variable"] = True
-                        info["vspec"] = _VWIDTH_SPECS[use]
-                        cspace = None
-                    elif use not in _UCS2_CMAPS:
+                    if base is None:
                         raise ValueError(
                             "unsupported Type0 /Encoding: embedded "
                             "CMap without /ToUnicode or a text-known "
                             "usecmap base"
                         )
+                    if base.get("variable"):
+                        # inherit the base CMap's tokenizer + codec
+                        # decode wholesale (its codespace supersedes
+                        # any local ranges, matching usecmap
+                        # inheritance semantics)
+                        cspace = None
+                    info.update(base)  # its "cidmap" is replaced below
                 info["cidmap"] = cidmap
                 if cspace and any(n != 2 for n, _, _ in cspace):
                     info["cspace"] = cspace  # mixed-width tokenizer
@@ -2488,21 +2588,13 @@ def _font_info(res: dict, resolve, cache: dict | None = None) -> dict[str, dict]
                 )
                 if enc_str in ("Identity-H", "Identity-V"):
                     info["cidmap"] = None
-                elif enc_str in _UCS2_CMAPS:
-                    info["cidmap"] = _predefined_cid_map(enc_str)
-                elif enc_str in _UTF16_CMAPS:
-                    info["cidmap"] = _predefined_cid_map(
-                        enc_str.replace("UTF16", "UCS2")
-                    )
-                    info["utf16"] = True  # merge surrogate pairs
-                elif enc_str in _VWIDTH_SPECS:
-                    info["cidmap"] = _predefined_cid_map(enc_str)
-                    info["variable"] = True  # mixed 1/2-byte codespace
-                    info["vspec"] = _VWIDTH_SPECS[enc_str]
                 else:
-                    raise ValueError(
-                        f"unsupported Type0 /Encoding {enc_str!r}"
-                    )
+                    named = _predefined_cmap(enc_str)
+                    if named is None:
+                        raise ValueError(
+                            f"unsupported Type0 /Encoding {enc_str!r}"
+                        )
+                    info.update(named)
                 if enc_str.endswith("-V"):
                     # vertical writing mode (§9.7.4.2): glyph origins
                     # advance DOWNWARD; see show_text's vertical branch
@@ -3021,15 +3113,9 @@ def parse_pdf(data: bytes, password: bytes | str = b"") -> dict:
     """PDF bytes → layout-payload dict (chars/lines/rects/figures/
     outline/annos/dests/meta/pages — the markup schema).
 
-    Object loading: the cross-reference data at ``startxref`` is the
-    PRIMARY path (classic tables and PDF 1.5 xref streams alike, /Prev
-    chains followed, ObjStm members materialized); any malformation
-    falls back to the tolerant sequential scan — which itself expands
-    every ``/Type /ObjStm`` it finds, so object-stream-packed PDFs
-    parse even with a corrupt xref. FlateDecode (with PNG predictors)
-    is inflated; any OTHER filter on a needed stream raises
-    ``ValueError`` so the document is a recorded parse failure
-    (ADVICE r1).
+    Objects are loaded by :func:`_open_document`. A stream filter
+    :func:`_stream_bytes` cannot decode raises ``ValueError``, so the
+    document is a recorded parse failure (ADVICE r1).
 
     ``password`` is tried as the USER then the OWNER password of an
     encrypted document (pdfminer accepts the same single password
@@ -3041,117 +3127,8 @@ def parse_pdf(data: bytes, password: bytes | str = b"") -> dict:
         password = password.encode("utf-8")
     if not data.startswith(b"%PDF-"):
         raise ValueError("not a PDF byte-stream")
-    objects: dict[int, object] | None = None
-    catalog = info = None
-    encrypted = decrypted = False
-    try:
-        objects, trailer, decrypted = _load_via_xref(data, password)
-        resolve = _Resolver(objects)
-        catalog = resolve(trailer.get("Root"))
-        info = resolve(trailer.get("Info"))
-        encrypted = trailer.get("Encrypt") is not None
-    except ValueError:
-        objects = None
-        decrypted = False
-    if not isinstance(catalog, dict):
-        objects, catalog, info = None, None, None
-    if objects is None:
-        objects = _scan_objects(data)
-        for v in list(objects.values()):
-            if isinstance(v, Stream) and str(v.dict.get("Type")) == "ObjStm":
-                try:
-                    _expand_objstm(v, objects)
-                except ValueError:
-                    pass  # tolerate a corrupt ObjStm, keep the rest
-        resolve = _Resolver(objects)
-
-        # --- /Root via trailer keyword, xref-stream dict, or catalog scan ---
-        tpos = data.rfind(b"trailer")
-        if tpos >= 0:
-            try:
-                tdict, _ = _parse_obj(data, tpos + 7)
-            except ValueError:
-                tdict = None
-            if isinstance(tdict, dict):
-                encrypted = encrypted or tdict.get("Encrypt") is not None
-                if tdict.get("Encrypt") is not None:
-                    # scan-path decryption: the earlier blind ObjStm
-                    # expansion saw ciphertext (tolerated); decrypt the
-                    # top-level objects, then re-expand. Unsupported
-                    # handlers raise out of here → recorded failure.
-                    decrypted = _decrypt_all_objects(objects, tdict, password)
-                    for v in list(objects.values()):
-                        if (
-                            isinstance(v, Stream)
-                            and str(v.dict.get("Type")) == "ObjStm"
-                        ):
-                            try:
-                                _expand_objstm(v, objects)
-                            except ValueError:
-                                pass
-                    resolve = _Resolver(objects)
-                try:
-                    catalog = resolve(tdict.get("Root"))
-                    info = resolve(tdict.get("Info"))
-                except ValueError:
-                    catalog, info = None, None
-        if not isinstance(catalog, dict):
-            xstm = next(
-                (
-                    v for v in objects.values()
-                    if isinstance(v, Stream) and str(v.dict.get("Type")) == "XRef"
-                ),
-                None,
-            )
-            if xstm is not None:
-                catalog = resolve(xstm.dict.get("Root"))
-                info = resolve(xstm.dict.get("Info"))
-        if not isinstance(catalog, dict):
-            catalog = next(
-                (
-                    v for v in objects.values()
-                    if isinstance(v, dict) and str(v.get("Type")) == "Catalog"
-                ),
-                None,
-            )
-            info = None
-    if not decrypted:
-        xenc = next(
-            (
-                v.dict
-                for v in objects.values()
-                if isinstance(v, Stream)
-                and str(v.dict.get("Type")) == "XRef"
-                and v.dict.get("Encrypt") is not None
-            ),
-            None,
-        )
-        if xenc is not None:
-            # scan path found an encrypted PDF whose trailer is an xref
-            # STREAM dict — same decrypt-then-re-expand dance
-            encrypted = True
-            decrypted = _decrypt_all_objects(objects, xenc, password)
-            for v in list(objects.values()):
-                if isinstance(v, Stream) and str(v.dict.get("Type")) == "ObjStm":
-                    try:
-                        _expand_objstm(v, objects)
-                    except ValueError:
-                        pass
-            resolve = _Resolver(objects)
-            # the pre-decryption catalog/info values reference the OLD
-            # (ciphertext) copies — re-resolve from the fresh object map
-            try:
-                catalog = resolve(xenc.get("Root")) or catalog
-                info = resolve(xenc.get("Info")) or info
-            except ValueError:
-                pass
-    if encrypted and not decrypted:
-        # unsupported handler / non-empty password — a RECORDED parse
-        # failure (the metrics table counts it) beats silently
-        # extracting ciphertext as garbage glyphs
-        raise ValueError("encrypted PDF: unsupported security handler")
-    if catalog is None:
-        raise ValueError("no /Catalog found in PDF")
+    objects, catalog, info = _open_document(data, password)
+    resolve = _Resolver(objects)
 
     # --- page tree walk with attribute inheritance ---
     page_dicts: list[tuple[int, dict, tuple]] = []  # (objnum, dict, mediabox)

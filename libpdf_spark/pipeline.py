@@ -1,16 +1,21 @@
 """The Spark extraction pipeline.
 
-Lifecycle (SURVEY.md §3.4):
+Lifecycle of :func:`extract_turns` (SURVEY.md §3.4), default
+``salt_stage="output"``:
 
     spark.read(transcripts)                       -- Iceberg/parquet scan
       → select(conv_id, turn_idx, text, tool)     -- explicit column pruning
                                                      BEFORE the UDF (Catalyst
                                                      cannot see inside it)
-      → salted repartition on conv_id             -- long-conversation skew
       → mapInPandas(extract_batch)                -- the whole turn-local DAG,
                                                      Arrow-batched, no
                                                      per-row Python driver code
+      → salted repartition on conv_id             -- long-conversation skew
       → write / orderBy(conv_id, turn_idx)        -- stable output ordering
+
+``salt_stage="input"`` salts before ``mapInPandas`` instead.
+``lineage.run_resumable`` has no salted exchange: its one exchange is
+on ``bucket``, before the write.
 
 Design notes for 100 TB:
 * the UDF is the ONLY Python stage; everything before/after is

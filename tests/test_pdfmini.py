@@ -11,6 +11,10 @@ indirect /Length).
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import itertools
+import re
 import zlib
 
 import pytest
@@ -832,6 +836,172 @@ def test_encrypted_pdf_scan_fallback_decrypts():
     got = parse_pdf(bad)
     assert got["chars"] == plain["chars"]
     assert got["meta"] == plain["meta"]
+
+
+def _corrupt_startxref(data: bytes) -> bytes:
+    return re.sub(rb"startxref\s+\d+", b"startxref\n999999999", data)
+
+
+def _drop_trailer_keyword(data: bytes) -> bytes:
+    return data.replace(b"trailer\n<<", b"trailor\n<<")
+
+
+# byte-level corruptions that route a file to each open path: intact
+# files open through the xref, the other three through the object scan
+OPEN_FORMS = {
+    "intact": lambda d: d,
+    "bad_startxref": _corrupt_startxref,
+    "no_trailer": _drop_trailer_keyword,
+    "both": lambda d: _drop_trailer_keyword(_corrupt_startxref(d)),
+}
+OPEN_SERIALIZATIONS = {
+    "classic": {},
+    "xref_stream": {"xref_stream": True},
+    "rc4": {"encrypt": "rc4"},
+    "aes": {"encrypt": "aes"},
+    "aes256": {"encrypt": "aes256"},
+}
+OPEN_PATH_FAMILIES = ["full_features", "links", "multi_column", "ruled_tables", "word_colors"]
+
+
+@functools.lru_cache(maxsize=None)
+def _open_path_pdfs(serialization: str) -> tuple[bytes, ...]:
+    """Five families × 20 writer keyword sets (compress × cid_font ×
+    form_wrap) in one serialization."""
+    return tuple(
+        write_pdf(FAMILIES[family]().build(), compress=compress, cid_font=cid,
+                  form_wrap=wrap, **OPEN_SERIALIZATIONS[serialization])
+        for family in OPEN_PATH_FAMILIES
+        for compress, cid, wrap in itertools.product(
+            (False, True), (False, True, "ucs2", "rksj", "embedded"), (False, True)
+        )
+    )
+
+
+# md5 over repr(parse_pdf(...)) — or the ValueError text — of every
+# file of _open_path_pdfs, per serialization and open form. Taken
+# before the two open paths became one (_open_document); None marks an
+# encrypted file whose trailer keyword is gone: it must raise.
+OPEN_PATH_DIGESTS = {
+    ("classic", "intact"): "ed0699a852c5bf13ad38781743d08515",
+    ("classic", "bad_startxref"): "ed0699a852c5bf13ad38781743d08515",
+    ("classic", "no_trailer"): "e45af55591b820994a5b055dc598f995",
+    ("classic", "both"): "e45af55591b820994a5b055dc598f995",
+    ("xref_stream", "intact"): "ed0699a852c5bf13ad38781743d08515",
+    ("xref_stream", "bad_startxref"): "ed0699a852c5bf13ad38781743d08515",
+    ("xref_stream", "no_trailer"): "ed0699a852c5bf13ad38781743d08515",
+    ("xref_stream", "both"): "ed0699a852c5bf13ad38781743d08515",
+    ("rc4", "intact"): "ed0699a852c5bf13ad38781743d08515",
+    ("rc4", "bad_startxref"): "ed0699a852c5bf13ad38781743d08515",
+    ("rc4", "no_trailer"): None,
+    ("rc4", "both"): None,
+    ("aes", "intact"): "ed0699a852c5bf13ad38781743d08515",
+    ("aes", "bad_startxref"): "ed0699a852c5bf13ad38781743d08515",
+    ("aes", "no_trailer"): None,
+    ("aes", "both"): None,
+    ("aes256", "intact"): "ed0699a852c5bf13ad38781743d08515",
+    ("aes256", "bad_startxref"): "ed0699a852c5bf13ad38781743d08515",
+    ("aes256", "no_trailer"): None,
+    ("aes256", "both"): None,
+}
+
+
+def _open_path_digest(serialization: str, form: str) -> str:
+    h = hashlib.md5()
+    for data in _open_path_pdfs(serialization):
+        try:
+            h.update(repr(parse_pdf(OPEN_FORMS[form](data))).encode())
+        except ValueError as exc:
+            h.update(f"ValueError: {exc}".encode())
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize(
+    "serialization, form", OPEN_PATH_DIGESTS, ids=["-".join(k) for k in OPEN_PATH_DIGESTS]
+)
+def test_parse_pdf_pinned_on_both_open_paths(serialization, form):
+    """parse_pdf output is pinned on the xref path (intact) and on the
+    object-scan path (corrupt startxref, no trailer keyword, both),
+    so neither candidate nor the decrypt-then-expand order drifts."""
+    digest = OPEN_PATH_DIGESTS[serialization, form]
+    if digest is not None:
+        assert _open_path_digest(serialization, form) == digest
+        return
+    for data in _open_path_pdfs(serialization):
+        with pytest.raises(ValueError, match="^encrypted PDF"):
+            parse_pdf(OPEN_FORMS[form](data))
+
+
+@pytest.mark.parametrize("mode", ["rc4", "aes", "aes256"])
+def test_encrypted_pdf_without_readable_trailer_is_recorded_failure(mode):
+    """An encrypted file whose ``trailer`` keyword is unreadable opens
+    through the object scan, which finds the /Encrypt dictionary but
+    no trailer naming it. That is a recorded failure, never ciphertext
+    parsed as text (uncompressed RC4 and AES-256 files used to yield
+    garbage glyphs, AES-128 ones empty text)."""
+    import pandas as pd
+
+    from libpdf_spark.config import ExtractConfig
+    from libpdf_spark.pipeline import make_extract_batch
+
+    doc = FAMILIES["plain_paragraphs"]().build()
+    data = _drop_trailer_keyword(write_pdf(doc, encrypt=mode))
+    with pytest.raises(ValueError, match="^encrypted PDF"):
+        parse_pdf(data)
+    batch = pd.DataFrame({
+        "conv_id": ["c"],
+        "turn_idx": pd.array([0], dtype="int32"),
+        "text": [embed_pdf(data)],
+        "tool": [None],
+    })
+    out = pd.concat(list(make_extract_batch(DEFAULT_CONFIG)(iter([batch]))))
+    assert len(out) == 1
+    row = out.iloc[0]
+    assert row["doc_found"] and not row["parse_ok"]
+    assert row["error"].startswith("payload: ValueError: encrypted PDF"), row["error"]
+
+
+def _classic_to_xref_stream(data: bytes) -> bytes:
+    """The same objects with the classic xref table and ``trailer``
+    replaced by a ``/Type /XRef`` stream carrying the trailer entries
+    (/Encrypt and /ID included) — an encrypted PDF 1.5-style file,
+    which write_pdf does not produce."""
+    tpos = data.rfind(b"trailer")
+    entries = data[tpos + 7 : data.index(b"startxref", tpos)].strip()[2:-2]
+    body = data[: data.rfind(b"\nxref\n") + 1]
+    offsets = {}
+    for m in re.finditer(rb"(\d+) 0 obj\b", body):
+        offsets.setdefault(int(m.group(1)), m.start())
+    xnum = max(offsets) + 1
+    offsets[xnum] = len(body)
+    rows = b"".join(
+        (b"\x01" + offsets[n].to_bytes(4, "big") + b"\x00\x00")
+        if n in offsets else b"\x00" * 7
+        for n in range(xnum + 1)
+    )
+    raw = zlib.compress(rows)
+    return (
+        body
+        + f"{xnum} 0 obj\n<< /Type /XRef /Size {xnum + 1} /W [1 4 2] ".encode()
+        + re.sub(rb"/Size \d+", b"", entries)
+        + f" /Filter /FlateDecode /Length {len(raw)} >>\nstream\n".encode()
+        + raw + b"\nendstream\nendobj\n"
+        + f"startxref\n{len(body)}\n%%EOF\n".encode()
+    )
+
+
+@pytest.mark.parametrize("mode", ["rc4", "aes", "aes256"])
+def test_encrypted_xref_stream_file_decrypts_on_both_paths(mode):
+    """An encrypted file whose trailer is an XRef stream dictionary
+    decrypts through the xref and, with a corrupt startxref, through
+    the object scan, whose trailer takes /Root, /Info, /Encrypt and
+    /ID from that dictionary."""
+    doc = FAMILIES["full_features"]().build()
+    plain = parse_pdf(write_pdf(doc))
+    data = _classic_to_xref_stream(write_pdf(doc, encrypt=mode))
+    assert b"trailer" not in data and b"/Type /XRef" in data
+    for form in ("intact", "bad_startxref"):
+        assert parse_pdf(OPEN_FORMS[form](data)) == plain, form
 
 
 def test_identity_h_cid_font_roundtrip():
