@@ -2169,7 +2169,11 @@ def test_vertical_writing_mode_identity_v():
         b"<< /Length %d >>\nstream\n%s\nendstream"
         % (len(tounicode), tounicode),
     ]
-    content = b"BT /F1 10 Tf 100 700 Td <010101020103> Tj ET"
+    # second line: Tc adds along the writing direction after every
+    # glyph; Tw does not apply to the two-byte code 0x0020 (§9.3.3),
+    # whose glyph is a space (no box) but still advances
+    content = (b"BT /F1 10 Tf 100 700 Td <010101020103> Tj "
+               b"2 Tc 5 Tw 100 0 Td <0101002001020103> Tj <0101> Tj ET")
     objs[5] = (
         b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content)
     )
@@ -2178,13 +2182,19 @@ def test_vertical_writing_mode_identity_v():
         out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
     out += b"trailer\n<< /Size 8 /Root 1 0 R >>\n%%EOF\n"
     chs = parse_pdf(bytes(out))["chars"]
-    assert chs["text"] == ["日", "本", "語"]
-    # origins descend one em (10 pt) per glyph from the Td point
-    assert chs["y1"] == pytest.approx([700.0, 690.0, 680.0], abs=1e-6)
-    assert chs["y0"] == pytest.approx([690.0, 680.0, 670.0], abs=1e-6)
+    assert chs["text"] == ["日", "本", "語"] * 2 + ["日"]
+    # origins descend one em (10 pt) per glyph from the Td point, then
+    # one em + Tc (12 pt) on the second line; the second Tj starts
+    # below the last glyph's trailing Tc
+    assert chs["y1"] == pytest.approx(
+        [700.0, 690.0, 680.0, 700.0, 676.0, 664.0, 652.0], abs=1e-6)
+    assert chs["y0"] == pytest.approx(
+        [690.0, 680.0, 670.0, 690.0, 666.0, 654.0, 642.0], abs=1e-6)
     # x extent follows /W: two full-width glyphs then a half-width one
-    assert chs["x1"] == pytest.approx([110.0, 110.0, 105.0], abs=1e-6)
-    assert chs["x0"] == pytest.approx([100.0, 100.0, 100.0], abs=1e-6)
+    assert chs["x1"] == pytest.approx(
+        [110.0, 110.0, 105.0, 210.0, 210.0, 205.0, 210.0], abs=1e-6)
+    assert chs["x0"] == pytest.approx(
+        [100.0, 100.0, 100.0, 200.0, 200.0, 200.0, 200.0], abs=1e-6)
 
 
 def test_decode_pdf_string_cyrillic_cp1251_koi8():
@@ -2466,3 +2476,283 @@ def test_runtime_path_does_not_import_writer(tmp_path):
     )
     assert res.returncode == 0, res.stderr[-2000:]
     assert "RUNTIME-OK" in res.stdout
+
+
+# ---------------------------------------------------------------------------
+# glyph placement under rotated and skewed matrices
+# ---------------------------------------------------------------------------
+
+
+def _metered_width(code: int) -> int:
+    return 250 if code == 32 else 400 + (code * 37) % 300
+
+
+def _metered_font_pdf(content: bytes) -> bytes:
+    """One page, one simple font /F1 with explicit /Widths for codes
+    32-126 (``_metered_width``)."""
+    widths = " ".join(str(_metered_width(c)) for c in range(32, 127))
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
+        b"<< /Type /Page /Parent 2 0 R /Resources "
+        b"<< /Font << /F1 4 0 R >> >> /Contents 5 0 R >>",
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Metered /FirstChar 32 "
+        b"/LastChar 126 /Widths [" + widths.encode() + b"] >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    for i, o in enumerate(objs, 1):
+        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
+    out += b"trailer\n<< /Size 6 /Root 1 0 R >>\n%%EOF\n"
+    return bytes(out)
+
+
+def _pdfminer_boxes(tm, ctm, size, tc, tw, tj):
+    """Glyph boxes of one TJ array by pdfminer's model
+    (``PDFTextDevice.render_string_horizontal`` + ``LTChar``, descent
+    and rise 0): a running advance ``x`` through trm = tm·ctm; each
+    glyph's matrix is ``translate_matrix(trm, (x, 0))`` and its box
+    the corners (0, 0) and (advance, size) mapped through it. Tc goes
+    before every glyph but the first, Tw after a code 32, a number
+    moves ``x`` back by number/1000 · size."""
+    def mult(m1, m0):  # pdfminer.utils.mult_matrix
+        a1, b1, c1, d1, e1, f1 = m1
+        a0, b0, c0, d0, e0, f0 = m0
+        return (a0 * a1 + c0 * b1, b0 * a1 + d0 * b1,
+                a0 * c1 + c0 * d1, b0 * c1 + d0 * d1,
+                a0 * e1 + c0 * f1 + e0, b0 * e1 + d0 * f1 + f0)
+
+    def translate(m, x, y):  # pdfminer.utils.translate_matrix
+        a, b, c, d, e, f = m
+        return (a, b, c, d, x * a + y * c + e, x * b + y * d + f)
+
+    def apply(m, x, y):  # pdfminer.utils.apply_matrix_pt
+        a, b, c, d, e, f = m
+        return a * x + c * y + e, b * x + d * y + f
+
+    trm = mult(tm, ctm)
+    x, need_tc, boxes = 0.0, False, []
+    for item in tj:
+        if isinstance(item, (int, float)):
+            x -= item / 1000.0 * size
+            need_tc = True
+            continue
+        for ch in item:
+            if need_tc:
+                x += tc
+            adv = _metered_width(ord(ch)) / 1000.0 * size
+            m = translate(trm, x, 0.0)
+            (x0, y0), (x1, y1) = apply(m, 0.0, 0.0), apply(m, adv, size)
+            if ch != " ":
+                boxes.append((ch, min(x0, x1), min(y0, y1),
+                              max(x0, x1), max(y0, y1)))
+            x += adv
+            if ch == " ":
+                x += tw
+            need_tc = True
+    return boxes
+
+
+_COS30, _SIN30 = 0.8660254037844386, 0.5
+
+
+@pytest.mark.parametrize("tm, ctm", [
+    ((0.0, 1.0, -1.0, 0.0, 300.0, 400.0), (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)),
+    ((_COS30, _SIN30, -_SIN30, _COS30, 100.0, 200.0),
+     (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)),
+    ((1.0, 0.25, 0.4, 1.0, 72.0, 600.0), (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)),
+    ((1.5, 0.0, 0.0, 1.5, 10.0, 20.0), (0.0, -1.0, 1.0, 0.0, 50.0, 700.0)),
+], ids=["tm_90", "tm_30", "tm_skew", "cm_rotate"])
+def test_rotated_and_skewed_glyph_boxes(tm, ctm):
+    """Text under a 90° and a 30° Tm, a skewed Tm and a rotating cm,
+    with Tc, Tw and TJ kerning: every glyph box equals pdfminer's
+    running-advance placement to 1e-9."""
+    size, tc, tw = 11.0, 0.75, 3.5
+    tj = ["Ab", -250, "c d", 120.5, "E f"]
+    num = " ".join(repr(v) for v in tm).encode()
+    cm = " ".join(repr(v) for v in ctm).encode()
+    arr = b" ".join(
+        b"(%s)" % t.encode() if isinstance(t, str) else repr(t).encode()
+        for t in tj
+    )
+    content = (b"q %s cm BT /F1 11 Tf 0.75 Tc 3.5 Tw %s Tm [%s] TJ ET Q"
+               % (cm, num, arr))
+    chs = parse_pdf(_metered_font_pdf(content))["chars"]
+    want = _pdfminer_boxes(tm, ctm, size, tc, tw, tj)
+    assert chs["text"] == [w[0] for w in want]
+    for key, col in (("x0", 1), ("y0", 2), ("x1", 3), ("y1", 4)):
+        assert chs[key] == pytest.approx([w[col] for w in want], abs=1e-9), key
+
+
+def test_rotated_text_follows_one_running_advance():
+    """Under a 90° Tm each glyph's y0 is the show's origin plus the
+    running advance, exactly (the per-glyph text-matrix product read
+    514.4920000000001 for 514.492 here), and the next show operator
+    starts at the previous one's full advance, trailing Tc included
+    (§9.3.2)."""
+    content = (b"BT /F1 12 Tf 1 Tc 0 1 -1 0 300 500 Tm "
+               b"(Rotated text) Tj (s) Tj ET")
+    chs = parse_pdf(_metered_font_pdf(content))["chars"]
+    x, want = 0.0, []
+    for ch in "Rotated text":
+        if ch != " ":
+            want.append(500.0 + x)
+        x += _metered_width(ord(ch)) / 1000.0 * 12 + 1
+    want.append(x + 500.0)  # (s): the text matrix moved by x
+    assert chs["text"] == list("Rotatedtexts")
+    assert chs["y0"] == want
+    assert chs["x0"] == [288.0] * 12 and chs["x1"] == [300.0] * 12
+
+
+# ---------------------------------------------------------------------------
+# extracted text never carries a lone surrogate
+# ---------------------------------------------------------------------------
+
+
+def _surrogate_pdf() -> bytes:
+    """/F1: Identity-H with no /ToUnicode, showing the code 0xD800;
+    /F2: a simple font whose /Differences name /uniD800 and /uD83D."""
+    content = (b"BT /F1 12 Tf 72 700 Td <0048D8000069> Tj "
+               b"/F2 12 Tf 0 -20 Td (AB) Tj ET")
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
+        b"<< /Type /Page /Parent 2 0 R /Resources "
+        b"<< /Font << /F1 4 0 R /F2 5 0 R >> >> /Contents 7 0 R >>",
+        b"<< /Type /Font /Subtype /Type0 /BaseFont /Bare /Encoding "
+        b"/Identity-H /DescendantFonts [6 0 R] >>",
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding "
+        b"<< /Differences [65 /uniD800 /uD83D] >> >>",
+        b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /Bare "
+        b"/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) "
+        b"/Supplement 0 >> /DW 600 >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    for i, o in enumerate(objs, 1):
+        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
+    out += b"trailer\n<< /Size 8 /Root 1 0 R >>\n%%EOF\n"
+    return bytes(out)
+
+
+def test_surrogate_codes_become_replacement_char():
+    """A two-byte code in U+D800-DFFF with no /ToUnicode entry reads
+    U+FFFD (as a lone UTF-16 unit already did); a /Differences glyph
+    name for a surrogate is unknown, so its code falls back to
+    chr(code)."""
+    from libpdf_spark.pdfmini import _glyph_to_char
+
+    assert _glyph_to_char("uniD800") is None
+    assert _glyph_to_char("uD83D") is None
+    assert _glyph_to_char("uniDFFF") is None
+    assert _glyph_to_char("uniFFFD") == "�"
+    chs = parse_pdf(_surrogate_pdf())["chars"]
+    assert chs["text"] == ["H", "�", "i", "A", "B"]
+
+
+# ---------------------------------------------------------------------------
+# bounded font-table expansion
+# ---------------------------------------------------------------------------
+
+
+def _bfrange_bomb_pdf(entries: int = 100) -> bytes:
+    """A simple font whose ~2 KB /ToUnicode CMap repeats the range
+    ``<0000> <D7FF> <0000>``: 55,296 expanded entries each."""
+    cmap = (b"begincmap\n%d beginbfrange\n" % entries
+            + b"<0000> <D7FF> <0000>\n" * entries
+            + b"endbfrange\nendcmap")
+    content = b"BT /F1 12 Tf 72 700 Td (hello) Tj ET"
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
+        b"<< /Type /Page /Parent 2 0 R /Resources "
+        b"<< /Font << /F1 4 0 R >> >> /Contents 6 0 R >>",
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
+        b"/ToUnicode 5 0 R >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(cmap), cmap),
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    for i, o in enumerate(objs, 1):
+        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
+    out += b"trailer\n<< /Size 7 /Root 1 0 R >>\n%%EOF\n"
+    return bytes(out)
+
+
+_BUDGET_CHILD = """
+import sys, time
+
+import pandas as pd
+
+from libpdf_spark.config import ExtractConfig
+from libpdf_spark.payload import embed_pdf
+from libpdf_spark.pipeline import make_extract_batch
+
+data = open(sys.argv[1], "rb").read()
+batch = pd.DataFrame({
+    "conv_id": ["c"], "turn_idx": pd.array([0], dtype="int32"),
+    "text": [embed_pdf(data)], "tool": [None],
+})
+run = make_extract_batch(ExtractConfig())
+t0 = time.perf_counter()
+out = pd.concat(list(run(iter([batch]))))
+print(time.perf_counter() - t0)
+print(len(out), bool(out.iloc[0].doc_found), bool(out.iloc[0].parse_ok))
+print(out.iloc[0].error)
+"""
+
+
+def test_tounicode_range_bomb_is_one_fast_failure_row(tmp_path):
+    """A 2 KB /ToUnicode CMap of 100 full-BMP bfranges (about 10 s of
+    expansion without a bound) ends as one recorded failure row in
+    well under a second, in a fresh interpreter."""
+    import os
+    import subprocess
+    import sys
+
+    data = _bfrange_bomb_pdf()
+    assert len(data) < 3000
+    path = tmp_path / "bomb.pdf"
+    path.write_bytes(data)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    res = subprocess.run(
+        [sys.executable, "-c", _BUDGET_CHILD, str(path)],
+        capture_output=True, text=True, env=env, cwd=str(tmp_path), timeout=120,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    secs, row, error = res.stdout.strip().split("\n")
+    assert row == "1 True False"
+    assert error == ("payload: ValueError: /ToUnicode bfrange expands "
+                     "past 131072 entries"), error
+    assert float(secs) < 1.0, secs
+
+
+def test_cidrange_and_width_ranges_are_bounded():
+    """The embedded-CMap cidrange and /W range expansions share the
+    same budget; past it the document is a recorded failure, which the
+    tolerant per-font fallbacks do not swallow."""
+    from libpdf_spark.pdfmini import (
+        _EXPAND_BUDGET, _parse_cid_widths, _parse_embedded_cmap,
+        _RecordedFailure,
+    )
+
+    ranges = b"<0000> <FFFF> 1\n" * 3
+    cmap = (b"1 begincodespacerange <0000> <FFFF> endcodespacerange\n"
+            b"3 begincidrange\n" + ranges + b"endcidrange")
+    with pytest.raises(_RecordedFailure, match="cidrange expands past"):
+        _parse_embedded_cmap(cmap)
+    _parse_embedded_cmap(cmap.replace(ranges, b"<0000> <FFFF> 1\n" * 2))
+    with pytest.raises(_RecordedFailure, match="/W array expands past"):
+        _parse_cid_widths([0, 65535, 500.0] * 3, lambda v: v)
+    w = _parse_cid_widths([0, 65535, 500.0] * 2, lambda v: v)
+    assert len(w) == 65536 and 2 * 65536 <= _EXPAND_BUDGET
+    # end to end: the /W bomb fails the document instead of
+    # degrading to /DW widths
+    bad = _minimal_type0_pdf(
+        b"1 begincodespacerange <0000> <FFFF> endcodespacerange\n"
+        b"1 begincidrange <0000> <00FF> 0 endcidrange",
+        _tounicode_cmap([(0x41, "A", 2)]), "0 65535 500 " * 3, "0041",
+    )
+    with pytest.raises(ValueError, match="/W array expands past"):
+        parse_pdf(bad)

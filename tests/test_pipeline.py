@@ -411,3 +411,63 @@ def test_password_protected_pdf_turn_e2e(spark):
     without = extract_turns(df, ExtractConfig()).orderBy("turn_idx").toPandas()
     assert not bool(without.iloc[0].parse_ok)
     assert "password" in (without.iloc[0].error or "")
+
+
+def _surrogate_code_pdf() -> bytes:
+    """~600 bytes: an Identity-H font with no /ToUnicode shows the code
+    0xD800, a simple font's /Differences names /uniD800."""
+    content = (b"BT /F1 12 Tf 72 700 Td <0048D8000069> Tj "
+               b"/F2 12 Tf 0 -20 Td (A) Tj ET")
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
+        b"<< /Type /Page /Parent 2 0 R /Resources "
+        b"<< /Font << /F1 4 0 R /F2 5 0 R >> >> /Contents 6 0 R >>",
+        b"<< /Type /Font /Subtype /Type0 /BaseFont /Bare /Encoding "
+        b"/Identity-H /DescendantFonts [<< /Subtype /CIDFontType2 >>] >>",
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding "
+        b"<< /Differences [65 /uniD800] >> >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    for i, o in enumerate(objs, 1):
+        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
+    out += b"trailer\n<< /Size 7 /Root 1 0 R >>\n%%EOF\n"
+    return bytes(out)
+
+
+def test_surrogate_code_turn_does_not_abort_job(spark):
+    """Arrow cannot encode a lone surrogate, so one such glyph in
+    ``extracted_text`` used to fail the task and the whole job. The
+    turn, among good ones, now extracts with U+FFFD."""
+    from libpdf_spark.fixtures import FAMILIES
+    from libpdf_spark.payload import embed_pdf
+    from libpdf_spark.pdfwrite import write_pdf
+
+    good = FAMILIES["plain_paragraphs"]()
+    bad = _surrogate_code_pdf()
+    assert len(bad) < 700
+    rows = pd.DataFrame(
+        {
+            "conv_id": ["s1"] * 3,
+            "turn_idx": pd.array([0, 1, 2], dtype="int32"),
+            "role": ["tool"] * 3,
+            "text": [
+                embed_pdf(write_pdf(good.build()), prefix="first: "),
+                embed_pdf(bad, prefix="second: "),
+                "plain chatter",
+            ],
+            "tool": [None] * 3,
+            "ts": pd.to_datetime(["2026-01-01"] * 3),
+        }
+    )
+    got = extract_turns(spark.createDataFrame(rows), ExtractConfig()).collect()
+    by_turn = {r.turn_idx: r for r in got}
+    assert len(by_turn) == 3
+    assert by_turn[0].parse_ok
+    assert by_turn[0].extracted_text == good.expected_text()
+    assert by_turn[1].parse_ok, by_turn[1].error
+    text = by_turn[1].extracted_text
+    assert "H�i" in text and "A" in text
+    assert not any(0xD800 <= ord(ch) <= 0xDFFF for ch in text)
+    assert not by_turn[2].doc_found
