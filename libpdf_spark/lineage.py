@@ -15,7 +15,9 @@ Design (no custom Catalyst work — idempotent partition overwrites):
 * the write's result stage observes the ``pipeline.BUCKET_SUMS`` of
   each bucket of the chunk (turns, docs, parse failures, elements,
   bytes — the ``pipeline.extraction_metrics`` sums) through
-  ``DataFrame.observe``, so the lineage counts need no read-back;
+  ``DataFrame.observe``, so the lineage counts need no read-back; the
+  sums of all the chunk's buckets are ONE SQL aggregate, so the
+  driver's work per chunk does not grow with its buckets;
 * after the write, the driver appends the chunk's lineage rows (one
   per bucket, with wall time) to ``<out>/lineage`` as ONE parquet
   file, written through the output's Hadoop ``FileSystem`` under a
@@ -167,7 +169,10 @@ def run_resumable(
     committed = []
     for chunk in chunks:
         t0 = time.time()
-        part = bucketed.filter(F.col("bucket").isin(chunk))
+        # the bucket filter and the lineage sums are each ONE SQL
+        # expression, so building a chunk's plan costs the driver the
+        # same few py4j calls whatever the number of buckets in it
+        part = bucketed.filter(F.expr(f"bucket IN ({', '.join(map(str, chunk))})"))
         # unsalted: the bucket exchange below is the only one, and it
         # already decides which task writes each row
         extracted = extract_turns(part, cfg, salted=False).withColumn(
@@ -176,16 +181,19 @@ def run_resumable(
         # the lineage sums of each bucket, observed AFTER the exchange:
         # CollectMetrics then sits in the write's result stage, where
         # each partition's update is merged once (a shuffle-map stage
-        # can be recomputed, and its updates would count twice)
+        # can be recomputed, and its updates would count twice). One
+        # aggregate: per bucket of the chunk, the array of its
+        # BUCKET_SUMS in order
         obs = Observation()
-        sums = [
-            F.sum(F.when(F.col("bucket") == b, F.expr(e))).alias(f"{k}_{b}")
+        sums = ", ".join(
+            "array(" + ", ".join(
+                f"sum(CASE WHEN bucket = {b} THEN {e} END)" for e in BUCKET_SUMS.values()
+            ) + ")"
             for b in chunk
-            for k, e in BUCKET_SUMS.items()
-        ]
+        )
         (
             extracted.repartition("bucket")
-            .observe(obs, *sums)
+            .observe(obs, F.expr(f"array({sums})").alias("sums"))
             .sortWithinPartitions("conv_id", "turn_idx")  # stable ordering
             .write.partitionBy("bucket")
             .mode("overwrite")
@@ -194,12 +202,10 @@ def run_resumable(
         wall = time.time() - t0
 
         # a bucket with no rows observes NULL sums: a lineage row of zeros
-        observed = obs.get
         finished_at = datetime.now(timezone.utc)
         rows = [
-            (b, "done", run_id, *(observed[f"{k}_{b}"] or 0 for k in BUCKET_SUMS),
-             wall, finished_at)
-            for b in chunk
+            (b, "done", run_id, *(v or 0 for v in observed), wall, finished_at)
+            for b, observed in zip(chunk, obs.get["sums"])
         ]
         _append_lineage(spark, output_dir, f"part-{run_id}-{chunk[0]}.parquet", rows)
         committed.append(chunk)

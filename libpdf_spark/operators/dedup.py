@@ -322,65 +322,14 @@ def _sql_minhash_lsh():
 
 
 # --- near-dup clusters (connected components over LSH pairs) -----------------------
-def _cc_propagate(edges, F, max_rounds: int = 64):
-    """Connected components by iterative min-label propagation.
-    ``edges`` is directed BOTH ways (src, dst). Each round is one
-    equi-join on dst + one map-side-combinable min-agg; rounds =
-    graph diameter. Returns ``(labels_df(doc_id, label), rounds)`` —
-    the driver only ever sees a convergence scalar per round."""
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .persist()
-    )
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        neigh = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("dst"), F.col("label").alias("dlabel")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("dlabel").alias("nlabel"))
-        )
-        # localCheckpoint truncates the logical plan each round —
-        # without it the nested-join lineage grows with the round count
-        # and planning itself OOMs on long-diameter graphs
-        new = (
-            labels.join(neigh, labels.doc_id == neigh.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.alias("a")
-            .join(labels.alias("b"), "doc_id")
-            .filter(F.col("a.label") != F.col("b.label"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            return labels, rounds
-    raise RuntimeError(f"connected components did not converge in {max_rounds} rounds")
-
-
 def _cc_alternating_star(edges, F, max_rounds: int = 64):
     """Connected components by ALTERNATING large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14 — public algorithm): each round is two groupBy-min +
     equi-join passes, and convergence takes O(log^2 n) rounds instead
     of graph diameter — the difference between ~5 and ~1000 rounds on
-    the long duplicate chains web corpora produce. Same interface and
-    output as :func:`_cc_propagate`.
+    the long duplicate chains web corpora produce. Same output as plain
+    min-label propagation (the reference in ``tests/test_dedup_unit.py``).
 
     * large-star: per center u over the undirected neighborhood,
       m = min(N(u) ∪ {u}); every neighbor v > u re-points to m.
@@ -489,9 +438,9 @@ def q_dedup_clusters(spark, sf_dir):
     Components come from alternating large/small-star
     (:func:`_cc_alternating_star`, O(log^2 n) rounds — survives the
     long duplicate chains of a web corpus). Plain min-label propagation
-    (:func:`_cc_propagate`, rounds = diameter) gives identical
-    components and is kept as the test reference (a chain fixture,
-    where star converges in a fraction of the rounds).
+    (rounds = diameter, the reference in ``tests/test_dedup_unit.py``)
+    gives identical components; on a chain, star converges in a
+    fraction of the rounds.
 
     Oracle: DuckDB recursive CTE computing transitive min-label
     reachability over the identical pair set.

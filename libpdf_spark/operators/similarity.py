@@ -132,8 +132,8 @@ N_PLANES = 8
 def _plane(i: int, dim: int = 64) -> list[float]:
     """Deterministic pseudo-random hyperplane via a fixed LCG.
 
-    Both engines consume the SAME values: Spark embeds them as column
-    literals and the DuckDB oracle embeds them as list literals, so
+    Both engines consume the SAME values: Spark embeds them as SQL
+    array literals and the DuckDB oracle as list literals, so
     there is no cross-engine RNG to keep in sync — the LCG runs once,
     here, on the driver."""
     vals = []
@@ -160,7 +160,9 @@ def q_ann_lsh_buckets(spark, sf_dir):
     )
     bucket = None
     for i in range(N_PLANES):
-        plane = F.array(*[F.lit(v).cast("long") for v in _plane_q(i)])
+        # one SQL array literal per plane, as in the oracle: 64
+        # ``F.lit`` columns would cost the driver 64 py4j round trips
+        plane = F.expr("array(" + ", ".join(f"{v}L" for v in _plane_q(i)) + ")")
         bit = (_idot(F.col("qe"), plane) > 0).cast("int")
         term = bit * (1 << i)
         bucket = term if bucket is None else bucket + term

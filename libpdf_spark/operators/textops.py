@@ -27,7 +27,7 @@ def q_langid(spark, sf_dir):
     docs = load_parallel(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("w")
     )
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
+    stop_arr = F.expr("array(" + ", ".join(f"'{s}'" for s in STOPWORDS) + ")")
     ratio = F.round(
         F.size(F.filter("w", lambda t: F.array_contains(stop_arr, t)))
         / F.size("w"),

@@ -764,18 +764,21 @@ def decode_pdf_string(raw: bytes) -> str:
 
 
 # ---------------------------------------------------------------------------
-# encryption — standard security handler (PDF 32000 §7.6.2-7.6.3)
+# encryption — standard security handler (PDF 32000 §7.6.2-7.6.3,
+# PDF 32000-2 §7.6.4 for AES-256)
 #
-# Covers the by-far-most-common real-world case: "print-protected"
-# documents whose USER password is empty (RC4 /V 1-2 /R 2-3 and
-# AES-128 /V 4 /R 4 /CFM /AESV2). The reference opens these through
-# pdfminer's PDFStandardSecurityHandler (reference/libpdf/extract.py:96
-# → pdfplumber → pdfminer); here the handler is hand-rolled from the
-# public spec on stdlib hashlib + pure-Python RC4/AES (slow is fine —
-# encrypted documents are rare per batch, and correctness beats speed
-# for a recorded-failure-vs-extraction decision). Anything else
-# (V5/AES-256, non-empty user password, unknown /CFM) remains a
-# RECORDED parse failure, never silent garbage.
+# Opens RC4 (/V 1-2, /R 2-3), AES-128 (/V 4 /R 4, /CFM /AESV2) and
+# AES-256 (/V 5 /R 5-6, /CFM /AESV3) documents by their user or owner
+# password, the empty user password of "print-protected" files
+# included. The reference opens them through pdfminer's
+# PDFStandardSecurityHandler (reference/libpdf/extract.py:96 →
+# pdfplumber → pdfminer); here the handler is hand-rolled from the
+# public spec on stdlib hashlib + pure-Python RC4/AES. A wrong
+# password, another security handler or an unsupported /V, /R or /CFM
+# is a RECORDED parse failure, never silent garbage. The crypto is
+# slow: decryption runs string by string and stream by stream, and the
+# R 6 key derivation (`_hash_2b`) takes ~0.3-0.4 s a call, two calls
+# to open a file by its user password.
 # ---------------------------------------------------------------------------
 
 _PAD = bytes(
@@ -2966,9 +2969,11 @@ def _interpret_content(
                     if isinstance(el, bytes):
                         show_text(el)
                     elif isinstance(el, (int, float)):
-                        tm = _mat_mul(
-                            _translate(-float(el) / 1000.0 * size, 0.0), tm
-                        )
+                        # §9.4.4: the number moves along the writing
+                        # direction, y under a -V font
+                        adj = -float(el) / 1000.0 * size
+                        move = _translate(0.0, adj) if font.vertical else _translate(adj, 0.0)
+                        tm = _mat_mul(move, tm)
             elif op == "rg" and len(operands) >= 3:
                 fill = tuple(float(v) for v in operands[-3:])
             elif op == "g" and operands:

@@ -333,3 +333,58 @@ def test_lineage_append_only_and_crash_safe(spark, corpus_df):
     assert data.count() == len(transcripts)
     assert data.select("conv_id", "turn_idx").distinct().count() == len(transcripts)
     _assert_lineage_matches_data(spark, out, 8)
+
+
+def _py4j_commands(fn) -> int:
+    """The py4j commands ``fn`` sends to the JVM from this thread. py4j's
+    finalizer thread releases Java objects of earlier garbage (one
+    command each) whenever the collector frees them; those are not
+    counted."""
+    import threading
+
+    import py4j.clientserver as cs
+
+    send = cs.ClientServerConnection.send_command
+    caller = threading.get_ident()
+    n = 0
+
+    def counting(self, command):
+        nonlocal n
+        n += threading.get_ident() == caller
+        return send(self, command)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        fn()
+    finally:
+        cs.ClientServerConnection.send_command = send
+    return n
+
+
+def test_driver_commands_per_chunk_do_not_grow_with_its_buckets(spark, corpus_df):
+    """Building a chunk's plan costs the driver the same py4j round
+    trips whatever the number of buckets in the chunk: one bucket
+    filter and one observed aggregate, not one column per bucket."""
+    df, _, _ = corpus_df
+    out = OUT + "_py4j"
+    counts = {}
+    for chunk_size in (2, 8, 2, 8):  # the first run of each size warms up
+        shutil.rmtree(out, ignore_errors=True)
+        counts[chunk_size] = _py4j_commands(lambda: run_resumable(
+            spark, df, out, ExtractConfig(), n_buckets=8, chunk_size=chunk_size,
+            max_chunks=1))
+        assert completed_buckets(spark, out) == set(range(chunk_size))
+    assert counts[8] <= 1.2 * counts[2], counts
+
+
+def test_one_chunk_of_64_buckets(spark, corpus_df):
+    """One chunk of 64 buckets observes 320 sums in one expression; the
+    lineage still reconciles with the data, zeros for empty buckets."""
+    df, transcripts, _ = corpus_df
+    out = OUT + "_64"
+    shutil.rmtree(out, ignore_errors=True)
+    r = run_resumable(spark, df, out, ExtractConfig(), n_buckets=64, chunk_size=64)
+    assert r["committed_chunks"] == [list(range(64))] and r["remaining"] == []
+    lin = read_lineage(spark, out).toPandas()
+    assert lin.n_turns.sum() == len(transcripts) and lin.n_parse_failures.sum() == 1
+    _assert_lineage_matches_data(spark, out, 64)

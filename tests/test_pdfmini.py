@@ -2144,10 +2144,15 @@ def test_type3_font_glyph_space_widths():
     assert chs["x1"] == pytest.approx([106.0, 115.0], abs=1e-6)
 
 
-def test_vertical_writing_mode_identity_v():
-    """-V CMaps (r6): glyph origins advance DOWNWARD one em per glyph
-    (/DW2 default), boxes span the horizontal /W extent; previously
-    -V text was laid out horizontally. Identity-V with /ToUnicode."""
+# /W extents of the Identity-V test font: two full-width glyphs, then
+# a half-width one
+_IDENTITY_V_WIDTHS = {0x0101: 1000, 0x0102: 1000, 0x0103: 500}
+
+
+def _identity_v_pdf(content: bytes) -> bytes:
+    """One page drawing ``content`` with /F1 = an Identity-V Type0 font
+    (/DW2 default displacement, /W from ``_IDENTITY_V_WIDTHS``) whose
+    /ToUnicode maps 0101-0103 to 日本語."""
     tounicode = _tounicode_cmap(
         [(0x0101, "日", 2), (0x0102, "本", 2), (0x0103, "語", 2)]
     )
@@ -2165,23 +2170,53 @@ def test_vertical_writing_mode_identity_v():
         b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /V "
         b"/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) "
         b"/Supplement 0 >> /DW 1000 /W [257 [1000] 258 [1000] 259 [500]] >>",
-        b"",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
         b"<< /Length %d >>\nstream\n%s\nendstream"
         % (len(tounicode), tounicode),
     ]
+    out = bytearray(b"%PDF-1.4\n")
+    for i, o in enumerate(objs, 1):
+        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
+    out += b"trailer\n<< /Size 8 /Root 1 0 R >>\n%%EOF\n"
+    return bytes(out)
+
+
+def _pdfminer_vertical_boxes(tm, size, tj):
+    """Glyph boxes of one TJ array in an Identity-V font, Tc = Tw = 0.
+    The glyph origins follow pdfminer's
+    ``PDFTextDevice.render_string_vertical``: a running ``y`` through
+    the text matrix, moved by each glyph's vertical displacement (the
+    /DW2 default, -1 em) and by -number/1000 · size for a number
+    (PDF 32000 §9.4.4: ty = (w1 − Tj/1000) × Tfs). Around its origin
+    each box spans the parser's -V extent: the /W width to the right,
+    one em down."""
+    def apply(m, x, y):  # pdfminer.utils.apply_matrix_pt
+        a, b, c, d, e, f = m
+        return a * x + c * y + e, b * x + d * y + f
+
+    y, boxes = 0.0, []
+    for item in tj:
+        if isinstance(item, (int, float)):
+            y -= item / 1000.0 * size
+            continue
+        for hi, lo in zip(item[::2], item[1::2]):
+            w = _IDENTITY_V_WIDTHS[hi << 8 | lo] / 1000.0 * size
+            (x0, y0), (x1, y1) = apply(tm, 0.0, y - size), apply(tm, w, y)
+            boxes.append((min(x0, x1), min(y0, y1), max(x0, x1), max(y0, y1)))
+            y -= size
+    return boxes
+
+
+def test_vertical_writing_mode_identity_v():
+    """-V CMaps (r6): glyph origins advance DOWNWARD one em per glyph
+    (/DW2 default), boxes span the horizontal /W extent; previously
+    -V text was laid out horizontally. Identity-V with /ToUnicode."""
     # second line: Tc adds along the writing direction after every
     # glyph; Tw does not apply to the two-byte code 0x0020 (§9.3.3),
     # whose glyph is a space (no box) but still advances
     content = (b"BT /F1 10 Tf 100 700 Td <010101020103> Tj "
                b"2 Tc 5 Tw 100 0 Td <0101002001020103> Tj <0101> Tj ET")
-    objs[5] = (
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content)
-    )
-    out = bytearray(b"%PDF-1.4\n")
-    for i, o in enumerate(objs, 1):
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    out += b"trailer\n<< /Size 8 /Root 1 0 R >>\n%%EOF\n"
-    chs = parse_pdf(bytes(out))["chars"]
+    chs = parse_pdf(_identity_v_pdf(content))["chars"]
     assert chs["text"] == ["日", "本", "語"] * 2 + ["日"]
     # origins descend one em (10 pt) per glyph from the Td point, then
     # one em + Tc (12 pt) on the second line; the second Tj starts
@@ -2195,6 +2230,25 @@ def test_vertical_writing_mode_identity_v():
         [110.0, 110.0, 105.0, 210.0, 210.0, 205.0, 210.0], abs=1e-6)
     assert chs["x0"] == pytest.approx(
         [100.0, 100.0, 100.0, 200.0, 200.0, 200.0, 200.0], abs=1e-6)
+
+    # a TJ number moves along the vertical writing direction (y), not
+    # x: -1000 moves the origin back UP one em; a following Tj
+    # continues from where the TJ left the origin. Unrotated, then
+    # under a 90° Tm, where "down the column" maps to +x
+    tj = [b"\x01\x01", -1000, b"\x01\x02", 500, b"\x01\x03\x01\x01", -250, b"\x01\x02"]
+    for tm, place in (((1.0, 0.0, 0.0, 1.0, 100.0, 700.0), b"100 700 Td"),
+                      ((0.0, 1.0, -1.0, 0.0, 300.0, 400.0), b"0 1 -1 0 300 400 Tm")):
+        content = (b"BT /F1 10 Tf " + place + b" [<0101> -1000 <0102> 500 <01030101>"
+                   b" -250] TJ <0102> Tj ET")
+        chs = parse_pdf(_identity_v_pdf(content))["chars"]
+        assert chs["text"] == ["日", "本", "語", "日", "本"]
+        got = list(zip(chs["x0"], chs["y0"], chs["x1"], chs["y1"]))
+        want = _pdfminer_vertical_boxes(tm, 10.0, tj)
+        assert got == [pytest.approx(b, abs=1e-9) for b in want], (place, got)
+        if place == b"100 700 Td":
+            # the second glyph back on the first one's box, not one em
+            # to the right of the column
+            assert got[1] == pytest.approx((100.0, 690.0, 110.0, 700.0), abs=1e-9)
 
 
 def test_decode_pdf_string_cyrillic_cp1251_koi8():
