@@ -4,11 +4,14 @@ The north star's turns carry "embedded PDF byte-streams or serialized
 layout markup". The markup path is primary; this module closes the
 byte-stream loop so the extraction kernel runs unchanged on true PDFs.
 :func:`parse_pdf` loads objects through the cross-reference data
-(a sequential object scan when that is unreadable), with a real PDF
-object parser (dicts/arrays/strings/names/refs/streams) and a
-content-stream interpreter (graphics + text state machines, CTM and
-text-matrix tracking, per-font /Widths) that recovers the SAME
-layout-payload dict the markup path produces.
+(a sequential object scan when that is unreadable) and replays each
+page's content stream (graphics + text state machines, CTM and
+text-matrix tracking, per-font /Widths) into the SAME layout-payload
+dict the markup path produces. One tokenizer, :func:`_token`, lexes
+every PDF syntax read here, as pdfminer's PSBaseParser does; three
+readers sit on it: :func:`_parse_obj` (objects, on an explicit
+stack), :func:`_operations` (content streams and CMaps) and
+:func:`_read_cmap`.
 
 This module is the parser only: it is what runs at extraction time.
 The test-data writer, ``write_pdf``, lives in :mod:`libpdf_spark.pdfwrite`
@@ -35,6 +38,7 @@ import hashlib
 import re
 import zlib
 from dataclasses import dataclass
+from typing import NamedTuple
 
 # Work bound for every table the parser expands from a range entry
 # (TrueType cmap segments, /ToUnicode bfrange, embedded-CMap cidrange,
@@ -1293,158 +1297,219 @@ class Stream:
     raw: bytes
 
 
-_WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
-_REF_RE = re.compile(rb"(\d+)\s+(\d+)\s+R(?![A-Za-z0-9_])")
-_NAME_RE = re.compile(rb"/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)")
-_OP_RE = re.compile(rb"[A-Za-z'\"*]+")
+# ---------------------------------------------------------------------------
+# the tokenizer (pdfminer's PSBaseParser): one compiled pattern for every
+# PDF syntax read here — object bodies, content streams and CMaps
+# ---------------------------------------------------------------------------
+
+_NUMBER, _KEYWORD, _NAME, _STRING, _OPEN, _CLOSE, _OTHER = range(1, 8)
+
+_TOKEN_RE = re.compile(
+    rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"  # whitespace and comments
+    rb"(?:([+-]?(?:\d+\.?\d*|\.\d+))"  # _NUMBER
+    rb"|([A-Za-z'\"*]+)"  # _KEYWORD
+    rb"|(/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # _NAME
+    rb"|(\([^()\\]*\)|\(|<[^<>]*>)"  # _STRING: literal (plain or not), hex (no "<" inside: linear)
+    rb"|(<<|\[)"  # _OPEN
+    rb"|(>>|\])"  # _CLOSE
+    rb"|(.))?",  # _OTHER: any other byte, e.g. a "<" no ">" closes
+    re.S,
+)
+_LIT_SPECIAL_RE = re.compile(rb"[()\\]")
+_ESCAPE_RE = re.compile(rb"\\([0-7]{1,3}|\r\n|.)", re.S)
+_ESCAPES = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
+            b"\r\n": b"", b"\r": b"", b"\n": b""}  # the last three: line continuations
+_NAME_ESCAPE_RE = re.compile(rb"#([0-9A-Fa-f]{2})")
+_NON_HEX_RE = re.compile(rb"[^0-9A-Fa-f]")
 
 
-def _skip_ws(data: bytes, i: int) -> int:
-    n = len(data)
-    while i < n:
-        c = data[i]
-        if c in _WS:
-            i += 1
-        elif c == 0x25:  # % comment
-            while i < n and data[i] not in (0x0D, 0x0A):
-                i += 1
-        else:
-            break
-    return i
+def _unescape(m: re.Match) -> bytes:
+    c = m.group(1)
+    if 0x30 <= c[0] <= 0x37:  # octal, up to 3 digits
+        return bytes([int(c, 8) & 0xFF])
+    return _ESCAPES.get(c, c)
 
 
-def _parse_name(data: bytes, i: int):
-    m = _NAME_RE.match(data, i)
-    raw = m.group(1)
-    # #xx hex escapes in names
-    if b"#" in raw:
-        raw = re.sub(
-            rb"#([0-9A-Fa-f]{2})", lambda g: bytes([int(g.group(1), 16)]), raw
-        )
-    try:
-        return Name(raw.decode("utf-8")), m.end()
-    except UnicodeDecodeError:
-        return Name(raw.decode("latin-1")), m.end()
-
-
-def _parse_lit_string(data: bytes, i: int):
-    i += 1  # past (
-    out = bytearray()
-    depth = 1
-    n = len(data)
-    while i < n:
-        c = data[i]
+def _literal_string(data: bytes, i: int) -> tuple[bytes, int]:
+    """The literal string whose body starts at ``i`` (past its "(")
+    → (bytes, end): balanced parentheses nest, a backslash escapes the
+    next byte. One forward pass; an unterminated string raises
+    ``ValueError`` once it reaches the end of the data."""
+    depth, j = 1, i
+    while True:
+        m = _LIT_SPECIAL_RE.search(data, j)
+        if m is None:
+            raise ValueError("unterminated PDF string")
+        j = m.end()
+        c = data[j - 1]
         if c == 0x5C:  # backslash
-            if i + 1 >= n:
-                break
-            nxt = data[i + 1]
-            if nxt in b"nrtbf":
-                out.append({0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}[nxt])
-                i += 2
-            elif nxt in b"()\\":
-                out.append(nxt)
-                i += 2
-            elif 0x30 <= nxt <= 0x37:  # octal, up to 3 digits
-                j = i + 1
-                while j < n and j < i + 4 and 0x30 <= data[j] <= 0x37:
-                    j += 1
-                out.append(int(data[i + 1 : j], 8) & 0xFF)
-                i = j
-            elif nxt in (0x0D, 0x0A):  # line continuation
-                i += 2
-                if nxt == 0x0D and i < n and data[i] == 0x0A:
-                    i += 1
-            else:
-                out.append(nxt)
-                i += 2
+            j += 1
         elif c == 0x28:
             depth += 1
-            out.append(c)
-            i += 1
-        elif c == 0x29:
+        else:
             depth -= 1
             if depth == 0:
-                return bytes(out), i + 1
-            out.append(c)
-            i += 1
-        else:
-            out.append(c)
-            i += 1
-    raise ValueError("unterminated PDF string")
+                body = data[i : j - 1]
+                if b"\\" in body:
+                    body = _ESCAPE_RE.sub(_unescape, body)
+                return body, j
 
 
-def _parse_hex_string(data: bytes, i: int):
-    j = data.find(b">", i + 1)
-    if j < 0:
-        raise ValueError("unterminated hex string")
-    hx = re.sub(rb"[^0-9A-Fa-f]", b"", data[i + 1 : j])
-    if len(hx) % 2:
-        hx += b"0"
-    return bytes.fromhex(hx.decode("ascii")), j + 1
+def _token(data: bytes, i: int) -> tuple:
+    """The next token at or after ``i``, past whitespace and comments →
+    (kind, value, start, end); kind is None at the end of the data.
+    Values: int or float (_NUMBER), str (_KEYWORD: operators,
+    ``true``, ``R``, ``obj``, CMap keywords …), :class:`Name` with its
+    #xx escapes decoded, bytes (_STRING, literal or hex), else the
+    delimiter bytes. An unterminated literal string raises
+    ``ValueError``."""
+    m = _TOKEN_RE.match(data, i)
+    k = m.lastindex
+    e = m.end()
+    if k is None:
+        return None, None, e, e
+    t, s = m.group(k), m.start(k)
+    if k == _NUMBER:
+        return k, (float(t) if b"." in t else int(t)), s, e
+    if k == _KEYWORD:
+        return k, t.decode("latin-1"), s, e
+    if k == _NAME:
+        raw = t[1:]
+        if b"#" in raw:
+            raw = _NAME_ESCAPE_RE.sub(lambda g: bytes([int(g.group(1), 16)]), raw)
+        try:
+            return k, Name(raw.decode("utf-8")), s, e
+        except UnicodeDecodeError:
+            return k, Name(raw.decode("latin-1")), s, e
+    if k == _STRING:
+        if t[0] == 0x3C:  # <hex>: non-hex bytes skipped, odd digit count padded
+            hx = _NON_HEX_RE.sub(b"", t[1:-1])
+            return k, bytes.fromhex((hx + b"0" * (len(hx) % 2)).decode("ascii")), s, e
+        if len(t) > 1:
+            return k, t[1:-1], s, e
+        v, e = _literal_string(data, e)
+        return k, v, s, e
+    return k, t, s, e
 
 
-def _parse_obj(data: bytes, i: int, refs: bool = True):
+# Deeper nesting fails its object: no well-formed file comes near it,
+# and it bounds every walk over a parsed value (decryption recurses).
+_MAX_DEPTH = 256
+_CONSTANTS = {"true": True, "false": False, "null": None}
+
+
+class _Malformed(ValueError):
+    """A malformed object. ``values`` are the complete values inside
+    the containers still open, in order; ``pos`` is where the offending
+    token starts. :func:`_operations` keeps the one and resumes at the
+    other, dropping only the unclosed brackets."""
+
+    def __init__(self, msg: str, stack: list, pos: int):
+        super().__init__(msg)
+        self.values = [v for _, items in stack for v in items]
+        self.pos = pos
+
+
+def _parse_obj(data: bytes, i: int):
     """One PDF object at ``i`` → (value, next_pos). Strings are bytes,
-    names are :class:`Name`, refs are :class:`Ref`. ``refs=False``
-    skips the "N G R" lookahead — content streams contain no indirect
-    references, and the extra regex per number dominates hot parses."""
-    i = _skip_ws(data, i)
-    if i >= len(data):
-        raise ValueError("unexpected end of PDF data")
-    c = data[i : i + 1]
-    if c == b"<":
-        if data[i : i + 2] == b"<<":
-            return _parse_dict(data, i)
-        return _parse_hex_string(data, i)
-    if c == b"(":
-        return _parse_lit_string(data, i)
-    if c == b"/":
-        return _parse_name(data, i)
-    if c == b"[":
-        i += 1
-        arr: list = []
-        while True:
-            i = _skip_ws(data, i)
-            if i >= len(data):
-                raise ValueError("unterminated array")
-            if data[i : i + 1] == b"]":
-                return arr, i + 1
-            v, i = _parse_obj(data, i, refs)
-            arr.append(v)
-    if data[i : i + 4] == b"true":
-        return True, i + 4
-    if data[i : i + 5] == b"false":
-        return False, i + 5
-    if data[i : i + 4] == b"null":
-        return None, i + 4
-    if refs:
-        m = _REF_RE.match(data, i)
-        if m:
-            return Ref(int(m.group(1))), m.end()
-    m = _NUM_RE.match(data, i)
-    if m:
-        s = m.group(0)
-        return (float(s) if b"." in s else int(s)), m.end()
-    raise ValueError(f"bad PDF object at offset {i}")
-
-
-def _parse_dict(data: bytes, i: int):
-    i += 2  # past <<
-    out: dict = {}
+    names are :class:`Name`, dict keys are str, and ``N G R`` is a
+    :class:`Ref`, read back from the ``R`` keyword. Arrays and dicts
+    nest on an explicit stack, so no input can exhaust the Python
+    stack; past ``_MAX_DEPTH`` the object is malformed."""
+    stack: list[tuple[bytes, list]] = []  # open containers: (opener, items)
     while True:
-        i = _skip_ws(data, i)
-        if i >= len(data):
-            raise ValueError("unterminated dict")
-        if data[i : i + 2] == b">>":
-            return out, i + 2
-        if data[i : i + 1] != b"/":
-            raise ValueError(f"bad dict key at offset {i}")
-        key, i = _parse_name(data, i)
-        val, i = _parse_obj(data, i)
-        out[str(key)] = val
-    # unreachable
+        kind, v, s, i = _token(data, i)
+        opener, top = stack[-1] if stack else (None, None)
+        if kind == _OPEN:
+            if len(stack) == _MAX_DEPTH:
+                raise _Malformed(
+                    f"PDF object nested deeper than {_MAX_DEPTH} at offset {s}",
+                    stack, s,
+                )
+            stack.append((v, []))
+            continue
+        if kind == _CLOSE:
+            if v == b"]" and opener == b"[":
+                v = top
+            elif v == b">>" and opener == b"<<" and not len(top) % 2:
+                if not all(isinstance(key, Name) for key in top[0::2]):
+                    raise _Malformed(f"bad dict key at offset {s}", stack, s)
+                v = {str(key): val for key, val in zip(top[0::2], top[1::2])}
+            else:
+                raise _Malformed(f"bad PDF object at offset {s}", stack, s)
+            stack.pop()
+            top = stack[-1][1] if stack else None
+        elif kind == _KEYWORD:
+            if (
+                v == "R" and top is not None and len(top) >= 2
+                and type(top[-1]) is int and type(top[-2]) is int
+            ):
+                top[-2:] = [Ref(top[-2])]
+                continue
+            if v not in _CONSTANTS:
+                raise _Malformed(f"bad PDF object at offset {s}", stack, s)
+            v = _CONSTANTS[v]
+        elif kind == _OTHER:
+            raise _Malformed(
+                "unterminated hex string" if v == b"<"
+                else f"bad PDF object at offset {s}", stack, s,
+            )
+        elif kind is None:
+            msg = "unexpected end of PDF data"
+            if opener == b"[":
+                msg = "unterminated array"
+            elif opener == b"<<" and not len(top) % 2:
+                msg = "unterminated dict"
+            raise _Malformed(msg, stack, s)
+        if top is not None:
+            top.append(v)
+            continue
+        if type(v) is int:  # a top-level "N G R": two tokens ahead
+            try:
+                k2, gen, _, j = _token(data, i)
+                k3, r, _, j = _token(data, j)
+                if k2 == _NUMBER and type(gen) is int and k3 == _KEYWORD and r == "R":
+                    return Ref(v), j
+            except ValueError:
+                pass
+        return v, i
+
+
+def _operations(data: bytes):
+    """A content stream or CMap → (operator, operands) pairs, pdfminer's
+    PSStackParser over :func:`_token`: every keyword outside brackets is
+    an operator and takes the values read since the one before.
+
+    Malformed input never stops the reader but at two points. A
+    bracket that cannot close (a keyword, a wrong closer or the end of
+    the data inside it) is dropped and the values inside it stay
+    operands; an unterminated literal string ends the stream, as
+    pdfminer reads it to the end of the data. ``BI`` skips an inline
+    image up to ``EI`` and is reported as ``__inline_image__``."""
+    operands: list = []
+    i = 0
+    while True:
+        try:
+            kind, v, s, i = _token(data, i)
+            if kind == _OPEN:
+                v, i = _parse_obj(data, s)
+        except _Malformed as exc:
+            operands += exc.values
+            i = exc.pos
+            continue
+        except ValueError:
+            return
+        if kind == _KEYWORD:
+            if v == "BI":
+                e = data.find(b"EI", i)
+                i = len(data) if e < 0 else e + 2
+                v = "__inline_image__"
+            yield v, operands
+            operands = []
+        elif kind is None:
+            return
+        elif kind != _CLOSE and kind != _OTHER:
+            operands.append(v)
 
 
 _OBJ_HEADER_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
@@ -1454,9 +1519,9 @@ def _parse_body_at(data: bytes, i: int):
     """Parse one object body starting just past its ``N G obj`` header;
     returns (value-or-Stream, end offset)."""
     val, j = _parse_obj(data, i)
-    j2 = _skip_ws(data, j)
-    if isinstance(val, dict) and data[j2 : j2 + 6] == b"stream":
-        s = j2 + 6
+    m = _TOKEN_RE.match(data, j)  # the next token, not decoded
+    if isinstance(val, dict) and (m.group(_KEYWORD) or b"").startswith(b"stream"):
+        s = m.start(_KEYWORD) + 6
         if data[s : s + 2] == b"\r\n":
             s += 2
         elif data[s : s + 1] == b"\n":
@@ -1478,8 +1543,7 @@ def _parse_body_at(data: bytes, i: int):
 def _parse_indirect_at(data: bytes, pos: int):
     """Parse the indirect object whose ``N G obj`` header sits at
     ``pos`` (modulo leading whitespace); returns (num, value)."""
-    i = _skip_ws(data, pos)
-    m = _OBJ_HEADER_RE.match(data, i)
+    m = _OBJ_HEADER_RE.match(data, _token(data, pos)[2])
     if not m:
         raise ValueError(f"no object header at offset {pos}")
     val, _ = _parse_body_at(data, m.end())
@@ -1568,14 +1632,13 @@ def _load_via_xref(data: bytes) -> tuple[dict[int, object], dict, list[int]]:
     seen: set[int] = set()
     while 0 <= pos < len(data) and pos not in seen:
         seen.add(pos)
-        i = _skip_ws(data, pos)
-        if data[i : i + 4] == b"xref":
-            i += 4
+        _, word, _, i = _token(data, pos)
+        if word == "xref":
             while True:
-                i = _skip_ws(data, i)
-                if data[i : i + 7] == b"trailer":
+                _, word, s, e = _token(data, i)
+                if word == "trailer":
                     break
-                ms = _XREF_SUBSEC_RE.match(data, i)
+                ms = _XREF_SUBSEC_RE.match(data, s)
                 if not ms:
                     raise ValueError("bad xref subsection header")
                 start, count = int(ms.group(1)), int(ms.group(2))
@@ -1589,7 +1652,7 @@ def _load_via_xref(data: bytes) -> tuple[dict[int, object], dict, list[int]]:
                         start + k, (typ, int(me.group(1)), int(me.group(2)))
                     )
                     i = me.end()
-            tdict, _ = _parse_obj(data, i + 7)
+            tdict, _ = _parse_obj(data, e)
             if not isinstance(tdict, dict):
                 raise ValueError("trailer is not a dictionary")
             # hybrid-reference file (PDF 32000 §7.5.8.4): the classic
@@ -1985,40 +2048,6 @@ class _Resolver:
         return v
 
 
-def _content_tokens(data: bytes):
-    i, n = 0, len(data)
-    while True:
-        i = _skip_ws(data, i)
-        if i >= n:
-            return
-        c = data[i]
-        if c in b"(<[/" or 0x30 <= c <= 0x39 or c in b"+-.":
-            try:
-                v, i = _parse_obj(data, i, refs=False)
-            except ValueError:
-                i += 1
-                continue
-            yield ("obj", v)
-        else:
-            m = _OP_RE.match(data, i)
-            if not m:
-                i += 1
-                continue
-            op = m.group(0).decode("latin-1")
-            i = m.end()
-            if op == "BI":  # inline image (foreign PDFs): skip the
-                # parameter dict + binary payload, but surface the
-                # image as an operator so the interpreter can record a
-                # figure at the current CTM (pdfminer emits an LTImage
-                # for inline images; the reference turns those into
-                # figures via extract.py's image pass)
-                e = data.find(b"EI", i)
-                i = n if e < 0 else e + 2
-                yield ("op", "__inline_image__")
-                continue
-            yield ("op", op)
-
-
 _AGL_CACHE: dict[str, str] | None = None
 
 
@@ -2176,118 +2205,105 @@ def _parse_font_encoding(enc, resolve) -> dict[int, str] | None:
     return base
 
 
-_BFCHAR_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.S)
-_BFRANGE_RE = re.compile(rb"beginbfrange(.*?)endbfrange", re.S)
-_HEX_RE = re.compile(rb"<([0-9A-Fa-f]+)>")
-_BFRANGE_ENTRY_RE = re.compile(
-    rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*(\[[^\]]*\]|<[0-9A-Fa-f]+>)"
-)
+class _CMap(NamedTuple):
+    """What :func:`_read_cmap` reads from a CMap stream."""
+
+    text: dict[int, str]  # /ToUnicode: code → text (bfchar, bfrange)
+    cids: dict[int, int]  # /Encoding: code → CID (cidrange, cidchar)
+    codespace: list[list[bytes]]  # the strings of each codespacerange
+    usecmap: str | None  # the first ``/Name usecmap`` base
 
 
-def _utf16be(hexs: bytes) -> str:
-    return bytes.fromhex(hexs.decode("ascii")).decode("utf-16-be")
-
-
-def _parse_cmap(data: bytes) -> dict[int, str]:
-    """/ToUnicode CMap → {char code: unicode string} (PDF 32000 §9.10.3:
-    bfchar pairs, bfrange with incrementing scalar or explicit array).
-    Sources of any byte width parse to integer codes, so both simple
-    single-byte fonts and 2-byte composite (Identity-H) fonts are
-    covered; multi-char destinations (ligatures) are preserved."""
-    out: dict[int, str] = {}
-    left = _EXPAND_BUDGET
-    for m in _BFCHAR_RE.finditer(data):
-        toks = _HEX_RE.findall(m.group(1))
-        for src, dst in zip(toks[0::2], toks[1::2]):
-            out[int(src, 16)] = _utf16be(dst)
-    for m in _BFRANGE_RE.finditer(data):
-        for em in _BFRANGE_ENTRY_RE.finditer(m.group(1)):
-            lo, hi = int(em.group(1), 16), int(em.group(2), 16)
-            dst = em.group(3)
-            if dst.startswith(b"["):
-                for k, dh in enumerate(_HEX_RE.findall(dst)):
-                    if lo + k <= hi:
-                        out[lo + k] = _utf16be(dh)
-            else:
-                width = len(dst) - 2  # hex digits
-                base = int(dst[1:-1], 16)
-                left = _spend(left, hi - lo + 1, "/ToUnicode bfrange")
+def _read_cmap(data: bytes) -> _CMap:
+    """A CMap stream (PDF 32000 §9.7.5, §9.10.3) → :class:`_CMap`. Acts
+    on the ``end…`` and ``usecmap`` operators of :func:`_operations`
+    in stream order, as pdfminer's CMapParser: bfchar ``<code> <text>``
+    pairs (a ligature text stays whole), bfrange ``<lo> <hi>`` with an
+    incrementing text or an array of texts, cidrange ``<lo> <hi> cid0``
+    runs, cidchar ``<code> cid`` pairs. Codes of any byte width read as
+    integers; texts are UTF-16BE. The codespace is kept as read: only
+    the /Encoding side (:func:`_cid_encoding`) checks it, so a
+    /ToUnicode CMap with a bad one still maps. An entry of the wrong
+    shape is skipped; an undecodable text or a malformed cidrange
+    raises ``ValueError``; range expansion is charged to
+    ``_EXPAND_BUDGET`` per table."""
+    text: dict[int, str] = {}
+    cids: dict[int, int] = {}
+    codespace: list[list[bytes]] = []
+    use = None
+    text_left = cid_left = _EXPAND_BUDGET
+    for op, args in _operations(data):
+        if op == "endbfchar":
+            for src, dst in zip(args[0::2], args[1::2]):
+                if isinstance(src, bytes) and isinstance(dst, bytes):
+                    text[int.from_bytes(src, "big")] = dst.decode("utf-16-be")
+        elif op == "endbfrange":
+            for lo, hi, dst in zip(args[0::3], args[1::3], args[2::3]):
+                if not (isinstance(lo, bytes) and isinstance(hi, bytes)):
+                    continue
+                lo, hi = int.from_bytes(lo, "big"), int.from_bytes(hi, "big")
+                if isinstance(dst, list):
+                    dsts = [d for d in dst if isinstance(d, bytes)]
+                    for k, d in enumerate(dsts[: max(hi - lo + 1, 0)]):
+                        text[lo + k] = d.decode("utf-16-be")
+                elif isinstance(dst, bytes):
+                    text_left = _spend(text_left, hi - lo + 1, "/ToUnicode bfrange")
+                    base, digits = int.from_bytes(dst, "big"), 2 * len(dst)
+                    for k in range(hi - lo + 1):
+                        text[lo + k] = bytes.fromhex(
+                            format(base + k, f"0{digits}x")
+                        ).decode("utf-16-be")
+        elif op == "endcidrange":
+            for lo, hi, cid in zip(args[0::3], args[1::3], args[2::3]):
+                if not (isinstance(lo, bytes) and isinstance(hi, bytes)
+                        and type(cid) is int):
+                    continue
+                lo, hi = int.from_bytes(lo, "big"), int.from_bytes(hi, "big")
+                if hi < lo or hi - lo > 0xFFFF:
+                    raise ValueError("embedded CMap: malformed cidrange")
+                cid_left = _spend(cid_left, hi - lo + 1, "embedded CMap cidrange")
                 for k in range(hi - lo + 1):
-                    out[lo + k] = bytes.fromhex(
-                        format(base + k, f"0{width}x")
-                    ).decode("utf-16-be")
-    return out
+                    cids[lo + k] = cid + k
+        elif op == "endcidchar":
+            for code, cid in zip(args[0::2], args[1::2]):
+                if isinstance(code, bytes) and type(cid) is int:
+                    cids[int.from_bytes(code, "big")] = cid
+        elif op == "endcodespacerange":
+            codespace.append([a for a in args if isinstance(a, bytes)])
+        elif op == "usecmap" and use is None and args and isinstance(args[-1], Name):
+            use = str(args[-1])
+    return _CMap(text, cids, codespace, use)
 
 
-_CODESPACE_RE = re.compile(rb"begincodespacerange(.*?)endcodespacerange", re.S)
-_CIDRANGE_RE = re.compile(rb"begincidrange(.*?)endcidrange", re.S)
-_CIDCHAR_RE = re.compile(rb"begincidchar(.*?)endcidchar", re.S)
-_CIDRANGE_ENTRY_RE = re.compile(
-    rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*(\d+)"
-)
-_CIDCHAR_ENTRY_RE = re.compile(rb"<([0-9A-Fa-f]+)>\s*(\d+)")
-_USECMAP_RE = re.compile(rb"/([!-~]+)\s+usecmap")
-
-
-def _parse_embedded_cmap(
-    data: bytes,
+def _cid_encoding(
+    cm: _CMap,
 ) -> tuple[dict[int, int], list[tuple[int, bytes, bytes]], str | None]:
-    """Embedded CMap STREAM (PDF 32000 §9.7.5.3) → (code→CID map,
-    codespace ranges, usecmap base name). pdfminer parses these with
-    its full PostScript CMap machinery behind the reference
-    (textbox.py:934-977); the from-scratch subset here covers the
-    operators an /Encoding CMap actually uses:
+    """An embedded /Encoding CMap (§9.7.5.3) → (code→CID map, codespace
+    ranges as (nbytes, lo, hi) sorted by width — mixed 1/2-byte
+    codespaces drive show-string tokenization shortest-first —, usecmap
+    base name, merged by the caller so local entries win).
 
-    * ``begincodespacerange`` — (nbytes, lo, hi) byte-range triples
-      that drive show-string tokenization (mixed 1/2-byte codespaces
-      supported, matched shortest-first);
-    * ``begincidrange`` — ``<lo> <hi> cid0`` runs with incrementing
-      CIDs;
-    * ``begincidchar`` — ``<code> cid`` singletons;
-    * ``/Name usecmap`` — inherit a predefined base CMap's table
-      (merged by the caller so local entries win).
-
-    Raises ``ValueError`` on malformed entries — the caller decides
-    between Identity fallback (font has /ToUnicode) and a recorded
-    parse failure (it does not)."""
+    Raises ``ValueError`` on a malformed codespace or a CMap that maps
+    nothing — the caller decides between Identity fallback (the font
+    has /ToUnicode) and a recorded parse failure (it does not)."""
     cspace: list[tuple[int, bytes, bytes]] = []
-    for m in _CODESPACE_RE.finditer(data):
-        toks = _HEX_RE.findall(m.group(1))
+    for toks in cm.codespace:
         if len(toks) % 2:
             # an unpaired trailing token is as malformed as a bad pair
             # — raise like every other malformed-entry path instead of
             # silently zip-truncating to a partial codespace (ADVICE r6)
             raise ValueError("embedded CMap: odd codespace token count")
-        for lo_h, hi_h in zip(toks[0::2], toks[1::2]):
-            if len(lo_h) != len(hi_h) or len(lo_h) % 2 or not lo_h:
+        for lo, hi in zip(toks[0::2], toks[1::2]):
+            if len(lo) != len(hi) or not lo:
                 raise ValueError("embedded CMap: malformed codespace range")
-            n = len(lo_h) // 2
-            if n > 4:
+            if len(lo) > 4:
                 raise ValueError("embedded CMap: codespace wider than 4 bytes")
-            cspace.append(
-                (n, bytes.fromhex(lo_h.decode()), bytes.fromhex(hi_h.decode()))
-            )
-    cidmap: dict[int, int] = {}
-    left = _EXPAND_BUDGET
-    for m in _CIDRANGE_RE.finditer(data):
-        for em in _CIDRANGE_ENTRY_RE.finditer(m.group(1)):
-            lo, hi = int(em.group(1), 16), int(em.group(2), 16)
-            cid0 = int(em.group(3))
-            if hi < lo or hi - lo > 0xFFFF:
-                raise ValueError("embedded CMap: malformed cidrange")
-            left = _spend(left, hi - lo + 1, "embedded CMap cidrange")
-            for k in range(hi - lo + 1):
-                cidmap[lo + k] = cid0 + k
-    for m in _CIDCHAR_RE.finditer(data):
-        for em in _CIDCHAR_ENTRY_RE.finditer(m.group(1)):
-            cidmap[int(em.group(1), 16)] = int(em.group(2))
-    um = _USECMAP_RE.search(data)
-    use = um.group(1).decode("ascii", "replace") if um else None
-    if not cidmap and use is None:
+            cspace.append((len(lo), lo, hi))
+    if not cm.cids and cm.usecmap is None:
         # an /Encoding CMap that defines no mapping at all is
         # unreadable-in-practice — let the caller pick the fallback
         raise ValueError("embedded CMap: no cidrange/cidchar/usecmap")
-    return cidmap, sorted(cspace), use
+    return cm.cids, sorted(cspace), cm.usecmap
 
 
 def _parse_cid_widths(warr, resolve) -> dict[int, float]:
@@ -2608,7 +2624,7 @@ def _font_model(fobj: dict, resolve) -> _Font:
     tu = resolve(fobj.get("ToUnicode"))
     if isinstance(tu, Stream):
         try:
-            tounicode = _parse_cmap(_stream_bytes(tu)) or None
+            tounicode = _read_cmap(_stream_bytes(tu)).text or None
         except (ValueError, UnicodeDecodeError):
             tounicode = None  # unreadable CMap → latin-1 fallback
     basefont = str(fobj.get("BaseFont") or "Courier")
@@ -2688,7 +2704,7 @@ def _composite_font(fobj: dict, resolve, basefont: str, tounicode) -> _Font:
     """Composite (CID) font — the CJK shape. /Encoding picks the kind:
     Identity-H/-V (code == CID), a predefined CMap
     (:func:`_predefined_cmap`) or an EMBEDDED CMap stream (§9.7.5.3,
-    :func:`_parse_embedded_cmap`). Widths come from the descendant
+    :func:`_cid_encoding`). Widths come from the descendant
     CIDFont's /W keyed by CID (default /DW). Text comes from
     /ToUnicode, else from the CMap family's own decode — for an
     embedded CMap, that of a text-known ``usecmap`` base, the
@@ -2701,7 +2717,7 @@ def _composite_font(fobj: dict, resolve, basefont: str, tounicode) -> _Font:
     cidmap, kind, vertical = None, _FIXED_TWO_BYTE, False
     if isinstance(enc, Stream):
         try:
-            cidmap, cspace, use = _parse_embedded_cmap(_stream_bytes(enc))
+            cidmap, cspace, use = _cid_encoding(_read_cmap(_stream_bytes(enc)))
         except (ValueError, KeyError, TypeError):
             if tounicode is None:
                 raise ValueError(
@@ -2844,7 +2860,6 @@ def _interpret_content(
     size = 10.0
     leading = 0.0
     tc = tw = 0.0
-    operands: list = []
     path_rects: list[tuple[float, float, float, float]] = []
 
     def show_text(raw: bytes):
@@ -2859,9 +2874,11 @@ def _interpret_content(
         for key in font.tokenize(raw):
             g = glyphs.get(key)
             text, w = g if g is not None else font.glyph(key)
-            adv = (size if vertical else w * size) + tc
-            if key == space:
-                adv += tw
+            # Tc, and Tw on the space key, add along the writing
+            # direction (§9.4.4): under a -V font they shorten the
+            # downward step, as pdfminer's render_string_vertical does
+            sp = tc + tw if key == space else tc
+            adv = size - sp if vertical else w * size + sp
             if text != " ":
                 if vertical:
                     # -V CMaps (§9.7.4.2): the origin moves DOWN by the
@@ -2915,11 +2932,7 @@ def _interpret_content(
                 )
         path_rects = []
 
-    for kind, val in _content_tokens(content):
-        if kind == "obj":
-            operands.append(val)
-            continue
-        op = val
+    for op, operands in _operations(content):
         try:
             if op == "q":
                 gstack.append((ctm, fill))
@@ -3043,7 +3056,6 @@ def _interpret_content(
                     )
         except (TypeError, ValueError):
             pass  # tolerate malformed operand lists, keep scanning
-        operands = []
 
 
 def _dest_payload(dest, resolve, page_index: dict[int, int]):

@@ -28,12 +28,12 @@ from libpdf_spark.pdfmini import (
     _file_key,
     _hash_2b,
     _owner_key,
+    _STRING,
     _pad_pwd,
-    _parse_hex_string,
-    _parse_lit_string,
     _parse_obj,
     _predefined_cid_map,
     _rc4,
+    _token,
     _u_entry,
     font_width_millis,
 )
@@ -196,32 +196,18 @@ def _make_encrypt_dict(
 
 def _transform_strings(body: bytes, fn) -> bytes:
     """Rewrite every string token in a SERIALIZED object body with
-    ``fn(raw_bytes) -> bytes`` (re-emitted as hex strings). Walks the
-    token structure so dict delimiters (``<<``/``>>``), names, and
-    nested parens are never mistaken for strings."""
-    out = bytearray()
-    i, n = 0, len(body)
-    while i < n:
-        c = body[i]
-        if c == 0x28:  # (
-            raw, j = _parse_lit_string(body, i)
-            out += b"<" + fn(raw).hex().upper().encode("ascii") + b">"
-            i = j
-        elif c == 0x3C:  # <
-            if i + 1 < n and body[i + 1] == 0x3C:
-                out += b"<<"
-                i += 2
-            else:
-                raw, j = _parse_hex_string(body, i)
-                out += b"<" + fn(raw).hex().upper().encode("ascii") + b">"
-                i = j
-        elif c == 0x3E and i + 1 < n and body[i + 1] == 0x3E:  # >>
-            out += b">>"
-            i += 2
-        else:
-            out.append(c)
-            i += 1
-    return bytes(out)
+    ``fn(raw_bytes) -> bytes`` (re-emitted as hex strings). The
+    parser's tokenizer finds the strings, so dict delimiters
+    (``<<``/``>>``), names, and nested parens are never mistaken for
+    them; every other byte is copied as is."""
+    out, done, i = [], 0, 0
+    while True:
+        kind, raw, s, i = _token(body, i)
+        if kind is None:
+            return b"".join(out) + body[done:]
+        if kind == _STRING:
+            out += [body[done:s], b"<", fn(raw).hex().upper().encode("ascii"), b">"]
+            done = i
 
 
 def _encrypt_object_body(body: bytes, num: int, sec: _StdSecurity) -> bytes:
@@ -417,7 +403,7 @@ def write_pdf(
     writes an EMBEDDED CMap STREAM as /Encoding (codes from 0x2101,
     CIDs deliberately ≠ codes, split between one cidrange run and
     cidchar singletons) plus a /ToUnicode CMap — parsing this file
-    exercises ``_parse_embedded_cmap`` for widths and /ToUnicode for
+    exercises the parser's CMap reader for widths and /ToUnicode for
     text, and neither is optional.
 
     ``custom_encoding=True`` writes every font with a deliberately

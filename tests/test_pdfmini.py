@@ -347,7 +347,7 @@ def test_foreign_xref_stream_with_png_predictor():
 
 
 def test_parse_cmap_bfchar_bfrange_and_ligature():
-    from libpdf_spark.pdfmini import _parse_cmap
+    from libpdf_spark.pdfmini import _read_cmap
 
     cmap = b"""
     /CIDInit /ProcSet findresource begin
@@ -363,7 +363,7 @@ def test_parse_cmap_bfchar_bfrange_and_ligature():
     endbfrange
     endcmap
     """
-    m = _parse_cmap(cmap)
+    m = _read_cmap(cmap).text
     assert m[0x21] == "A"
     assert m[0x22] == "fi"  # ligature: one code, two chars
     assert (m[0x30], m[0x31], m[0x32]) == ("a", "b", "c")
@@ -1072,15 +1072,15 @@ def test_identity_h_ascii_equals_simple_font_writer():
 def test_cid_widths_parsing_forms():
     """/W array forms (§9.7.4.3): `c [w…]` runs and `cfirst clast w`
     ranges, plus /DW fallback; bfrange with 2-byte sources."""
-    from libpdf_spark.pdfmini import _parse_cid_widths, _parse_cmap
+    from libpdf_spark.pdfmini import _parse_cid_widths, _read_cmap
 
     ident = lambda x: x  # noqa: E731
     w = _parse_cid_widths([257, [500.0, 600.0], 300, 302, 750.0], ident)
     assert w == {257: 500.0, 258: 600.0, 300: 750.0, 301: 750.0, 302: 750.0}
-    cm = _parse_cmap(
+    cm = _read_cmap(
         b"2 beginbfchar\n<0101> <65e5>\n<0102> <00610062>\nendbfchar\n"
         b"1 beginbfrange\n<0200> <0202> <4e00>\nendbfrange\n"
-    )
+    ).text
     assert cm[0x0101] == "日"
     assert cm[0x0102] == "ab"          # ligature destination
     assert cm[0x0200] == "一" and cm[0x0202] == "丂"
@@ -1737,10 +1737,13 @@ def test_embedded_cmap_unreadable_degrades_to_identity():
     base = parse_pdf(write_pdf(doc, cid_font=True))
     data = write_pdf(doc, cid_font="embedded")
     # neuter every mapping block keyword (same byte length) so the
-    # CMap parses to nothing and the fallback engages
-    bad = data.replace(b"begincidrange", b"beginXidrange").replace(
-        b"begincidchar", b"beginXidchar"
-    )
+    # CMap parses to nothing and the fallback engages; the reader acts
+    # on the end keywords, so those go too
+    bad = data
+    for kw in (b"cidrange", b"cidchar"):
+        bad = bad.replace(b"begin" + kw, b"beginX" + kw[1:]).replace(
+            b"end" + kw, b"endX" + kw[1:]
+        )
     got = parse_pdf(bad)
     assert got["chars"]["text"] == base["chars"]["text"]
 
@@ -1748,7 +1751,7 @@ def test_embedded_cmap_unreadable_degrades_to_identity():
 def test_parse_embedded_cmap_unit():
     """Parser unit: codespace ranges of mixed widths, cidrange runs,
     cidchar singletons, usecmap extraction, and malformed rejects."""
-    from libpdf_spark.pdfmini import _parse_embedded_cmap
+    from libpdf_spark.pdfmini import _cid_encoding, _read_cmap
 
     cmap = (
         b"begincmap\n"
@@ -1758,23 +1761,23 @@ def test_parse_embedded_cmap_unit():
         b"2 begincidchar\n<8140> 500\n<8141> 777\nendcidchar\n"
         b"endcmap"
     )
-    cidmap, cspace, use = _parse_embedded_cmap(cmap)
+    cidmap, cspace, use = _cid_encoding(_read_cmap(cmap))
     assert cidmap == {0x41: 100, 0x42: 101, 0x43: 102,
                       0x8140: 500, 0x8141: 777}
     assert cspace == [(1, b"\x00", b"\x7f"), (2, b"\x81\x40", b"\xfc\xfc")]
     assert use is None
-    cidmap2, _, use2 = _parse_embedded_cmap(
+    cidmap2, _, use2 = _cid_encoding(_read_cmap(
         b"begincmap\n/UniJIS-UCS2-H usecmap\n"
         b"1 begincidchar\n<0041> 999\nendcidchar\nendcmap"
-    )
+    ))
     assert use2 == "UniJIS-UCS2-H" and cidmap2 == {0x41: 999}
     with pytest.raises(ValueError):
-        _parse_embedded_cmap(b"begincmap\nendcmap")  # defines nothing
+        _cid_encoding(_read_cmap(b"begincmap\nendcmap"))  # defines nothing
     with pytest.raises(ValueError):
-        _parse_embedded_cmap(
+        _cid_encoding(_read_cmap(
             b"1 begincodespacerange\n<00> <7fff>\nendcodespacerange\n"
             b"1 begincidchar\n<41> 1\nendcidchar"
-        )  # lo/hi width mismatch
+        ))  # lo/hi width mismatch
 
 
 def test_embedded_cmap_mixed_codespace_tokenization():
@@ -2181,25 +2184,30 @@ def _identity_v_pdf(content: bytes) -> bytes:
     return bytes(out)
 
 
-def _pdfminer_vertical_boxes(tm, size, tj):
-    """Glyph boxes of one TJ array in an Identity-V font, Tc = Tw = 0.
-    The glyph origins follow pdfminer's
-    ``PDFTextDevice.render_string_vertical``: a running ``y`` through
-    the text matrix, moved by each glyph's vertical displacement (the
-    /DW2 default, -1 em) and by -number/1000 · size for a number
-    (PDF 32000 §9.4.4: ty = (w1 − Tj/1000) × Tfs). Around its origin
-    each box spans the parser's -V extent: the /W width to the right,
-    one em down."""
+def _pdfminer_vertical_boxes(tm, size, tj, tc=0.0):
+    """Glyph boxes of one TJ array in an Identity-V font, Tw = 0 (it
+    never applies to two-byte codes). The glyph origins follow
+    pdfminer's ``PDFTextDevice.render_string_vertical``: a running
+    ``y`` through the text matrix, moved by each glyph's vertical
+    displacement (the /DW2 default, -1 em), by -number/1000 · size for
+    a number (PDF 32000 §9.4.4: ty = (w1 − Tj/1000) × Tfs + Tc) and by
+    +Tc before every glyph but the first (``needcharspace``). Around
+    its origin each box spans the parser's -V extent: the /W width to
+    the right, one em down."""
     def apply(m, x, y):  # pdfminer.utils.apply_matrix_pt
         a, b, c, d, e, f = m
         return a * x + c * y + e, b * x + d * y + f
 
-    y, boxes = 0.0, []
+    y, boxes, needcharspace = 0.0, [], False
     for item in tj:
         if isinstance(item, (int, float)):
             y -= item / 1000.0 * size
+            needcharspace = True
             continue
         for hi, lo in zip(item[::2], item[1::2]):
+            if needcharspace:
+                y += tc
+            needcharspace = True
             w = _IDENTITY_V_WIDTHS[hi << 8 | lo] / 1000.0 * size
             (x0, y0), (x1, y1) = apply(tm, 0.0, y - size), apply(tm, w, y)
             boxes.append((min(x0, x1), min(y0, y1), max(x0, x1), max(y0, y1)))
@@ -2211,20 +2219,20 @@ def test_vertical_writing_mode_identity_v():
     """-V CMaps (r6): glyph origins advance DOWNWARD one em per glyph
     (/DW2 default), boxes span the horizontal /W extent; previously
     -V text was laid out horizontally. Identity-V with /ToUnicode."""
-    # second line: Tc adds along the writing direction after every
-    # glyph; Tw does not apply to the two-byte code 0x0020 (§9.3.3),
-    # whose glyph is a space (no box) but still advances
+    # second line: Tc adds along the writing direction (up, §9.4.4)
+    # after every glyph; Tw does not apply to the two-byte code 0x0020
+    # (§9.3.3), whose glyph is a space (no box) but still advances
     content = (b"BT /F1 10 Tf 100 700 Td <010101020103> Tj "
                b"2 Tc 5 Tw 100 0 Td <0101002001020103> Tj <0101> Tj ET")
     chs = parse_pdf(_identity_v_pdf(content))["chars"]
     assert chs["text"] == ["日", "本", "語"] * 2 + ["日"]
     # origins descend one em (10 pt) per glyph from the Td point, then
-    # one em + Tc (12 pt) on the second line; the second Tj starts
-    # below the last glyph's trailing Tc
+    # one em - Tc (8 pt) on the second line; the second Tj starts at
+    # the last glyph's step, trailing Tc included
     assert chs["y1"] == pytest.approx(
-        [700.0, 690.0, 680.0, 700.0, 676.0, 664.0, 652.0], abs=1e-6)
+        [700.0, 690.0, 680.0, 700.0, 684.0, 676.0, 668.0], abs=1e-6)
     assert chs["y0"] == pytest.approx(
-        [690.0, 680.0, 670.0, 690.0, 666.0, 654.0, 642.0], abs=1e-6)
+        [690.0, 680.0, 670.0, 690.0, 674.0, 666.0, 658.0], abs=1e-6)
     # x extent follows /W: two full-width glyphs then a half-width one
     assert chs["x1"] == pytest.approx(
         [110.0, 110.0, 105.0, 210.0, 210.0, 205.0, 210.0], abs=1e-6)
@@ -2236,16 +2244,21 @@ def test_vertical_writing_mode_identity_v():
     # continues from where the TJ left the origin. Unrotated, then
     # under a 90° Tm, where "down the column" maps to +x
     tj = [b"\x01\x01", -1000, b"\x01\x02", 500, b"\x01\x03\x01\x01", -250, b"\x01\x02"]
-    for tm, place in (((1.0, 0.0, 0.0, 1.0, 100.0, 700.0), b"100 700 Td"),
-                      ((0.0, 1.0, -1.0, 0.0, 300.0, 400.0), b"0 1 -1 0 300 400 Tm")):
-        content = (b"BT /F1 10 Tf " + place + b" [<0101> -1000 <0102> 500 <01030101>"
-                   b" -250] TJ <0102> Tj ET")
+    for tm, place, tc in (((1.0, 0.0, 0.0, 1.0, 100.0, 700.0), b"100 700 Td", 0.0),
+                          ((0.0, 1.0, -1.0, 0.0, 300.0, 400.0), b"0 1 -1 0 300 400 Tm", 0.0),
+                          ((1.0, 0.0, 0.0, 1.0, 100.0, 700.0), b"100 700 Td", 2.0),
+                          ((0.0, 1.0, -1.0, 0.0, 300.0, 400.0), b"0 1 -1 0 300 400 Tm", -1.5)):
+        # with Tc, one TJ: pdfminer adds Tc before a glyph, the spec
+        # after it, which differs only where a text operator ends
+        tail = b" -250 <0102>] TJ ET" if tc else b" -250] TJ <0102> Tj ET"
+        content = (b"BT /F1 10 Tf %g Tc " % tc + place
+                   + b" [<0101> -1000 <0102> 500 <01030101>" + tail)
         chs = parse_pdf(_identity_v_pdf(content))["chars"]
         assert chs["text"] == ["日", "本", "語", "日", "本"]
         got = list(zip(chs["x0"], chs["y0"], chs["x1"], chs["y1"]))
-        want = _pdfminer_vertical_boxes(tm, 10.0, tj)
-        assert got == [pytest.approx(b, abs=1e-9) for b in want], (place, got)
-        if place == b"100 700 Td":
+        want = _pdfminer_vertical_boxes(tm, 10.0, tj, tc)
+        assert got == [pytest.approx(b, abs=1e-9) for b in want], (place, tc, got)
+        if place == b"100 700 Td" and tc == 0.0:
             # the second glyph back on the first one's box, not one em
             # to the right of the column
             assert got[1] == pytest.approx((100.0, 690.0, 110.0, 700.0), abs=1e-9)
@@ -2787,16 +2800,15 @@ def test_cidrange_and_width_ranges_are_bounded():
     same budget; past it the document is a recorded failure, which the
     tolerant per-font fallbacks do not swallow."""
     from libpdf_spark.pdfmini import (
-        _EXPAND_BUDGET, _parse_cid_widths, _parse_embedded_cmap,
-        _RecordedFailure,
+        _EXPAND_BUDGET, _parse_cid_widths, _read_cmap, _RecordedFailure,
     )
 
     ranges = b"<0000> <FFFF> 1\n" * 3
     cmap = (b"1 begincodespacerange <0000> <FFFF> endcodespacerange\n"
             b"3 begincidrange\n" + ranges + b"endcidrange")
     with pytest.raises(_RecordedFailure, match="cidrange expands past"):
-        _parse_embedded_cmap(cmap)
-    _parse_embedded_cmap(cmap.replace(ranges, b"<0000> <FFFF> 1\n" * 2))
+        _read_cmap(cmap)
+    _read_cmap(cmap.replace(ranges, b"<0000> <FFFF> 1\n" * 2))
     with pytest.raises(_RecordedFailure, match="/W array expands past"):
         _parse_cid_widths([0, 65535, 500.0] * 3, lambda v: v)
     w = _parse_cid_widths([0, 65535, 500.0] * 2, lambda v: v)
