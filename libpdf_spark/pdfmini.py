@@ -777,12 +777,11 @@ def decode_pdf_string(raw: bytes) -> str:
 # included. The reference opens them through pdfminer's
 # PDFStandardSecurityHandler (reference/libpdf/extract.py:96 →
 # pdfplumber → pdfminer); here the handler is hand-rolled from the
-# public spec on stdlib hashlib + pure-Python RC4/AES. A wrong
-# password, another security handler or an unsupported /V, /R or /CFM
-# is a RECORDED parse failure, never silent garbage. The crypto is
-# slow: decryption runs string by string and stream by stream, and the
-# R 6 key derivation (`_hash_2b`) takes ~0.3-0.4 s a call, two calls
-# to open a file by its user password.
+# public spec on stdlib hashlib, RC4 in Python and AES through the
+# `cryptography` package, as pdfminer.six does. A wrong password,
+# another security handler or an unsupported /V, /R or /CFM is a
+# RECORDED parse failure, never silent garbage. Decryption runs string
+# by string and stream by stream.
 # ---------------------------------------------------------------------------
 
 _PAD = bytes(
@@ -811,200 +810,24 @@ def _rc4(key: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
-def _xtime(a: int) -> int:
-    return ((a << 1) ^ 0x1B) & 0xFF if a & 0x80 else a << 1
+def _aes_cbc(key: bytes, data: bytes, iv: bytes, encrypt: bool) -> bytes:
+    """AES-CBC over whole 16-byte blocks, no padding, through the
+    ``cryptography`` package (OpenSSL). Imported here, so a process
+    that never meets an AES file never loads it. AES-128 and AES-256
+    keys only: the short key of an odd crypt-filter /Length fails."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
-
-def _gmul(a: int, b: int) -> int:
-    p = 0
-    while b:
-        if b & 1:
-            p ^= a
-        a = _xtime(a)
-        b >>= 1
-    return p
-
-
-def _build_sboxes() -> tuple[list[int], list[int]]:
-    """AES S-box computed from first principles (FIPS-197 §5.1.1):
-    multiplicative inverse in GF(2^8) followed by the affine map."""
-    exp, log = [0] * 256, [0] * 256
-    a = 1
-    for i in range(255):
-        exp[i] = a
-        log[a] = i
-        a ^= _xtime(a)  # multiply by the generator 0x03
-    exp[255] = exp[0]  # g^255 = g^0 — hit when log[x] == 0 (x == 1)
-    sbox = [0] * 256
-    for i in range(256):
-        inv = 0 if i == 0 else exp[255 - log[i]]
-        s, b = inv, inv
-        for _ in range(4):
-            b = ((b << 1) | (b >> 7)) & 0xFF
-            s ^= b
-        sbox[i] = s ^ 0x63
-    inv_sbox = [0] * 256
-    for i, v in enumerate(sbox):
-        inv_sbox[v] = i
-    return sbox, inv_sbox
-
-
-_SBOX, _INV_SBOX = _build_sboxes()
-
-
-def _build_ttables():
-    """Word-oriented lookup tables (the classic public T-table
-    construction, e.g. the FIPS-197 reference code): one 32-bit word
-    per state column fuses SubBytes + ShiftRows + MixColumns into four
-    table lookups and xors — ~5× faster than byte-wise rounds in
-    Python, which matters because the V5/R6 password hash (Algorithm
-    2.B) encrypts ~0.5 MB per evaluation."""
-    t0, t1, t2, t3 = [0] * 256, [0] * 256, [0] * 256, [0] * 256
-    u0, u1, u2, u3 = [0] * 256, [0] * 256, [0] * 256, [0] * 256
-    for x in range(256):
-        s = _SBOX[x]
-        s2 = _xtime(s)
-        s3 = s2 ^ s
-        t0[x] = (s2 << 24) | (s << 16) | (s << 8) | s3
-        t1[x] = (s3 << 24) | (s2 << 16) | (s << 8) | s
-        t2[x] = (s << 24) | (s3 << 16) | (s2 << 8) | s
-        t3[x] = (s << 24) | (s << 16) | (s3 << 8) | s2
-        g9, g11 = _gmul(x, 9), _gmul(x, 11)
-        g13, g14 = _gmul(x, 13), _gmul(x, 14)
-        u0[x] = (g14 << 24) | (g9 << 16) | (g13 << 8) | g11
-        u1[x] = (g11 << 24) | (g14 << 16) | (g9 << 8) | g13
-        u2[x] = (g13 << 24) | (g11 << 16) | (g14 << 8) | g9
-        u3[x] = (g9 << 24) | (g13 << 16) | (g11 << 8) | g14
-    d0 = [u0[_INV_SBOX[x]] for x in range(256)]
-    d1 = [u1[_INV_SBOX[x]] for x in range(256)]
-    d2 = [u2[_INV_SBOX[x]] for x in range(256)]
-    d3 = [u3[_INV_SBOX[x]] for x in range(256)]
-    return t0, t1, t2, t3, d0, d1, d2, d3, u0, u1, u2, u3
-
-
-(_T0, _T1, _T2, _T3, _D0, _D1, _D2, _D3,
- _U0, _U1, _U2, _U3) = _build_ttables()
-
-
-def _aes_key_expand(key: bytes) -> list[list[int]]:
-    """AES key schedule (FIPS-197 §5.2) → per-round lists of four
-    32-bit column words. Nk = 4 (AES-128, 10 rounds) or Nk = 8
-    (AES-256, 14 rounds, with the extra SubWord at ``i % Nk == 4``)."""
-    nk = len(key) // 4
-    if nk not in (4, 8):
+    if len(key) not in (16, 32):
         raise ValueError(f"unsupported AES key length {len(key)}")
-    rounds = nk + 6
-    kw = [int.from_bytes(key[4 * i : 4 * i + 4], "big") for i in range(nk)]
-    rcon = 1
-    for i in range(nk, 4 * (rounds + 1)):
-        t = kw[i - 1]
-        if i % nk == 0:
-            t = ((t << 8) | (t >> 24)) & 0xFFFFFFFF  # RotWord
-            t = (
-                (_SBOX[t >> 24] << 24) | (_SBOX[(t >> 16) & 0xFF] << 16)
-                | (_SBOX[(t >> 8) & 0xFF] << 8) | _SBOX[t & 0xFF]
-            )
-            t ^= rcon << 24
-            rcon = _xtime(rcon)
-        elif nk > 6 and i % nk == 4:
-            t = (
-                (_SBOX[t >> 24] << 24) | (_SBOX[(t >> 16) & 0xFF] << 16)
-                | (_SBOX[(t >> 8) & 0xFF] << 8) | _SBOX[t & 0xFF]
-            )
-        kw.append(kw[i - nk] ^ t)
-    return [kw[4 * r : 4 * r + 4] for r in range(rounds + 1)]
-
-
-def _aes_enc_block(rks: list[list[int]], block: bytes) -> bytes:
-    n = len(rks) - 1
-    k = rks[0]
-    w0 = ((block[0] << 24) | (block[1] << 16) | (block[2] << 8) | block[3]) ^ k[0]
-    w1 = ((block[4] << 24) | (block[5] << 16) | (block[6] << 8) | block[7]) ^ k[1]
-    w2 = ((block[8] << 24) | (block[9] << 16) | (block[10] << 8) | block[11]) ^ k[2]
-    w3 = ((block[12] << 24) | (block[13] << 16) | (block[14] << 8) | block[15]) ^ k[3]
-    t0, t1, t2, t3 = _T0, _T1, _T2, _T3
-    for r in range(1, n):
-        k = rks[r]
-        n0 = t0[w0 >> 24] ^ t1[(w1 >> 16) & 0xFF] ^ t2[(w2 >> 8) & 0xFF] ^ t3[w3 & 0xFF] ^ k[0]
-        n1 = t0[w1 >> 24] ^ t1[(w2 >> 16) & 0xFF] ^ t2[(w3 >> 8) & 0xFF] ^ t3[w0 & 0xFF] ^ k[1]
-        n2 = t0[w2 >> 24] ^ t1[(w3 >> 16) & 0xFF] ^ t2[(w0 >> 8) & 0xFF] ^ t3[w1 & 0xFF] ^ k[2]
-        n3 = t0[w3 >> 24] ^ t1[(w0 >> 16) & 0xFF] ^ t2[(w1 >> 8) & 0xFF] ^ t3[w2 & 0xFF] ^ k[3]
-        w0, w1, w2, w3 = n0, n1, n2, n3
-    k = rks[n]
-    s = _SBOX
-    return bytes((
-        s[w0 >> 24] ^ (k[0] >> 24), s[(w1 >> 16) & 0xFF] ^ ((k[0] >> 16) & 0xFF),
-        s[(w2 >> 8) & 0xFF] ^ ((k[0] >> 8) & 0xFF), s[w3 & 0xFF] ^ (k[0] & 0xFF),
-        s[w1 >> 24] ^ (k[1] >> 24), s[(w2 >> 16) & 0xFF] ^ ((k[1] >> 16) & 0xFF),
-        s[(w3 >> 8) & 0xFF] ^ ((k[1] >> 8) & 0xFF), s[w0 & 0xFF] ^ (k[1] & 0xFF),
-        s[w2 >> 24] ^ (k[2] >> 24), s[(w3 >> 16) & 0xFF] ^ ((k[2] >> 16) & 0xFF),
-        s[(w0 >> 8) & 0xFF] ^ ((k[2] >> 8) & 0xFF), s[w1 & 0xFF] ^ (k[2] & 0xFF),
-        s[w3 >> 24] ^ (k[3] >> 24), s[(w0 >> 16) & 0xFF] ^ ((k[3] >> 16) & 0xFF),
-        s[(w1 >> 8) & 0xFF] ^ ((k[3] >> 8) & 0xFF), s[w2 & 0xFF] ^ (k[3] & 0xFF),
-    ))
-
-
-_DEC_SCHED_CACHE: dict[int, tuple[list[list[int]], list[list[int]]]] = {}
-
-
-def _dec_schedule(rks: list[list[int]]) -> list[list[int]]:
-    """Equivalent-inverse-cipher round keys: InvMixColumns applied to
-    the middle round keys (via the coefficient-only U tables), cached
-    per schedule so CBC decryption pays the transform once. Keyed by
-    ``id(rks)`` — called once per 16-byte BLOCK, so hashing the 60-word
-    schedule itself would cost ~8% of the block decrypt; the cache
-    entry holds a reference to ``rks``, so its id cannot be reused
-    while the entry exists, and the identity check guards eviction
-    races."""
-    entry = _DEC_SCHED_CACHE.get(id(rks))
-    if entry is not None and entry[0] is rks:
-        return entry[1]
-    n = len(rks) - 1
-    ik = [list(rks[0])]
-    for r in range(1, n):
-        ik.append([
-            _U0[w >> 24] ^ _U1[(w >> 16) & 0xFF]
-            ^ _U2[(w >> 8) & 0xFF] ^ _U3[w & 0xFF]
-            for w in rks[r]
-        ])
-    ik.append(list(rks[n]))
-    if len(_DEC_SCHED_CACHE) > 64:
-        _DEC_SCHED_CACHE.clear()
-    _DEC_SCHED_CACHE[id(rks)] = (rks, ik)
-    return ik
-
-
-def _aes_dec_block(rks: list[list[int]], block: bytes) -> bytes:
-    n = len(rks) - 1
-    ik = _dec_schedule(rks)
-    k = ik[n]
-    w0 = ((block[0] << 24) | (block[1] << 16) | (block[2] << 8) | block[3]) ^ k[0]
-    w1 = ((block[4] << 24) | (block[5] << 16) | (block[6] << 8) | block[7]) ^ k[1]
-    w2 = ((block[8] << 24) | (block[9] << 16) | (block[10] << 8) | block[11]) ^ k[2]
-    w3 = ((block[12] << 24) | (block[13] << 16) | (block[14] << 8) | block[15]) ^ k[3]
-    d0, d1, d2, d3 = _D0, _D1, _D2, _D3
-    for r in range(n - 1, 0, -1):
-        k = ik[r]
-        n0 = d0[w0 >> 24] ^ d1[(w3 >> 16) & 0xFF] ^ d2[(w2 >> 8) & 0xFF] ^ d3[w1 & 0xFF] ^ k[0]
-        n1 = d0[w1 >> 24] ^ d1[(w0 >> 16) & 0xFF] ^ d2[(w3 >> 8) & 0xFF] ^ d3[w2 & 0xFF] ^ k[1]
-        n2 = d0[w2 >> 24] ^ d1[(w1 >> 16) & 0xFF] ^ d2[(w0 >> 8) & 0xFF] ^ d3[w3 & 0xFF] ^ k[2]
-        n3 = d0[w3 >> 24] ^ d1[(w2 >> 16) & 0xFF] ^ d2[(w1 >> 8) & 0xFF] ^ d3[w0 & 0xFF] ^ k[3]
-        w0, w1, w2, w3 = n0, n1, n2, n3
-    k = ik[0]
-    s = _INV_SBOX
-    return bytes((
-        s[w0 >> 24] ^ (k[0] >> 24), s[(w3 >> 16) & 0xFF] ^ ((k[0] >> 16) & 0xFF),
-        s[(w2 >> 8) & 0xFF] ^ ((k[0] >> 8) & 0xFF), s[w1 & 0xFF] ^ (k[0] & 0xFF),
-        s[w1 >> 24] ^ (k[1] >> 24), s[(w0 >> 16) & 0xFF] ^ ((k[1] >> 16) & 0xFF),
-        s[(w3 >> 8) & 0xFF] ^ ((k[1] >> 8) & 0xFF), s[w2 & 0xFF] ^ (k[1] & 0xFF),
-        s[w2 >> 24] ^ (k[2] >> 24), s[(w1 >> 16) & 0xFF] ^ ((k[2] >> 16) & 0xFF),
-        s[(w0 >> 8) & 0xFF] ^ ((k[2] >> 8) & 0xFF), s[w3 & 0xFF] ^ (k[2] & 0xFF),
-        s[w3 >> 24] ^ (k[3] >> 24), s[(w2 >> 16) & 0xFF] ^ ((k[3] >> 16) & 0xFF),
-        s[(w1 >> 8) & 0xFF] ^ ((k[3] >> 8) & 0xFF), s[w0 & 0xFF] ^ (k[3] & 0xFF),
-    ))
+    cipher = Cipher(algorithms.AES(key), modes.CBC(iv))
+    ctx = cipher.encryptor() if encrypt else cipher.decryptor()
+    return ctx.update(data) + ctx.finalize()
 
 
 def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
+    """A string or stream payload: the 16-byte IV, then the ciphertext.
+    Only the last pad byte is checked, so a file whose earlier pad
+    bytes are wrong still opens."""
     if len(data) < 32 or len(data) % 16:
         raise ValueError("bad AES-CBC ciphertext length")
     out = _aes_cbc_decrypt_nopad(key, data[16:], data[:16])
@@ -1017,27 +840,13 @@ def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
 def _aes_cbc_encrypt_nopad(key: bytes, data: bytes, iv: bytes) -> bytes:
     """CBC without padding or an embedded IV (len(data) % 16 == 0) —
     the primitive Algorithm 2.B and the /UE//OE wrapping need."""
-    rks = _aes_key_expand(key)
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        blk = bytes(d ^ p for d, p in zip(data[i : i + 16], prev))
-        prev = _aes_enc_block(rks, blk)
-        out += prev
-    return bytes(out)
+    return _aes_cbc(key, data, iv, encrypt=True)
 
 
 def _aes_cbc_decrypt_nopad(key: bytes, data: bytes, iv: bytes) -> bytes:
     if len(data) % 16:
         raise ValueError("bad AES-CBC ciphertext length")
-    rks = _aes_key_expand(key)
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        blk = data[i : i + 16]
-        out += bytes(d ^ p for d, p in zip(_aes_dec_block(rks, blk), prev))
-        prev = blk
-    return bytes(out)
+    return _aes_cbc(key, data, iv, encrypt=False)
 
 
 @functools.lru_cache(maxsize=1024)

@@ -23,8 +23,6 @@ from libpdf_spark.pdfmini import (
     _META_TO_INFO,
     _StdSecurity,
     _aes_cbc_encrypt_nopad,
-    _aes_enc_block,
-    _aes_key_expand,
     _file_key,
     _hash_2b,
     _owner_key,
@@ -130,13 +128,12 @@ def _make_encrypt_dict(
     opw_raw = password if owner_password is None else owner_password
     if mode == "aes256":
         r = 6
-        # FIXED salts (not id0-derived): every fixture file then shares
-        # one /U //O pair and the R6 Algorithm-2.B hashes — ~0.27 s of
-        # pure-Python AES each — hit the _hash_2b lru_cache on both the
-        # write and parse side after the first document. Real-world
-        # files carry random salts; the PARSER handles any salt. The
-        # FILE key still derives from id0, so ciphertext differs per
-        # document.
+        # FIXED salts (not id0-derived): every fixture file shares one
+        # /U //O pair, so the writer's output stays byte-identical to
+        # its pinned digests, and the R6 Algorithm-2.B hashes hit the
+        # _hash_2b lru_cache after the first document. Real-world files
+        # carry random salts; the PARSER handles any salt. The FILE key
+        # still derives from id0, so ciphertext differs per document.
         vs_u = hashlib.sha256(b"vs_u libpdf fixture").digest()[:8]
         ks_u = hashlib.sha256(b"ks_u libpdf fixture").digest()[:8]
         vs_o = hashlib.sha256(b"vs_o libpdf fixture").digest()[:8]
@@ -157,7 +154,8 @@ def _make_encrypt_dict(
             p.to_bytes(4, "little", signed=True)
             + b"\xff\xff\xff\xff" + b"T" + b"adb" + b"pdfm"
         )
-        perms = _aes_enc_block(_aes_key_expand(file_key), pblock)
+        # one CBC block under a zero IV is the ECB block Algorithm 10 asks for
+        perms = _aes_cbc_encrypt_nopad(file_key, pblock, zero_iv)
         body = (
             "<< /Filter /Standard /V 5 /R 6 /Length 256 "
             "/CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen /Length 32 >> >> "

@@ -680,41 +680,52 @@ def test_stream_bytes_short_decodeparms_array():
 
 
 def test_aes128_known_answer_and_cbc():
-    """FIPS-197 Appendix C.1 known-answer vector + CBC round trips —
-    pins the from-scratch AES implementation to the public spec."""
+    """FIPS-197 Appendix C.1 / C.3 known-answer vectors (one block under
+    a zero IV is the plain block cipher), CBC round trips, the RC4
+    vector, and the error contract of the AES helpers: every malformed
+    input is a ValueError, and the pad check reads the last byte only."""
     from libpdf_spark.pdfmini import (
-        _aes_cbc_decrypt, _aes_dec_block, _aes_enc_block, _aes_key_expand, _rc4,
+        _aes_cbc_decrypt, _aes_cbc_decrypt_nopad, _aes_cbc_encrypt_nopad, _rc4,
     )
     from libpdf_spark.pdfwrite import _aes_cbc_encrypt
 
+    zero_iv = bytes(16)
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-    rks = _aes_key_expand(key)
-    assert _aes_enc_block(rks, pt) == ct
-    assert _aes_dec_block(rks, ct) == pt
-    # FIPS-197 Appendix C.3: AES-256 known-answer vector (14 rounds,
-    # Nk=8 key schedule with the extra SubWord)
+    assert _aes_cbc_encrypt_nopad(key, pt, zero_iv) == ct
+    assert _aes_cbc_decrypt_nopad(key, ct, zero_iv) == pt
     key256 = bytes.fromhex(
         "000102030405060708090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f"
     )
     ct256 = bytes.fromhex("8ea2b7ca516745bfeafc49904b496089")
-    rks256 = _aes_key_expand(key256)
-    assert len(rks256) == 15
-    assert _aes_enc_block(rks256, pt) == ct256
-    assert _aes_dec_block(rks256, ct256) == pt
-    for n in (0, 1, 16, 17, 333):
-        data = (bytes(range(256)) * 2)[:n]
-        assert (
-            _aes_cbc_decrypt(key256, _aes_cbc_encrypt(key256, data, bytes(16)))
-            == data
-        )
-    for n in (0, 1, 15, 16, 17, 333):
-        data = bytes(range(256)) * 2
-        data = data[:n]
-        assert _aes_cbc_decrypt(key, _aes_cbc_encrypt(key, data, bytes(16))) == data
+    assert _aes_cbc_encrypt_nopad(key256, pt, zero_iv) == ct256
+    assert _aes_cbc_decrypt_nopad(key256, ct256, zero_iv) == pt
+    for k in (key, key256):
+        for n in (0, 1, 15, 16, 17, 333):
+            data = (bytes(range(256)) * 2)[:n]
+            assert _aes_cbc_decrypt(k, _aes_cbc_encrypt(k, data, zero_iv)) == data
     # RC4 published test vector
     assert _rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
+
+    # error contract: short or ragged ciphertext, a pad byte of 0 or
+    # above 16, and the 10-byte key an odd crypt-filter /Length makes
+    def ciphertext(last: int) -> bytes:
+        return zero_iv + _aes_cbc_encrypt_nopad(key, bytes(15) + bytes([last]), zero_iv)
+
+    for bad, match in ((bytes(16), "length"), (bytes(31), "length"),
+                       (bytes(40), "length"), (ciphertext(0), "padding"),
+                       (ciphertext(17), "padding"), (ciphertext(255), "padding")):
+        with pytest.raises(ValueError, match=match):
+            _aes_cbc_decrypt(key, bad)
+    with pytest.raises(ValueError, match="length"):
+        _aes_cbc_decrypt_nopad(key, bytes(20), zero_iv)
+    with pytest.raises(ValueError, match="key length 10"):
+        _aes_cbc_decrypt(key[:10], ciphertext(16))
+    with pytest.raises(ValueError, match="key length 10"):
+        _aes_cbc_encrypt_nopad(key[:10], pt, zero_iv)
+    # lenient pad: the earlier pad bytes are wrong, the last is in range
+    assert _aes_cbc_decrypt(key, ciphertext(3)) == bytes(13)
 
 
 @pytest.mark.parametrize("mode", ["rc4", "aes", "aes256"])
@@ -815,6 +826,44 @@ def test_aes256_v5_r6_handler_details():
     assert len(h6) == 32 and h6 != _hash_2b(b"pw", b"salt", b"", 5)
     # deterministic (write_pdf reproducibility)
     assert _hash_2b(b"pw", b"salt", b"", 6) == h6
+
+
+def test_aes256_r6_random_salts_open_by_either_password():
+    """A V5/R6 /Encrypt dict with salts of its own, as real producers
+    write them (Algorithms 8-9, built here through the helpers; the
+    writer's fixed salts hit the _hash_2b cache instead). The user and
+    the owner password both unwrap the file key, a wrong one is refused,
+    and the five uncached R6 hashes of the two opens take under 0.5 s
+    together."""
+    import random
+    import time
+
+    from libpdf_spark.pdfmini import (
+        Name, _StdSecurity, _aes_cbc_encrypt_nopad, _hash_2b,
+    )
+    from libpdf_spark.pdfwrite import _aes_cbc_encrypt
+
+    rng = random.Random(20261019)
+    vs_u, ks_u, vs_o, ks_o = (rng.randbytes(8) for _ in range(4))
+    file_key, id0, zero_iv = rng.randbytes(32), rng.randbytes(16), bytes(16)
+    upw, opw = b"user-pw", b"owner-pw"
+    u = _hash_2b(upw, vs_u, b"", 6) + vs_u + ks_u
+    ue = _aes_cbc_encrypt_nopad(_hash_2b(upw, ks_u, b"", 6), file_key, zero_iv)
+    o = _hash_2b(opw, vs_o, u, 6) + vs_o + ks_o
+    oe = _aes_cbc_encrypt_nopad(_hash_2b(opw, ks_o, u, 6), file_key, zero_iv)
+    enc = {"Filter": Name("Standard"), "V": 5, "R": 6, "O": o, "U": u,
+           "OE": oe, "UE": ue, "P": -1}
+    _hash_2b.cache_clear()
+    t = time.perf_counter()
+    by_user = _StdSecurity(enc, id0, upw)    # /U check, /UE key: 2 hashes
+    by_owner = _StdSecurity(enc, id0, opw)   # /U miss, /O check, /OE key: 3
+    elapsed = time.perf_counter() - t
+    assert by_user.key == by_owner.key == file_key
+    assert elapsed < 0.5, elapsed
+    secret = _aes_cbc_encrypt(file_key, b"Hello", rng.randbytes(16))
+    assert by_owner.decrypt_bytes(secret, 7) == b"Hello"
+    with pytest.raises(ValueError, match="wrong password"):
+        _StdSecurity(enc, id0, b"neither")
 
 
 def test_encrypt_xref_stream_unsupported():
@@ -1100,9 +1149,10 @@ def test_parse_pdf_mutation_fuzz_exception_contract():
 
     doc = FAMILIES["full_features"]().build()
     cjk = doc_from_text("日本語 漢字 apple ひらがな").build()
-    # (bytes, trials): the aes256 shape gets a smaller budget because a
-    # mutation landing in the /Encrypt dict changes a V5 salt and costs
-    # an UNCACHED Algorithm-2.B hash (~0.27 s of pure-Python AES)
+    # (bytes, trials): the aes256 shape got a smaller budget when a
+    # mutation landing in the /Encrypt dict, which changes a V5 salt and
+    # costs an UNCACHED Algorithm-2.B hash, took ~0.27 s of pure-Python
+    # AES; through `cryptography` it takes ~3 ms
     corpora = [
         (write_pdf(doc), 1000),
         (write_pdf(doc, compress=True), 1000),
@@ -1154,9 +1204,7 @@ def test_parse_pdf_mutation_fuzz_exception_contract():
         (_ttf_nowidths_pdf(b"BT /F1 10 Tf 0 700 Td (AB A) Tj ET"), 1000),
     ]
     # Budget: 1,000 trials × 9 writer shapes per run (~25 s; the
-    # aes256 shape runs 250 — a mutation landing in its /Encrypt dict
-    # costs an UNCACHED Algorithm-2.B hash at ~0.27 s of pure-Python
-    # AES). Round-4 ran 60/shape and caught the /MediaBox IndexError;
+    # aes256 shape runs 250, see above). Round-4 ran 60/shape and caught the /MediaBox IndexError;
     # round-5 offline sweeps with the same mutator totalled 46,000+
     # trials (33k × 6 legacy shapes, 8k × aes256/ucs2, 5k × the
     # /Differences shape) and flushed out + fixed three more escapes
