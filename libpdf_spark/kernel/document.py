@@ -81,7 +81,10 @@ class DocElement:
     uid: str = ""
     idx: int = 0
     links: list[Link] = field(default_factory=list)
-    box: Box | None = None
+    # the element's text boxes (a chapter's matched heading boxes, a
+    # paragraph's, cell's or rect's one box); links and words read these
+    boxes: list[Box] = field(default_factory=list)
+    table: Table | None = None   # tables only: the cells to expand
     outline_node: object = None  # chapters only
     children: list = field(default_factory=list)
     # word/line tree (cfg.keep_words; horizontal_box.py:50-147)
@@ -144,24 +147,14 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
         "trapped": meta_raw.get("trapped"),
     }
 
+    # keep the chars of the wanted pages: one span per page, and no
+    # take when the spans already cover every char
     chars = CharArrays.from_payload(doc.get("chars"))
-    if len(chars) and not page_numbers:
-        chars = chars.take(np.empty(0, dtype=np.int64))  # no wanted pages
-    elif len(chars):
-        # r8 fast path: when the wanted pages are a contiguous range
-        # covering every char page (the no-page-filter common case),
-        # the sort-based np.isin scan is a no-op — two min/max checks
-        # replace it. Semantics identical; isin remains the fallback.
-        contiguous = page_numbers[-1] - page_numbers[0] + 1 == len(page_numbers)
-        if contiguous and (
-            page_numbers[0] <= chars.page.min()
-            and chars.page.max() <= page_numbers[-1]
-        ):
-            pass  # every char is on a wanted page
-        else:
-            keep = np.isin(chars.page, np.fromiter(page_dims, dtype=np.int32))
-            if not keep.all():
-                chars = chars.take(np.where(keep)[0])
+    spans = [chars.page_span(pno) for pno in page_numbers]
+    if sum(hi - lo for lo, hi in spans) < len(chars):
+        chars = chars.take(np.concatenate(
+            [np.empty(0, np.int64), *(np.arange(lo, hi) for lo, hi in spans)]
+        ))
 
     # Smart header/footer crop (A4) runs per element kind immediately
     # after that kind's extraction, exactly like the reference's ×4
@@ -193,8 +186,11 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
     # --- ruled tables (grid + F6 + J5) ---
     tables: list[Table] = []
     if not cfg.no_tables:
+        lines_by_page: dict[int, list[dict]] = {}
+        for ln in doc.get("lines", []):
+            lines_by_page.setdefault(int(ln["page"]), []).append(ln)
         for pno in page_numbers:
-            tables.extend(detect_tables(doc.get("lines", []), pno, cfg))
+            tables.extend(detect_tables(lines_by_page.get(pno, []), pno, cfg))
         tables = drop_tables_in_figures(tables, figures, cfg.table_figure_margin)
         fill_cell_text(tables, chars, cfg)
         if cfg.smart_page_crop:
@@ -210,12 +206,12 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
     attach_figure_text(figures, page_boxes)
 
     # F7: drop boxes inside table/figure bboxes (margin TABLE_MARGIN)
-    element_bboxes = [(t.page, t.bbox) for t in tables] + [
-        (f.page, f.bbox) for f in figures
-    ]
+    element_bboxes: dict[int, list[tuple]] = {}
+    for el in (*tables, *figures):
+        element_bboxes.setdefault(el.page, []).append(el.bbox)
     for pno in page_numbers:
         page_boxes[pno] = remove_boxes_in_elements(
-            page_boxes[pno], element_bboxes, cfg.table_margin
+            page_boxes[pno], element_bboxes.get(pno, []), cfg.table_margin
         )
 
     # --- chapters (S6/X2/X3 + J6) — consumes matched boxes ---
@@ -250,10 +246,9 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
         elements.append(
             DocElement(
                 kind="table", page=t.page,
-                x0=t.x0, y0=t.y0, x1=t.x1, y1=t.y1,
+                x0=t.x0, y0=t.y0, x1=t.x1, y1=t.y1, table=t,
             )
         )
-        elements[-1]._table = t  # type: ignore[attr-defined]
     if not cfg.no_paragraphs:
         for pno in page_numbers:
             for b in page_boxes[pno]:
@@ -262,7 +257,7 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
                         kind="paragraph", page=pno,
                         x0=b.x0, y0=b.y0, x1=b.x1, y1=b.y1,
                         text=b.text, fontname=b.fontname, ncolor=b.ncolor,
-                        box=b,
+                        boxes=[b],
                     )
                 )
     for ch in chapters:
@@ -272,17 +267,16 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
                 x0=ch.x0, y0=ch.y0, x1=ch.x1, y1=ch.y1,
                 text=ch.text, number=ch.number,
                 outline_node=ch.outline,
-                box=ch.boxes[0] if ch.boxes else None,
+                boxes=ch.boxes,
             )
         )
-        elements[-1].title = ch.title  # type: ignore[attr-defined]
-        elements[-1]._chapter_boxes = ch.boxes  # type: ignore[attr-defined]
     for r in rects:
         elements.append(
             DocElement(
                 kind="rect", page=r.page,
                 x0=r.x0, y0=r.y0, x1=r.x1, y1=r.y1, text=r.text,
-                ncolor=r.non_stroking_color, box=r.textbox,
+                ncolor=r.non_stroking_color,
+                boxes=[r.textbox] if r.textbox is not None else [],
             )
         )
 
@@ -298,15 +292,15 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
     final: list[DocElement] = []
     for el in ordered:
         final.append(el)
-        if el.kind == "table":
-            t: Table = el._table  # type: ignore[attr-defined]
+        if el.table is not None:
+            t = el.table
             for c in t.cells:
                 cell_el = DocElement(
                     kind="cell", page=t.page,
                     x0=c.x0, y0=c.y0, x1=c.x1, y1=c.y1,
                     text=c.text, row=c.row, col=c.col,
                     uid=f"{el.uid}/cell.{c.row}.{c.col}",
-                    box=c.box,
+                    boxes=[c.box] if c.box is not None else [],
                 )
                 final.append(cell_el)
 
@@ -315,13 +309,10 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
         from libpdf_spark.kernel.layout import box_words_lines
 
         for el in final:
-            el_boxes = getattr(el, "_chapter_boxes", None) or (
-                [el.box] if el.box is not None else []
-            )
-            if not el_boxes:
+            if not el.boxes:
                 continue
             el.words, el.tlines = [], []
-            for b in el_boxes:
+            for b in el.boxes:
                 ws, ls = box_words_lines(chars, b)
                 base = len(el.tlines)
                 for w in ws:
@@ -338,19 +329,11 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
     if annos_by_page:
         all_links: list[Link] = []
         for el in final:
-            if el.kind in ("paragraph", "cell", "rect") and el.box is not None:
-                el.links = scan_box_links(
-                    el.box, annos_by_page.get(el.page, []), dests, chars, cfg
+            for b in el.boxes:
+                el.links.extend(
+                    scan_box_links(b, annos_by_page.get(el.page, []), dests, chars, cfg)
                 )
-                all_links.extend(el.links)
-            elif el.kind == "chapter":
-                for b in getattr(el, "_chapter_boxes", []):
-                    el.links.extend(
-                        scan_box_links(
-                            b, annos_by_page.get(el.page, []), dests, chars, cfg
-                        )
-                    )
-                all_links.extend(el.links)
+            all_links.extend(el.links)
         resolve_target_uid(all_links, final, cfg)
 
     # --- per-turn extracted text: main content in document order ---

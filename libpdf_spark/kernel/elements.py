@@ -3,22 +3,21 @@
 Figures: sanity filter + containment/overlap dedup + contained-text
 join — reference ``extract.py:593-659`` (extract_figures),
 ``extract.py:796-860`` (check_and_filter_figures).
-Rects: colored rectangles with their contained text re-grouped into a
-synthetic textbox — reference ``extract.py:662-731`` (extract_rects).
+Rects: colored rectangles with their contained text cropped into one
+textbox, as table cells are — reference ``extract.py:662-731``
+(extract_rects).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import numpy as np
-
 from libpdf_spark.config import ExtractConfig
 from libpdf_spark.kernel.geometry import (
     bbox_area,
     bbox_contains,
     bbox_overlaps,
-    crop_boxes,
+    crop_cell_box,
 )
 from libpdf_spark.kernel.layout import Box, CharArrays
 
@@ -108,9 +107,11 @@ def attach_figure_text(
 def extract_rects(
     raw: list[dict], chars: CharArrays, cfg: ExtractConfig
 ) -> list[Rect]:
-    """Rects with text re-grouped from chars inside rect bbox + 5 pt
-    (J4, ``extract.py:698-722``, ``utils.py:547-582``)."""
+    """Rects with the text of the chars inside rect bbox + 5 pt,
+    cropped into one textbox like a table cell (J4,
+    ``extract.py:698-722``, ``utils.py:547-582``)."""
     rects: list[Rect] = []
+    off = cfg.rect_crop_offset
     for r in raw:
         rect = Rect(
             page=int(r["page"]),
@@ -124,52 +125,30 @@ def extract_rects(
                 else None
             ),
         )
-        off = cfg.rect_crop_offset
-        boxes = crop_boxes(
+        rect.textbox = crop_cell_box(
             chars,
             rect.page,
             (rect.x0 - off, rect.y0 - off, rect.x1 + off, rect.y1 + off),
             cfg,
         )
-        if boxes:
-            rect.textbox = boxes[0] if len(boxes) == 1 else _merge_boxes(boxes)
-            rect.text = "\n".join(b.text for b in boxes)
+        if rect.textbox is not None:
+            rect.text = rect.textbox.text
         rects.append(rect)
     return rects
 
 
-def _merge_boxes(boxes: list[Box]) -> Box:
-    """Collapse several crop boxes into one synthetic textbox
-    (the reference builds a single LTTextBox from cropped chars)."""
-    text = "\n".join(b.text for b in boxes)
-    return Box(
-        page=boxes[0].page,
-        x0=min(b.x0 for b in boxes),
-        y0=min(b.y0 for b in boxes),
-        x1=max(b.x1 for b in boxes),
-        y1=max(b.y1 for b in boxes),
-        text=text,
-        char_idx=np.concatenate([b.char_idx for b in boxes]),
-        offsets=np.concatenate([b.offsets for b in boxes]),  # offsets not re-based; merged boxes carry no links
-        line_spans=[],
-    )
-
-
 def remove_boxes_in_elements(
     boxes: list[Box],
-    element_bboxes: list[tuple[int, tuple[float, float, float, float]]],
+    element_bboxes: list[tuple[float, float, float, float]],
     margin: float,
 ) -> list[Box]:
-    """Textbox-in-element anti-filter (F7): drop boxes inside any
-    table/figure bbox expanded by ``margin``
+    """Textbox-in-element anti-filter (F7): drop boxes of one page
+    inside any table/figure bbox of that page expanded by ``margin``
     (``textbox.py:863-902``, TABLE_MARGIN ``parameters.py:26``)."""
     out = []
     for b in boxes:
         bb = (b.x0, b.y0, b.x1, b.y1)
-        if any(
-            pg == b.page and bbox_contains(eb, bb, margin=margin)
-            for pg, eb in element_bboxes
-        ):
+        if any(bbox_contains(eb, bb, margin=margin) for eb in element_bboxes):
             continue
         out.append(b)
     return out

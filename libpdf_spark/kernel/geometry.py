@@ -2,10 +2,10 @@
 
 The reference's recursive bbox-crop (``utils.py:260-431``
 find_lt_obj_in_bbox / lt_page_crop) is replaced by working at char
-granularity: select chars whose boxes lie inside the (expanded) crop
-bbox, then re-run the line/box grouping on just those chars
-(semantics of ``utils.py:547-582`` lt_textbox_crop). Recursion
-eliminated; everything is a vectorized mask.
+granularity: select the chars of the crop's page whose boxes lie
+inside the (expanded) crop bbox, then group just those chars into the
+lines of one box (semantics of ``utils.py:547-582`` lt_textbox_crop).
+Recursion eliminated; everything is a vectorized mask.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from libpdf_spark.kernel.layout import (
     Box,
     CharArrays,
     assemble_lines_bulk,
-    build_boxes,
     group_lines,
     lines_to_box,
 )
@@ -28,29 +27,19 @@ def chars_in_bbox_mask(
     page: int,
     bbox: tuple[float, float, float, float],
 ) -> np.ndarray:
-    """Strict containment of char boxes in ``bbox``
-    (``utils.py:212-257`` check_lt_obj_in_bbox, J1)."""
+    """Strict containment of char boxes in ``bbox`` on ``page``
+    (``utils.py:212-257`` check_lt_obj_in_bbox, J1); only the page's
+    own span of ``chars`` is tested."""
+    lo, hi = chars.page_span(page)
     x0, y0, x1, y1 = bbox
-    return (
-        (chars.page == page)
-        & (chars.x0 >= x0)
-        & (chars.y0 >= y0)
-        & (chars.x1 <= x1)
-        & (chars.y1 <= y1)
+    inside = np.zeros(len(chars), dtype=bool)
+    inside[lo:hi] = (
+        (chars.x0[lo:hi] >= x0)
+        & (chars.y0[lo:hi] >= y0)
+        & (chars.x1[lo:hi] <= x1)
+        & (chars.y1[lo:hi] <= y1)
     )
-
-
-def crop_boxes(
-    chars: CharArrays,
-    page: int,
-    bbox: tuple[float, float, float, float],
-    cfg: ExtractConfig,
-) -> list[Box]:
-    """Group the chars inside ``bbox`` into text boxes (J2/J4/J5)."""
-    idx = np.where(chars_in_bbox_mask(chars, page, bbox))[0]
-    if len(idx) == 0:
-        return []
-    return build_boxes(chars.take(idx), cfg, char_index_base=idx)
+    return inside
 
 
 def crop_cell_box(
@@ -59,28 +48,27 @@ def crop_cell_box(
     bbox: tuple[float, float, float, float],
     cfg: ExtractConfig,
 ) -> Box | None:
-    """Single-textbox cell crop — ``lt_textbox_crop`` semantics
-    (``utils.py:547-582`` + ``assemble_to_lt_textlines``
-    ``utils.py:585-631``): the chars inside ``bbox`` run through
-    :func:`group_lines` with an ABSOLUTE y-center tolerance (the
-    reference passes LA_PARAMS["line_overlap"] = 0.5 as plain points)
-    and NO char_margin column split, then through the page path's
-    :func:`assemble_lines_bulk` and :func:`lines_to_box`; every line
-    joins into ONE returned box.
-
-    This differs from :func:`crop_boxes`/``build_boxes`` (height-
-    relative tolerance + column splits + box grouping): a wide in-cell
-    horizontal gap must stay one space-joined line here, and link
-    scanning must see every line — the reference returns one
-    LTTextBoxHorizontal.
+    """Single-textbox crop of a table cell or a rect —
+    ``lt_textbox_crop`` semantics (``utils.py:547-582`` +
+    ``assemble_to_lt_textlines`` ``utils.py:585-631``): the chars
+    inside ``bbox`` run through :func:`group_lines` with an ABSOLUTE
+    y-center tolerance (the reference passes LA_PARAMS["line_overlap"]
+    = 0.5 as plain points) and NO char_margin column split, then
+    through the page path's :func:`assemble_lines_bulk` and
+    :func:`lines_to_box`; every line joins into ONE returned box, as
+    the reference returns one LTTextBoxHorizontal. A wide horizontal
+    gap stays one space-joined line, and link scanning sees every
+    line. Only the chars of ``page`` are read.
     """
-    idx = np.where(chars_in_bbox_mask(chars, page, bbox))[0]
+    lo, hi = chars.page_span(page)
+    on_page = chars.take(slice(lo, hi))
+    idx = np.flatnonzero(chars_in_bbox_mask(on_page, page, bbox))
     if len(idx) == 0:
         return None
-    sub = chars.take(idx)
+    sub = on_page.take(idx)
     lines = group_lines(sub, cfg.line_overlap)  # absolute points, reference quirk
     return lines_to_box(
-        page, sub, lines, assemble_lines_bulk(sub, lines, cfg.word_margin), idx,
+        page, sub, lines, assemble_lines_bulk(sub, lines, cfg.word_margin), idx + lo,
         (float(sub.x0.min()), float(sub.y0.min()), float(sub.x1.max()), float(sub.y1.max())),
     )
 

@@ -103,11 +103,9 @@ def _merge_segments(segs: list[tuple[float, float]], join_tol: float) -> list[tu
 def detect_tables(
     lines: list[dict], page: int, cfg: ExtractConfig
 ) -> list[Table]:
-    """Grid reconstruction for one page's ruled edges."""
+    """Grid reconstruction for the ruled edges ``lines`` of ``page``."""
     v_raw, h_raw = [], []
     for ln in lines:
-        if int(ln["page"]) != page:
-            continue
         x0, y0, x1, y1 = (
             float(ln["x0"]),
             float(ln["y0"]),

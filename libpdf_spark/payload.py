@@ -213,22 +213,20 @@ def decode_chars(chars) -> dict:
     }
 
 
-def encode(doc: dict, columnar: bool = True, packed: bool = True) -> str:
+def encode(doc: dict) -> str:
     """Compact-serialize a layout document for embedding in a turn.
 
-    ``packed=True`` (default) upgrades single-char-glyph columnar chars
-    to the v2 packed encoding — ~7× faster to decode than JSON float
-    arrays; falls back to v1 columnar automatically otherwise."""
+    Row chars become columnar (:func:`to_columnar_chars`), and
+    single-char-glyph columnar chars the v2 packed encoding
+    (:func:`to_packed_chars`) — ~7× faster to decode than JSON float
+    arrays; chars that cannot be packed stay v1 columnar."""
     chars = doc.get("chars")
-    if columnar and isinstance(chars, list) and chars:
-        doc = dict(doc)
-        doc["chars"] = to_columnar_chars(chars)
-        chars = doc["chars"]
-    if packed and isinstance(chars, dict) and "v" not in chars and chars.get("text"):
-        p = to_packed_chars(chars)
-        if p is not None:
-            doc = dict(doc)
-            doc["chars"] = p
+    if isinstance(chars, list) and chars:
+        chars = to_columnar_chars(chars)
+    if isinstance(chars, dict) and "v" not in chars and chars.get("text"):
+        chars = to_packed_chars(chars) or chars
+    if chars is not doc.get("chars"):
+        doc = dict(doc, chars=chars)
     return json.dumps(doc, separators=(",", ":"), sort_keys=True)
 
 

@@ -2629,7 +2629,7 @@ def _resources(res, resolve, font_cache: dict,
 
 
 def _interpret_content(
-    content: bytes, fonts: dict, xobjects, pageno: int,
+    content: bytes, fonts: dict, xobjects: dict, pageno: int,
     chars: dict, lines: list, rects: list, figures: list,
     resolve, font_cache: dict,
     base_ctm: tuple | None = None, depth: int = 0,
@@ -2652,8 +2652,7 @@ def _interpret_content(
     by the whole advance. ``font_cache`` holds the glyph models across
     pages and forms.
 
-    ``xobjects`` maps names to RESOLVED XObject streams (a legacy set
-    of names still works for the image case). ``Do`` on a
+    ``xobjects`` maps names to RESOLVED XObject streams. ``Do`` on a
     ``/Subtype /Form`` stream replays the form's own content with the
     form /Matrix composed onto the current CTM and the form's own
     /Resources (falling back to the page's) — the nested-content
@@ -2812,10 +2811,7 @@ def _interpret_content(
                 path_rects = []
             elif (op == "Do" and operands) or op == "__inline_image__":
                 name = str(operands[-1]) if op == "Do" else None
-                target = (
-                    xobjects.get(name)
-                    if op == "Do" and isinstance(xobjects, dict) else None
-                )
+                target = xobjects.get(name)  # None for inline images
                 if (
                     isinstance(target, Stream)
                     and str(target.dict.get("Subtype")) == "Form"
