@@ -70,19 +70,24 @@ def filter_figures(raw: list[dict], cfg: ExtractConfig) -> list[Figure]:
         if (x1 - x0) > cfg.figure_min_width and (y1 - y0) > cfg.figure_min_height:
             figs.append(Figure(page=int(f["page"]), x0=x0, y0=y0, x1=x1, y1=y1))
 
-    # pairwise dedup per page — n is tiny per document page
+    # pairwise dedup within each page, in index order — n is tiny per
+    # page, but a loop over the whole document is quadratic in pages
+    on_page: dict[int, list[int]] = {}
+    for k, f in enumerate(figs):
+        on_page.setdefault(f.page, []).append(k)
     drop: set[int] = set()
-    for i in range(len(figs)):
-        if i in drop:
-            continue
-        for j in range(len(figs)):
-            if i == j or j in drop or figs[i].page != figs[j].page:
+    for members in on_page.values():
+        for i in members:
+            if i in drop:
                 continue
-            bi, bj = figs[i].bbox, figs[j].bbox
-            if bbox_contains(bi, bj):
-                drop.add(j)
-            elif bbox_overlaps(bi, bj) and bbox_area(bi) >= bbox_area(bj):
-                drop.add(j)
+            for j in members:
+                if i == j or j in drop:
+                    continue
+                bi, bj = figs[i].bbox, figs[j].bbox
+                if bbox_contains(bi, bj):
+                    drop.add(j)
+                elif bbox_overlaps(bi, bj) and bbox_area(bi) >= bbox_area(bj):
+                    drop.add(j)
     return [f for k, f in enumerate(figs) if k not in drop]
 
 

@@ -13,13 +13,7 @@ from __future__ import annotations
 import numpy as np
 
 from libpdf_spark.config import ExtractConfig
-from libpdf_spark.kernel.layout import (
-    Box,
-    CharArrays,
-    assemble_lines_bulk,
-    group_lines,
-    lines_to_box,
-)
+from libpdf_spark.kernel.layout import Box, CharArrays, _line_runs, assemble_boxes
 
 
 def chars_in_bbox_mask(
@@ -51,14 +45,15 @@ def crop_cell_box(
     """Single-textbox crop of a table cell or a rect —
     ``lt_textbox_crop`` semantics (``utils.py:547-582`` +
     ``assemble_to_lt_textlines`` ``utils.py:585-631``): the chars
-    inside ``bbox`` run through :func:`group_lines` with an ABSOLUTE
-    y-center tolerance (the reference passes LA_PARAMS["line_overlap"]
-    = 0.5 as plain points) and NO char_margin column split, then
-    through the page path's :func:`assemble_lines_bulk` and
-    :func:`lines_to_box`; every line joins into ONE returned box, as
-    the reference returns one LTTextBoxHorizontal. A wide horizontal
-    gap stays one space-joined line, and link scanning sees every
-    line. Only the chars of ``page`` are read.
+    inside ``bbox`` group into lines as :func:`group_lines` does, with
+    an ABSOLUTE y-center tolerance (the reference passes
+    LA_PARAMS["line_overlap"] = 0.5 as plain points) and NO
+    char_margin column split; then the page path's
+    :func:`assemble_boxes` joins every line, in that top-to-bottom
+    order, into ONE returned box, as the reference returns one
+    LTTextBoxHorizontal. A wide horizontal gap stays one space-joined
+    line, and link scanning sees every line. Only the chars of
+    ``page`` are read.
     """
     lo, hi = chars.page_span(page)
     on_page = chars.take(slice(lo, hi))
@@ -66,11 +61,14 @@ def crop_cell_box(
     if len(idx) == 0:
         return None
     sub = on_page.take(idx)
-    lines = group_lines(sub, cfg.line_overlap)  # absolute points, reference quirk
-    return lines_to_box(
-        page, sub, lines, assemble_lines_bulk(sub, lines, cfg.word_margin), idx + lo,
-        (float(sub.x0.min()), float(sub.y0.min()), float(sub.x1.max()), float(sub.y1.max())),
+    members, bounds = _line_runs(sub, cfg.line_overlap)  # absolute points, reference quirk
+    n_lines = len(bounds) - 1
+    (box,) = assemble_boxes(
+        page, sub, members, bounds, np.arange(n_lines), np.array([0, n_lines]),
+        [(float(sub.x0.min()), float(sub.y0.min()), float(sub.x1.max()), float(sub.y1.max()))],
+        cfg.word_margin, idx + lo,
     )
+    return box
 
 
 def bbox_contains(outer, inner, margin: float = 0.0) -> bool:

@@ -13,6 +13,13 @@ The input is a struct-of-arrays over one document's chars; the output
 is a list of :class:`Box` (the LTTextBoxHorizontal equivalent) with
 per-char text offsets retained for link-index computation
 (``textbox.py:670-795``).
+
+One path per page: :func:`_line_runs` forms the lines,
+:func:`_box_labels` the boxes, and :func:`assemble_boxes` every box's
+text, offsets and lifts in one segmented pass, so Python runs per box
+only to construct each :class:`Box` and order the boxes for reading.
+Table cells and rects (``geometry.crop_cell_box``) are one box through
+the same :func:`assemble_boxes`.
 """
 
 from __future__ import annotations
@@ -124,6 +131,9 @@ class Box:
     ncolor: tuple | None = None
 
 
+_U1 = np.dtype("<U1")
+
+
 def _median1d(a: np.ndarray) -> float:
     """``float(np.median(a))`` for a non-empty 1-D float array without
     the ``_ureduce`` wrapper overhead (np.median showed up as ~8% of
@@ -175,11 +185,21 @@ def group_lines(
     side-by-side columns).
 
     Returns a list of index arrays (into ``chars``), top-to-bottom,
-    each sorted by x0.
+    each sorted by x0: the lines of :func:`_line_runs`, one array each.
     """
+    members, bounds = _line_runs(chars, y_tolerance, char_margin)
+    bl = bounds.tolist()
+    return [members[a:b] for a, b in zip(bl[:-1], bl[1:])]
+
+
+def _line_runs(
+    chars: CharArrays, y_tolerance: float, char_margin: float | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`group_lines` as two arrays: line ``i`` is
+    ``members[bounds[i]:bounds[i + 1]]``."""
     n = len(chars)
     if n == 0:
-        return []
+        return np.empty(0, dtype=np.int64), np.zeros(1, dtype=np.int64)
     yc = (chars.y0 + chars.y1) * 0.5
     order = np.argsort(-yc, kind="stable")
     yc_sorted = yc[order]
@@ -189,12 +209,9 @@ def group_lines(
     if n > 1:
         breaks[1:] = (yc_sorted[:-1] - yc_sorted[1:]) >= y_tolerance
     # members of line k are CONTIGUOUS in `order` (breaks are cuts in
-    # the y-sorted sequence). r8: ONE stable lexsort orders every
-    # line's members by x0 at once (primary key = line id, secondary
-    # = x0; stable ties keep the y-order, exactly like the previous
-    # per-line stable argsort), and the char_margin sub-split runs as
-    # one vector compare over the page — the per-line loop with L
-    # small argsorts was the remaining group_lines hotspot.
+    # the y-sorted sequence): ONE stable lexsort orders every line's
+    # members by x0 (ties keep the y-order), and the char_margin
+    # sub-split is one vector compare over the page
     line_id = np.cumsum(breaks) - 1
     order2 = order[np.lexsort((chars.x0[order], line_id))]
     cut = breaks  # line starts sit at the same positions after the
@@ -209,110 +226,11 @@ def group_lines(
         # hgap at a line-start position compares across lines — the
         # cut is already True there, so the bogus value never splits
         cut = cut | (hgap > char_margin * widths)
-    # inline np.split: same contiguous views without array_split's
-    # per-piece Python checks (~0.1 s of the profiled kernel run)
-    cuts = np.flatnonzero(cut[1:]) + 1
-    bounds = np.empty(len(cuts) + 2, dtype=np.int64)
-    bounds[0] = 0
-    bounds[1:-1] = cuts
+    cuts = np.flatnonzero(cut)
+    bounds = np.empty(len(cuts) + 1, dtype=np.int64)
+    bounds[:-1] = cuts
     bounds[-1] = n
-    bl = bounds.tolist()
-    return [order2[a:b] for a, b in zip(bl[:-1], bl[1:])]
-
-
-def assemble_lines_bulk(
-    chars: CharArrays, lines: list[np.ndarray], word_margin: float
-) -> list[tuple[str, np.ndarray]]:
-    """Assemble the text of every line in ``lines`` in one vectorized
-    pass.
-
-    pdfminer semantics: a space separator is inserted before a char
-    whose horizontal gap to the previous char exceeds
-    ``word_margin * width(char)`` (LTTextLineHorizontal.add). Words
-    join with "" internally and with " " across
-    (``horizontal_box.py:93-95,144-147``).
-
-    Returns one ``(text, offsets)`` per line, where ``offsets[i]`` is
-    the position of line char ``i`` in ``text``. The gap/space/offset
-    math runs once over all the chars: per-line numpy call overhead
-    dominated the kernel profile (24 lines × ~8 small numpy ops each
-    per document).
-    """
-    if not lines:
-        return []
-    lens = np.fromiter((len(l) for l in lines), dtype=np.int64, count=len(lines))
-    members = np.concatenate(lines)
-    n = len(members)
-    starts = np.zeros(len(lines), dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-
-    x0 = chars.x0[members]
-    x1 = chars.x1[members]
-    widths = x1 - x0
-    gaps = np.empty(n)
-    gaps[0] = 0.0
-    gaps[1:] = x0[1:] - x1[:-1]
-    space = gaps > word_margin * widths
-    space[starts] = False
-
-    cum = np.cumsum(space)
-    line_id = np.repeat(np.arange(len(lines)), lens)
-    cum_at_start = (cum - space)[starts]  # spaces before line start
-    within_spaces = cum - cum_at_start[line_id]
-    idx_in_line = np.arange(n, dtype=np.int64) - starts[line_id]
-    offsets_all = idx_in_line + within_spaces
-
-    texts_np = chars.text[members]
-    # r8: when text is the packed-payload <U1 array, the page's full
-    # concatenation is ONE UTF-32 buffer reinterpretation (each slot
-    # is exactly one char) — no per-char Python string creation. The
-    # guard pins little-endian <U1: a byte-swapped >U1 array would
-    # reinterpret to garbage code points, so it takes the list path. A
-    # numpy U-slot holding "" is NUL padding, indistinguishable from
-    # a real "\x00" glyph under the view, so any empty slot falls
-    # back to the list path (which renders "" exactly as before).
-    page_str = None
-    if n and texts_np.dtype == np.dtype("<U1") and (texts_np != "").all():
-        page_str = np.ascontiguousarray(texts_np).view(f"<U{n}")[0]
-    else:
-        texts_all = texts_np.tolist()
-        space_list = space.tolist()
-    # r8: word-cut positions for the whole page at once — the previous
-    # per-line `[k for k in range(a+1, b) if space_list[k]]` was a
-    # per-CHAR Python loop inside the hot path
-    cuts_all = np.flatnonzero(space)
-    # one vectorized searchsorted for every line's cut range (r8: the
-    # per-line two-element searchsorted was 2·L small calls per page)
-    los = np.searchsorted(cuts_all, starts + 1)
-    his = np.searchsorted(cuts_all, starts + lens)
-    out: list[tuple[str, np.ndarray]] = []
-    for li in range(len(lines)):
-        a = int(starts[li])
-        b = a + int(lens[li])
-        if page_str is not None:
-            joined = page_str[a:b]
-            one_char = True
-        else:
-            seg = texts_all[a:b]
-            joined = "".join(seg)
-            one_char = len(joined) == len(seg)
-        if one_char:  # all 1-char glyphs: slice per WORD
-            lo, hi = los[li], his[li]
-            if hi > lo:
-                bounds = (cuts_all[lo:hi] - a).tolist()
-                parts = []
-                prev = 0
-                for cut in bounds:
-                    parts.append(joined[prev:cut])
-                    prev = cut
-                parts.append(joined[prev:])
-                joined = " ".join(parts)
-        else:  # rare multi-char glyphs
-            joined = "".join(
-                (" " + t) if space_list[a + k] else t for k, t in enumerate(seg)
-            )
-        out.append((joined, offsets_all[a:b]))
-    return out
+    return order2, bounds
 
 
 def _connected_components(n: int, ii: np.ndarray, jj: np.ndarray) -> np.ndarray:
@@ -386,24 +304,31 @@ def group_boxes(
     (ordered by their smallest line index) and the per-line hulls
     (lx0, ly0, lx1, ly1) so callers don't recompute them per char.
     """
-    L = len(lines)
-    if L == 0:
+    if not lines:
         return [], None
-    # r8: hulls via 4 reduceat calls over the concatenated members —
-    # the per-line min()/max() list comprehensions were 4·L small
-    # numpy reductions per page in the hot profile
-    cat = np.concatenate(lines)
-    starts = np.zeros(L, dtype=np.int64)
-    np.cumsum(
-        np.fromiter((len(l) for l in lines), dtype=np.int64, count=L)[:-1],
-        out=starts[1:],
-    )
+    bounds = np.zeros(len(lines) + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, lines), np.int64, len(lines)), out=bounds[1:])
+    labels, hull = _box_labels(chars, np.concatenate(lines), bounds, line_margin)
+    boxes: dict[int, list[int]] = {}
+    for i, lab in enumerate(labels.tolist()):
+        boxes.setdefault(lab, []).append(i)
+    return list(boxes.values()), tuple(hull[:4])
+
+
+def _box_labels(
+    chars: CharArrays, members: np.ndarray, bounds: np.ndarray, line_margin: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`group_boxes` over the lines of :func:`_line_runs`: the
+    box label of every line (the smallest line index in its box) and
+    the line hulls as rows ``lx0, ly0, lx1, ly1, height``."""
+    L = len(bounds) - 1
+    starts = bounds[:-1]
     hull = np.empty((5, L))
     lx0, ly0, lx1, ly1, height = hull
-    np.minimum.reduceat(chars.x0[cat], starts, out=lx0)
-    np.minimum.reduceat(chars.y0[cat], starts, out=ly0)
-    np.maximum.reduceat(chars.x1[cat], starts, out=lx1)
-    np.maximum.reduceat(chars.y1[cat], starts, out=ly1)
+    np.minimum.reduceat(chars.x0[members], starts, out=lx0)
+    np.minimum.reduceat(chars.y0[members], starts, out=ly0)
+    np.maximum.reduceat(chars.x1[members], starts, out=lx1)
+    np.maximum.reduceat(chars.y1[members], starts, out=ly1)
     np.subtract(ly1, ly0, out=height)
     swept = np.isfinite(ly0 + height)  # finite only if both terms are
     all_swept = swept.all()
@@ -437,11 +362,7 @@ def group_boxes(
         (x0i < x1j) & (x1i > x0j)
         & (np.maximum(y0i - y1j, y0j - y1i) < line_margin * np.maximum(hgt_i, hgt_j))
     )
-    labels = _connected_components(L, ci[edge], cj[edge])
-    boxes: dict[int, list[int]] = {}
-    for i, lab in enumerate(labels.tolist()):
-        boxes.setdefault(lab, []).append(i)
-    return list(boxes.values()), (lx0, ly0, lx1, ly1)
+    return _connected_components(L, ci[edge], cj[edge]), hull
 
 
 def order_boxes_reading(boxes_meta: list[tuple[float, float, float, float]]) -> list[int]:
@@ -499,42 +420,123 @@ def order_boxes_reading(boxes_meta: list[tuple[float, float, float, float]]) -> 
     return sorted(range(B), key=keys.__getitem__)
 
 
-def lines_to_box(
+def assemble_boxes(
     page: int,
     chars: CharArrays,
-    lines: list[np.ndarray],
-    assembled: list[tuple[str, np.ndarray]],
+    members: np.ndarray,
+    bounds: np.ndarray,
+    line_order: np.ndarray,
+    box_bounds: np.ndarray,
+    bboxes: list,
+    word_margin: float,
     char_index_base: np.ndarray,
-    bbox: tuple[float, float, float, float],
-) -> Box:
-    """One text box from its lines, given top to bottom with their
-    :func:`assemble_lines_bulk` output: line texts join with "\\n"
-    (``horizontal_box.py:197-200``), each line's offsets shift past
-    the text before it, and fontname/ncolor lift iff uniform across
-    the member chars. ``char_index_base`` maps positions in ``chars``
-    to document char indices; ``bbox`` is the caller's."""
-    text_parts: list[str] = []
-    all_off: list[np.ndarray] = []
-    line_spans: list[tuple[int, int]] = []
-    cursor = nchars = 0
-    for line, (ltext, loff) in zip(lines, assembled):
-        text_parts.append(ltext)
-        all_off.append(loff + cursor)
-        line_spans.append((nchars, nchars + len(line)))
-        nchars += len(line)
-        cursor += len(ltext) + 1  # past the "\n" separator
-    members = np.concatenate(lines)
-    x0, y0, x1, y1 = bbox
-    return Box(
-        page=page,
-        x0=x0, y0=y0, x1=x1, y1=y1,
-        text="\n".join(text_parts),
-        char_idx=char_index_base[members],
-        offsets=np.concatenate(all_off),
-        line_spans=line_spans,
-        fontname=_uniform(chars.fontname[members]),
-        ncolor=_uniform(chars.ncolor[members]),
-    )
+) -> list[Box]:
+    """Every box of one page, assembled in one segmented pass.
+
+    Line ``i`` holds the chars ``members[bounds[i]:bounds[i + 1]]``,
+    left to right; box ``b`` holds the lines
+    ``line_order[box_bounds[b]:box_bounds[b + 1]]``, top to bottom,
+    and has the bbox ``bboxes[b]``. The joins are pdfminer's: a space
+    goes before a char whose gap to the previous char of its line
+    exceeds ``word_margin * width(char)`` (LTTextLineHorizontal.add),
+    lines join with "\\n" (``horizontal_box.py:93-95,144-147,197-200``).
+    fontname/ncolor lift to a box iff identical across its chars
+    (:func:`_uniform`). ``char_index_base`` maps positions in
+    ``chars`` to document char indices.
+
+    The text of the whole page is one string with every box's lines
+    in order: a glyph, separator or "\\n" per slot, scattered into one
+    buffer. Each box's ``text``, ``char_idx``, ``offsets`` and
+    ``line_spans`` are slices of page arrays, so only the ``Box``
+    construction runs per box. ``offsets[i]`` counts the box's
+    separators and glyphs before char ``i`` within its line, plus the
+    code points of the lines above it (each with its "\\n").
+    """
+    L = len(line_order)
+    # ufuncs and array methods, not np.diff/np.cumsum/np.repeat: their
+    # Python wrappers cost more than the work on a table cell's chars
+    lens = (bounds[1:] - bounds[:-1])[line_order]
+    first = np.zeros(L + 1, dtype=np.int64)  # each line's chars, box order
+    np.add.accumulate(lens, out=first[1:])
+    n = int(first[-1])
+    idx = members[np.arange(n) + (bounds[:-1][line_order] - first[:-1]).repeat(lens)]
+
+    # sep[k]: a separator slot before char k — " " inside a line, "\n"
+    # before every line but the first
+    x0 = chars.x0[idx]
+    x1 = chars.x1[idx]
+    sep = np.empty(n, dtype=bool)
+    sep[0] = False
+    np.greater(x0[1:] - x1[:-1], word_margin * (x1 - x0)[1:], out=sep[1:])
+    sep[first[1:-1]] = True
+    slot = np.arange(n) + np.add.accumulate(sep, dtype=np.int64)
+    newline = slot[first[1:-1]] - 1
+    glyphs = chars.text[idx]
+    # a <U1 glyph array is one UTF-32 buffer: the page string is ONE
+    # reinterpretation, no Python string per char. A numpy U slot
+    # holding "" is NUL padding, indistinguishable from a "\x00" glyph
+    # under the view, and a byte-swapped >U1 would read as garbage, so
+    # those take the object path, which renders "" as ""
+    u1 = glyphs.dtype == _U1 and (glyphs != "").all()
+    buf = np.empty(int(slot[-1]) + 1, dtype=_U1 if u1 else object)
+    buf.fill(" ")
+    buf[slot] = glyphs
+    buf[newline] = "\n"
+    if u1:
+        text = str(buf.view(f"<U{len(buf)}")[0])
+        cp = slot
+        line_shift = 0
+    else:
+        text = "".join(buf.tolist())
+        # a glyph may be "" or more than one code point ("fi"): a line
+        # starts at its code point, its chars count glyph slots
+        extra = np.fromiter(map(len, glyphs.tolist()), np.int64, n) - 1
+        cp = slot + np.add.accumulate(extra) - extra
+        line_shift = (cp - slot)[first[:-1]].repeat(lens)
+    box_first = first[box_bounds]
+    start = cp[box_first[:-1]]
+    box_n = box_first[1:] - box_first[:-1]
+    offsets = slot + line_shift - start.repeat(box_n)
+    span = first[:-1] - box_first[:-1].repeat(box_bounds[1:] - box_bounds[:-1])
+    spans = list(zip(span.tolist(), (span + lens).tolist()))
+
+    def lift(attr: np.ndarray) -> list:
+        # each char against its box's first, as _uniform compares
+        v = attr[idx]
+        head = v[box_first[:-1]]
+        mixed = np.logical_or.reduceat(v != head.repeat(box_n), box_first[:-1])
+        return [None if m else h for h, m in zip(head.tolist(), mixed.tolist())]
+
+    char_idx = char_index_base[idx]
+    fontnames, ncolors = lift(chars.fontname), lift(chars.ncolor)
+    bf, bb, ts = box_first.tolist(), box_bounds.tolist(), start.tolist()
+    ts.append(len(text) + 1)  # past the "\n" a next box would follow
+    return [
+        Box(page, *bbox, text[ts[b]:ts[b + 1] - 1], char_idx[bf[b]:bf[b + 1]],
+            offsets[bf[b]:bf[b + 1]], spans[bb[b]:bb[b + 1]], fontnames[b], ncolors[b])
+        for b, bbox in enumerate(bboxes)
+    ]
+
+
+def _box_hulls(hull: np.ndarray, box: np.ndarray, box_bounds: np.ndarray) -> list:
+    """Box bboxes ``[x0, y0, x1, y1]`` from the line hulls, as
+    Python's ``min``/``max`` over each box's lines in line order give
+    them: a reduction may return either sign of a zero, while ``min``
+    and ``max`` keep the first of equal values, so a zero takes its
+    sign from the box's first zero line. (A line with a NaN coordinate
+    is a box of its own, so NaN never meets another value.)"""
+    by_box = np.argsort(box, kind="stable")
+    h = hull[:4, by_box]
+    bb = np.empty((4, len(box_bounds) - 1))
+    np.minimum.reduceat(h[:2], box_bounds[:-1], axis=1, out=bb[:2])
+    np.maximum.reduceat(h[2:], box_bounds[:-1], axis=1, out=bb[2:])
+    zero = bb == 0
+    if zero.any():
+        owner = box[by_box]
+        k, pos = np.nonzero((h == 0) & zero[:, owner])  # k, then line order
+        _, head = np.unique(k * bb.shape[1] + owner[pos], return_index=True)
+        bb[k[head], owner[pos[head]]] = h[k[head], pos[head]]
+    return bb.T.tolist()
 
 
 def build_boxes(
@@ -542,7 +544,8 @@ def build_boxes(
     cfg: ExtractConfig,
     char_index_base: np.ndarray | None = None,
 ) -> list[Box]:
-    """Full char→line→box assembly for ONE page's chars.
+    """Full char→line→box assembly for ONE page's chars, in reading
+    order (:func:`order_boxes_reading`).
 
     ``char_index_base`` maps local char positions back to document-level
     char indices (for link scanning); defaults to identity.
@@ -554,33 +557,20 @@ def build_boxes(
     heights = chars.y1 - chars.y0
     med_h = _median1d(heights) if len(heights) else 10.0
     y_tol = max(cfg.line_overlap * med_h, 1e-9)
-    lines = group_lines(chars, y_tol, char_margin=cfg.char_margin)
-    line_groups, hulls = group_boxes(chars, lines, cfg.line_margin)
-    lx0, ly0, lx1, ly1 = hulls if hulls else (None, None, None, None)
-    assembled = assemble_lines_bulk(chars, lines, cfg.word_margin)
-
-    page = int(chars.page[0])
-    boxes: list[Box] = []
-    metas: list[tuple[float, float, float, float]] = []
-    for group in line_groups:
-        # order lines inside the box top-to-bottom
-        group_sorted = sorted(group, key=lambda li: -ly1[li])
-        x0 = float(min(lx0[li] for li in group))
-        y0 = float(min(ly0[li] for li in group))
-        x1 = float(max(lx1[li] for li in group))
-        y1 = float(max(ly1[li] for li in group))
-        boxes.append(
-            lines_to_box(
-                page, chars,
-                [lines[li] for li in group_sorted],
-                [assembled[li] for li in group_sorted],
-                char_index_base, (x0, y0, x1, y1),
-            )
-        )
-        metas.append((x0, y0, x1, y1))
-
-    order = order_boxes_reading(metas)
-    return [boxes[i] for i in order]
+    members, bounds = _line_runs(chars, y_tol, char_margin=cfg.char_margin)
+    labels, hull = _box_labels(chars, members, bounds, cfg.line_margin)
+    # dense box ids in label order (a label is its box's smallest line)
+    root = labels == np.arange(len(labels))
+    box = (np.cumsum(root) - 1)[labels]
+    box_bounds = np.zeros(int(root.sum()) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(box), out=box_bounds[1:])
+    bboxes = _box_hulls(hull, box, box_bounds)
+    boxes = assemble_boxes(
+        int(chars.page[0]), chars, members, bounds,
+        np.lexsort((-hull[3], box)),  # each box's lines by descending ly1
+        box_bounds, bboxes, cfg.word_margin, char_index_base,
+    )
+    return [boxes[i] for i in order_boxes_reading(bboxes)]
 
 
 def box_words_lines(

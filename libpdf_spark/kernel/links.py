@@ -155,12 +155,15 @@ def resolve_target_uid(
         ),
         key=lambda t: (_TARGET_KIND_ORDER[t[1].kind], t[0]),
     )
+    # each page's candidates, still in visiting order: a link walks its
+    # own page only, not every page of the document
+    on_page: dict[int, list] = {}
+    for _, el in candidates:
+        on_page.setdefault(el.page, []).append(el)
     for link in links:
         if link.page is None:
             continue
-        for _, el in candidates:
-            if el.page != link.page:
-                continue
+        for el in on_page.get(link.page, ()):
             x0, y0, x1, y1 = el.bbox
             if x1 > link.x >= (x0 - tol) and (y1 + tol) > link.y >= y0:
                 link.target_uid = el.uid

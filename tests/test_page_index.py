@@ -12,13 +12,16 @@ import json
 import os
 import subprocess
 import sys
+import time
 from itertools import chain, zip_longest
 
 from libpdf_spark.config import DEFAULT_CONFIG, ExtractConfig
 from libpdf_spark.fixtures import DocBuilder
-from libpdf_spark.kernel.document import extract_document
-from libpdf_spark.kernel.geometry import crop_cell_box
+from libpdf_spark.kernel.document import DocElement, extract_document
+from libpdf_spark.kernel.elements import Figure, filter_figures
+from libpdf_spark.kernel.geometry import bbox_area, bbox_contains, bbox_overlaps, crop_cell_box
 from libpdf_spark.kernel.layout import CharArrays
+from libpdf_spark.kernel.links import _TARGET_KIND_ORDER, Link, resolve_target_uid
 from libpdf_spark.payload import decode_chars
 
 
@@ -130,3 +133,104 @@ def test_many_pages_with_a_table_each_load_in_bounded_time():
     assert got["pages"] == 400 and got["table"]
     assert got["text_ok"]
     assert got["wall_s"] < 5.0, got
+
+
+# --- document-wide loops that now walk one page ------------------------------
+def _best_of_3(fn, *args):
+    best = float("inf")
+    for _ in range(3):
+        t = time.perf_counter()
+        out = fn(*args)
+        best = min(best, time.perf_counter() - t)
+    return out, best
+
+
+def _old_filter_figures(raw, cfg):
+    """``filter_figures`` as it was: the pairwise dedup walked the
+    whole document and skipped pairs on other pages."""
+    figs = []
+    for f in raw:
+        x0 = max(0.0, float(f["x0"]))
+        y0 = max(0.0, float(f["y0"]))
+        x1 = max(0.0, float(f["x1"]))
+        y1 = max(0.0, float(f["y1"]))
+        if (x1 - x0) > cfg.figure_min_width and (y1 - y0) > cfg.figure_min_height:
+            figs.append(Figure(page=int(f["page"]), x0=x0, y0=y0, x1=x1, y1=y1))
+    drop: set[int] = set()
+    for i in range(len(figs)):
+        if i in drop:
+            continue
+        for j in range(len(figs)):
+            if i == j or j in drop or figs[i].page != figs[j].page:
+                continue
+            bi, bj = figs[i].bbox, figs[j].bbox
+            if bbox_contains(bi, bj):
+                drop.add(j)
+            elif bbox_overlaps(bi, bj) and bbox_area(bi) >= bbox_area(bj):
+                drop.add(j)
+    return [f for k, f in enumerate(figs) if k not in drop]
+
+
+def test_figure_dedup_per_page_matches_the_document_loop():
+    """800 pages with one figure each; every tenth page has two more,
+    one inside it and a larger one overlapping it, and every seventh
+    page a figure below the size floor; pages interleaved. The same
+    figures survive as with the whole-document loop, in a small share
+    of its time (it was quadratic in pages)."""
+    raw = []
+    for p in range(1, 801):
+        raw.append(dict(page=p, x0=50.0, y0=50.0, x1=250.0, y1=250.0))
+        if p % 10 == 0:
+            raw.append(dict(page=p, x0=60.0, y0=60.0, x1=90.0, y1=90.0))
+            raw.append(dict(page=p, x0=200.0, y0=200.0, x1=500.0, y1=400.0))
+        if p % 7 == 0:
+            raw.append(dict(page=p, x0=-5.0, y0=10.0, x1=5.0, y1=300.0))
+    raw = raw[1::2] + raw[::2]
+    got, t_new = _best_of_3(filter_figures, raw, DEFAULT_CONFIG)
+    exp, t_old = _best_of_3(_old_filter_figures, raw, DEFAULT_CONFIG)
+    assert [(f.page, f.bbox) for f in got] == [(f.page, f.bbox) for f in exp]
+    assert sorted((f.page, f.x1) for f in got) == [
+        (p, 500.0 if p % 10 == 0 else 250.0) for p in range(1, 801)
+    ]
+    assert t_new < 0.25 * t_old, (t_new, t_old)
+
+
+def _old_resolve(links, elements, cfg):
+    """The link resolution that walked every candidate of the document
+    for each link."""
+    tol = cfg.target_coor_tolerance
+    candidates = sorted(
+        ((i, el) for i, el in enumerate(elements) if el.kind in _TARGET_KIND_ORDER),
+        key=lambda t: (_TARGET_KIND_ORDER[t[1].kind], t[0]),
+    )
+    for link in links:
+        if link.page is None:
+            continue
+        for _, el in candidates:
+            if el.page != link.page:
+                continue
+            x0, y0, x1, y1 = el.bbox
+            if x1 > link.x >= (x0 - tol) and (y1 + tol) > link.y >= y0:
+                link.target_uid = el.uid
+                break
+
+
+def test_link_targets_per_page_match_the_document_walk():
+    """800 pages, each with a paragraph and a figure over the same spot
+    (the figure is visited first) and a cell (never a target), one
+    link a page: the same first match as the whole-document walk, in a
+    small share of its time (it was quadratic in pages)."""
+    elements = []
+    for p in range(800, 0, -1):
+        for kind in ("paragraph", "cell", "figure"):
+            elements.append(DocElement(kind=kind, page=p, x0=100.0, y0=100.0,
+                                       x1=300.0, y1=200.0, uid=f"{kind}.{p}"))
+    def links():
+        return [Link(0, 1, page=p, x=(50.0, 150.0, 400.0)[p % 3], y=150.0)
+                for p in range(1, 801)] + [Link(0, 1)]
+    got, exp = links(), links()
+    _, t_new = _best_of_3(resolve_target_uid, got, elements, DEFAULT_CONFIG)
+    _, t_old = _best_of_3(_old_resolve, exp, elements, DEFAULT_CONFIG)
+    assert [l.target_uid for l in got] == [l.target_uid for l in exp]
+    assert {l.target_uid for l in got} == {None} | {f"figure.{p}" for p in range(1, 801) if p % 3 < 2}
+    assert t_new < 0.25 * t_old, (t_new, t_old)
