@@ -277,7 +277,30 @@ def group_boxes(
     lines: list[np.ndarray],
     line_margin: float,
 ) -> list[list[int]]:
-    """Group text lines into boxes (LTTextBox grouping).
+    """Group text lines into boxes (LTTextBox grouping): the labels
+    of :func:`_box_labels` as lists.
+
+    Returns ``(groups, line_hulls)``: lists of line indices per box
+    (ordered by their smallest line index) and the per-line hulls
+    (lx0, ly0, lx1, ly1) so callers don't recompute them per char.
+    """
+    if not lines:
+        return [], None
+    bounds = np.zeros(len(lines) + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, lines), np.int64, len(lines)), out=bounds[1:])
+    labels, hull = _box_labels(chars, np.concatenate(lines), bounds, line_margin)
+    boxes: dict[int, list[int]] = {}
+    for i, lab in enumerate(labels.tolist()):
+        boxes.setdefault(lab, []).append(i)
+    return list(boxes.values()), tuple(hull[:4])
+
+
+def _box_labels(
+    chars: CharArrays, members: np.ndarray, bounds: np.ndarray, line_margin: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """The box label of every line of :func:`_line_runs` (the
+    smallest line index in its box) and the line hulls as rows
+    ``lx0, ly0, lx1, ly1, height``.
 
     pdfminer groups two lines into one box when they overlap
     horizontally and their vertical gap is below
@@ -299,28 +322,7 @@ def group_boxes(
     line directly (it can truly match them all); such lines, and many
     lines sharing one y-band, are the inputs whose candidates grow
     faster than L.
-
-    Returns ``(groups, line_hulls)``: lists of line indices per box
-    (ordered by their smallest line index) and the per-line hulls
-    (lx0, ly0, lx1, ly1) so callers don't recompute them per char.
     """
-    if not lines:
-        return [], None
-    bounds = np.zeros(len(lines) + 1, dtype=np.int64)
-    np.cumsum(np.fromiter(map(len, lines), np.int64, len(lines)), out=bounds[1:])
-    labels, hull = _box_labels(chars, np.concatenate(lines), bounds, line_margin)
-    boxes: dict[int, list[int]] = {}
-    for i, lab in enumerate(labels.tolist()):
-        boxes.setdefault(lab, []).append(i)
-    return list(boxes.values()), tuple(hull[:4])
-
-
-def _box_labels(
-    chars: CharArrays, members: np.ndarray, bounds: np.ndarray, line_margin: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """:func:`group_boxes` over the lines of :func:`_line_runs`: the
-    box label of every line (the smallest line index in its box) and
-    the line hulls as rows ``lx0, ly0, lx1, ly1, height``."""
     L = len(bounds) - 1
     starts = bounds[:-1]
     hull = np.empty((5, L))

@@ -762,18 +762,22 @@ def _random_chars(rng, trial):
     fonts = None if trial % 4 else [("F1", "F2")[i] for i in rng.integers(0, 2, n)]
     colors = [_NCOLORS[1]] * n if trial % 5 == 0 else [_NCOLORS[i] for i in rng.integers(0, 3, n)]
     page = np.where(rng.random(n) < 0.1, 2, 1) if trial % 7 == 0 else None
-    x1, y1 = x0 + w, y0 + h
-    if trial % 6 == 5:  # segment edges: NaN, ±inf and ±0.0 x, ±0.0 y
-        edge = np.random.default_rng(trial)  # leaves the other trials as they were
-        _spoil_with(edge, (x0, x1), _EDGE)
-        _spoil_with(edge, (y0, y1), (0.0, -0.0))
-    return _chars(x0, x1, y0, y1, glyphs, page, fonts, colors, u1)
+    return _chars(x0, x0 + w, y0, y0 + h, glyphs, page, fonts, colors, u1)
 
 
 def _spoil_with(rng, arrays, values, frac=0.15):
     for a in arrays:
         hit = rng.random(len(a)) < frac
         a[hit] = rng.choice(values, int(hit.sum()))
+
+
+def _spoiled(chars, rng):
+    """A copy of ``chars`` with segment-edge coordinates: NaN, ±inf
+    and ±0.0 x, ±0.0 y."""
+    chars = chars.take(np.arange(len(chars)))
+    _spoil_with(rng, (chars.x0, chars.x1), _EDGE)
+    _spoil_with(rng, (chars.y0, chars.y1), (0.0, -0.0))
+    return chars
 
 
 def _box_fields(b):
@@ -795,35 +799,58 @@ def _same_box_and_words(chars, got, exp, word_margin):
     )
 
 
-@np.errstate(invalid="ignore", over="ignore")  # inf - inf on the edge trials is deliberate
+def _assert_cell_and_page_match(chars, bbox, cfg, trial, spoil_page_y=None):
+    exp = _old_crop_cell_box(chars, 1, bbox, cfg)
+    got = crop_cell_box(chars, 1, bbox, cfg)
+    assert _same_box_and_words(chars, got, exp, cfg.word_margin), trial
+    on_page = np.flatnonzero(chars.page == 1)
+    sub = chars.take(on_page)
+    if spoil_page_y is not None:
+        # NaN and ±inf y on pages only: a non-finite y-center splits
+        # lines by the page rule, which the per-char cell loop does
+        # not follow (test_cell_with_overflowing_y_centers_...)
+        _spoil_with(spoil_page_y, (sub.y0, sub.y1), _EDGE)
+    exp_boxes = _old_build_boxes(sub, cfg, char_index_base=on_page)
+    got_boxes = build_boxes(sub, cfg, char_index_base=on_page)
+    assert len(got_boxes) == len(exp_boxes), trial
+    for g, e in zip(got_boxes, exp_boxes):
+        assert _same_box_and_words(chars, g, e, cfg.word_margin), trial
+
+
+def _fuzz_cfg(k):
+    return ExtractConfig(
+        line_overlap=(0.1, 0.5, 2.0, 5.0)[k % 4],
+        word_margin=(0.0, 0.1, 0.5)[k // 4 % 3],
+    )
+
+
+@np.errstate(invalid="ignore", over="ignore")  # inf - inf on the edge copies is deliberate
 def test_cells_and_pages_match_old_paths():
     rng = np.random.default_rng(29)
     for trial in range(3000):
         chars = _random_chars(rng, trial)
-        cfg = ExtractConfig(
-            line_overlap=(0.1, 0.5, 2.0, 5.0)[trial % 4],
-            word_margin=(0.0, 0.1, 0.5)[trial // 4 % 3],
-        )
+        cfg = _fuzz_cfg(trial)
         # the cell bbox clips a random margin off each side
         x0, y0 = chars.x0.min(), chars.y0.min()
         x1, y1 = chars.x1.max(), chars.y1.max()
         cut = rng.choice([0.0, 0.0, 0.0, 1.0, 4.0], 4)
         bbox = (x0 + cut[0], y0 + cut[1], x1 - cut[2], y1 - cut[3])
-        exp = _old_crop_cell_box(chars, 1, bbox, cfg)
-        got = crop_cell_box(chars, 1, bbox, cfg)
-        assert _same_box_and_words(chars, got, exp, cfg.word_margin), trial
-        on_page = np.flatnonzero(chars.page == 1)
-        sub = chars.take(on_page)
+        _assert_cell_and_page_match(chars, bbox, cfg, trial)
         if trial % 6 == 5:
-            # NaN and ±inf y on pages only: a non-finite y-center splits
-            # lines by the page rule, which the per-char cell loop above
-            # does not follow (test_cell_with_overflowing_y_centers_...)
-            _spoil_with(np.random.default_rng((trial, 1)), (sub.y0, sub.y1), _EDGE)
-        exp_boxes = _old_build_boxes(sub, cfg, char_index_base=on_page)
-        got_boxes = build_boxes(sub, cfg, char_index_base=on_page)
-        assert len(got_boxes) == len(exp_boxes), trial
-        for g, e in zip(got_boxes, exp_boxes):
-            assert _same_box_and_words(chars, g, e, cfg.word_margin), trial
+            # one extra check in six on a spoiled copy, from a generator
+            # of its own so the clean trials stay as they are; its
+            # config cycles through all twelve, and its cell is the
+            # clean bbox widened to hold ±0.0, or the whole plane so
+            # ±inf chars fall inside it too
+            edge = np.random.default_rng(trial)
+            spoiled = _spoiled(chars, edge)
+            if edge.random() < 0.5:
+                wide = (min(bbox[0], 0.0), min(bbox[1], 0.0), bbox[2], bbox[3])
+            else:
+                wide = (-np.inf, -np.inf, np.inf, np.inf)
+            _assert_cell_and_page_match(
+                spoiled, wide, _fuzz_cfg(trial // 6), trial, spoil_page_y=edge
+            )
 
 
 def test_cell_with_overflowing_y_centers_splits_like_build_boxes():
