@@ -12,6 +12,12 @@ re-expressed over vectorized kernels, for ONE embedded document:
   (A5) + uid paths (X10) → link scanning (J7/J9) + target resolution
   (J8) → extracted_text.
 
+The page textboxes are the one stage that runs per batch, not per
+document: :func:`lay_out_documents` decodes every document of an Arrow
+batch (pages, meta, chars) and lays out all their pages together,
+then :func:`extract_document` runs the rest of each document's DAG on
+its entry. A document alone is a batch of one.
+
 Runs inside a ``mapInPandas`` batch; pure Python+numpy, no Spark.
 """
 
@@ -124,18 +130,10 @@ def _apply_smart_crop_objs(objs: list, n_pages: int, page_h: dict, cfg: ExtractC
     return [o for o, k in zip(objs, keep) if k]
 
 
-def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
-    """Run the full extraction DAG on one parsed payload."""
-    pages = _requested_pages(doc.get("pages", []), cfg)
-    page_dims = {
-        int(p["number"]): (float(p["width"]), float(p["height"])) for p in pages
-    }
-    page_h = {n: wh[1] for n, wh in page_dims.items()}
-    n_pages = len(pages)
-    page_numbers = sorted(page_dims)
-
+def _meta(doc: dict) -> dict:
+    """File metadata (S4), dates as ISO-8601 (X5)."""
     meta_raw = doc.get("meta") or {}
-    meta = {
+    return {
         "author": meta_raw.get("author"),
         "title": meta_raw.get("title"),
         "subject": meta_raw.get("subject"),
@@ -147,14 +145,67 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
         "trapped": meta_raw.get("trapped"),
     }
 
-    # keep the chars of the wanted pages: one span per page, and no
-    # take when the spans already cover every char
-    chars = CharArrays.from_payload(doc.get("chars"))
-    spans = [chars.page_span(pno) for pno in page_numbers]
-    if sum(hi - lo for lo, hi in spans) < len(chars):
-        chars = chars.take(np.concatenate(
-            [np.empty(0, np.int64), *(np.arange(lo, hi) for lo, hi in spans)]
-        ))
+
+@dataclass
+class DocLayout:
+    """One document decoded and laid out: its wanted pages, metadata,
+    chars and each page's text boxes — what :func:`extract_document`
+    reads besides the rest of the payload."""
+
+    pages: list[dict]
+    page_dims: dict[int, tuple[float, float]]
+    meta: dict
+    chars: CharArrays
+    page_boxes: dict[int, list[Box]]
+
+
+def lay_out_documents(docs: list[dict], cfg: ExtractConfig) -> list[DocLayout | Exception]:
+    """Decode every document of a batch — page prune (S3), file meta
+    (S4), chars — then lay out every page of all of them in one
+    :func:`boxes_for_page` call (S1/F1/F3 + grouping). A document that
+    fails to decode is its own exception in the result. If the call
+    raises, each document is laid out alone, so a bad document ends as
+    its own exception and every other one as it would alone."""
+    decoded: list = []
+    for doc in docs:
+        try:
+            pages = _requested_pages(doc.get("pages", []), cfg)
+            dims = {int(p["number"]): (float(p["width"]), float(p["height"])) for p in pages}
+            meta = _meta(doc)
+            chars, bounds = CharArrays.from_payload(doc.get("chars")).keep_pages(sorted(dims))
+            decoded.append((DocLayout(pages, dims, meta, chars, {}), bounds))
+        except Exception as exc:  # noqa: BLE001 — per-document isolation
+            decoded.append((exc, None))
+    ok = [(d, bounds) for d, bounds in decoded if bounds is not None]
+    try:
+        laid = boxes_for_page(
+            [(d.chars, bounds, [d.page_dims[p] for p in sorted(d.page_dims)]) for d, bounds in ok],
+            cfg,
+        )
+    except Exception as exc:  # noqa: BLE001 — rerun alone to find the bad one
+        if len(docs) == 1:
+            return [exc]
+        return [lay_out_documents([doc], cfg)[0] for doc in docs]
+    for (d, _), boxes in zip(ok, laid):
+        d.page_boxes = dict(zip(sorted(d.page_dims), boxes))
+    return [d for d, _ in decoded]
+
+
+def extract_document(
+    doc: dict, cfg: ExtractConfig, layout: DocLayout | Exception | None = None
+) -> DocResult:
+    """Run the full extraction DAG on one parsed payload. ``layout`` is
+    the document's entry of :func:`lay_out_documents` over the batch it
+    came in (an exception there is raised here); without one, the
+    document is laid out as a batch of one."""
+    if layout is None:
+        (layout,) = lay_out_documents([doc], cfg)
+    if isinstance(layout, Exception):
+        raise layout
+    pages, page_dims, chars = layout.pages, layout.page_dims, layout.chars
+    page_h = {n: wh[1] for n, wh in page_dims.items()}
+    n_pages = len(pages)
+    page_numbers = sorted(page_dims)
 
     # Smart header/footer crop (A4) runs per element kind immediately
     # after that kind's extraction, exactly like the reference's ×4
@@ -196,11 +247,8 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
         if cfg.smart_page_crop:
             tables = _apply_smart_crop_objs(tables, n_pages, page_h, cfg)
 
-    # --- page textboxes (S1/F1/F3 + grouping) ---
-    page_boxes: dict[int, list[Box]] = {}
-    for pno in page_numbers:
-        w, h = page_dims[pno]
-        page_boxes[pno] = boxes_for_page(chars, pno, w, h, cfg)
+    # --- page textboxes: laid out with the batch (lay_out_documents) ---
+    page_boxes = dict(layout.page_boxes)
 
     # figure text from boxes fully inside (J3) — before F7 removal
     attach_figure_text(figures, page_boxes)
@@ -343,7 +391,7 @@ def extract_document(doc: dict, cfg: ExtractConfig) -> DocResult:
     extracted_text = "\n\n".join(content_parts)
 
     return DocResult(
-        meta=meta,
+        meta=layout.meta,
         pages=[
             {"number": n, "width": page_dims[n][0], "height": page_dims[n][1]}
             for n in page_numbers

@@ -45,7 +45,7 @@ def crop_cell_box(
     """Single-textbox crop of a table cell or a rect —
     ``lt_textbox_crop`` semantics (``utils.py:547-582`` +
     ``assemble_to_lt_textlines`` ``utils.py:585-631``): the chars
-    inside ``bbox`` group into lines as :func:`group_lines` does, with
+    inside ``bbox`` group into lines as :func:`_line_runs` forms them, with
     an ABSOLUTE y-center tolerance (the reference passes
     LA_PARAMS["line_overlap"] = 0.5 as plain points) and NO
     char_margin column split; then the page path's
@@ -64,7 +64,7 @@ def crop_cell_box(
     members, bounds = _line_runs(sub, cfg.line_overlap)  # absolute points, reference quirk
     n_lines = len(bounds) - 1
     (box,) = assemble_boxes(
-        page, sub, members, bounds, np.arange(n_lines), np.array([0, n_lines]),
+        [page], sub, members, bounds, np.arange(n_lines), np.array([0, n_lines]),
         [(float(sub.x0.min()), float(sub.y0.min()), float(sub.x1.max()), float(sub.y1.max()))],
         cfg.word_margin, idx + lo,
     )

@@ -147,6 +147,13 @@ def run_resumable(
 
     Returns a summary dict. ``max_chunks`` bounds how many chunks this
     invocation commits (useful to simulate interruption in tests).
+
+    Each chunk scans ``transcripts`` again and filters it to its
+    buckets. Persisting the bucketed input so a run scans it once was
+    measured and did not pay: 2,810 / 2,909 / 3,195 ms a
+    ``corpus_resumable`` pass against 2,708 / 2,699 / 3,247 ms without
+    (three interleaved pairs, seed 5, 4-vCPU host), no faster within
+    the spread of the pairs.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F

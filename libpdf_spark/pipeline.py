@@ -9,7 +9,9 @@ Lifecycle of :func:`extract_turns` (SURVEY.md §3.4), default
                                                      cannot see inside it)
       → mapInPandas(extract_batch)                -- the whole turn-local DAG,
                                                      Arrow-batched, no
-                                                     per-row Python driver code
+                                                     per-row Python driver code;
+                                                     ONE layout call over every
+                                                     page of a batch
       → salted repartition on conv_id             -- long-conversation skew
       → write / orderBy(conv_id, turn_idx)        -- stable output ordering
 
@@ -24,9 +26,13 @@ Design notes for 100 TB:
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` — set by
   :func:`configure_session`;
 * per-turn independence makes salting safe: any turn can be processed
-  on any partition; output ordering is restored at write time;
+  on any partition; output ordering is restored at write time. The
+  batch-wide layout keeps it: nothing it forms crosses a page, so a
+  turn's output does not depend on the turns batched with it;
 * parse failures NEVER abort the job — they surface as
-  ``parse_ok = false`` rows feeding the metrics table.
+  ``parse_ok = false`` rows feeding the metrics table. If the layout
+  call raises, the batch's documents are laid out one at a time, so a
+  bad turn is still one failure row and no other row changes.
 """
 
 from __future__ import annotations
@@ -37,7 +43,7 @@ from typing import TYPE_CHECKING
 import pandas as pd
 
 from libpdf_spark.config import DEFAULT_CONFIG, ExtractConfig
-from libpdf_spark.kernel.document import extract_document
+from libpdf_spark.kernel.document import extract_document, lay_out_documents
 from libpdf_spark.payload import find_payload
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -157,33 +163,39 @@ def make_extract_batch(cfg: ExtractConfig):
             tools = pdf["tool"].to_numpy() if "tool" in pdf else [None] * len(pdf)
             convs = pdf["conv_id"].to_numpy()
             turns = pdf["turn_idx"].to_numpy()
+            docs: list = [None] * len(pdf)
+            errors: list = [None] * len(pdf)
             for i in range(len(pdf)):
-                text = texts[i]
-                tool = tools[i]
-                bytes_in = (len(text) if isinstance(text, str) else 0) + (
-                    len(tool) if isinstance(tool, str) else 0
-                )
-                doc = None
-                err = None
                 try:
-                    doc = find_payload(
-                        text if isinstance(text, str) else None,
+                    docs[i] = find_payload(
+                        texts[i] if isinstance(texts[i], str) else None,
                         cfg.pdf_password,
                     )
-                    if doc is None:
-                        doc = find_payload(
-                            tool if isinstance(tool, str) else None,
+                    if docs[i] is None:
+                        docs[i] = find_payload(
+                            tools[i] if isinstance(tools[i], str) else None,
                             cfg.pdf_password,
                         )
                 except Exception as exc:  # noqa: BLE001 — per-turn isolation:
                     # one malformed document must record one turn's
                     # failure, never abort the whole Arrow batch/task
                     # (mirrors the extract stage below)
-                    err = f"payload: {type(exc).__name__}: {exc}"
+                    errors[i] = f"payload: {type(exc).__name__}: {exc}"
+            # every page of every document of the batch in one layout
+            # call; a document it cannot lay out gets its own exception.
+            # Popped in turn order, each turn's decoded document and
+            # layout are freed once its row is built
+            layouts = lay_out_documents([d for d in docs if d is not None], cfg)[::-1]
+            for i in range(len(pdf)):
+                text, tool, doc, err = texts[i], tools[i], docs[i], errors[i]
+                docs[i] = None
+                bytes_in = (len(text) if isinstance(text, str) else 0) + (
+                    len(tool) if isinstance(tool, str) else 0
+                )
                 result = None
-                if doc is not None and err is None:
+                if doc is not None:
                     try:
-                        result = extract_document(doc, cfg)
+                        result = extract_document(doc, cfg, layouts.pop())
                     except Exception as exc:  # noqa: BLE001 — per-turn isolation
                         err = f"extract: {type(exc).__name__}: {exc}"
                 out["conv_id"].append(convs[i])

@@ -3,10 +3,14 @@ or wall time per page on many pages.
 
 For each line count, builds a single-page document of short text lines
 in paragraphs of four (``fixtures.DocBuilder``), then loads it in a
-fresh child process. The child first loads a small warm-up document,
-resets the kernel's peak-RSS mark (``/proc/self/clear_refs``, Linux)
-and reads its RSS as the baseline, then times the large load. One JSON
-object per line count is printed:
+fresh child process. The child first loads a small warm-up document
+and reads its RSS as the baseline (``VmRSS``, Linux), then times the
+large load and reads the process's peak RSS after it (``VmHWM``): the
+warm-up document is far smaller, so that peak is the large load's.
+``getrusage``'s ``ru_maxrss`` does not serve here: Linux carries the
+parent's peak across fork and exec, so a child of this script read
+95 MB there before loading anything. One JSON object per line count
+is printed:
 
     {"lines": 8000, "wall_s": 0.205, "peak_rss_mb": 72.0,
      "base_rss_mb": 52.7, "rss_growth_mb": 19.4, "text_ok": true}
@@ -14,7 +18,7 @@ object per line count is printed:
 With ``--pages``, each count instead builds a document of that many
 copies of one page of about 800 chars (eight paragraphs of four
 lines), with ``--table`` also a ruled 6×4 table on every page, and
-the child times the load without the peak-RSS reset:
+the child times the load without reading memory:
 
     {"pages": 400, "table": true, "wall_s": 0.61, "ms_per_page": 1.52,
      "text_ok": true}
@@ -61,10 +65,7 @@ with open(sys.argv[2]) as fh:
     source, expected = json.load(fh)
 libpdf_spark.load(embed(doc_from_text("warm up the loader").build()), init_logging=False)
 peak = sys.argv[3] == "peak"
-if peak:
-    with open("/proc/self/clear_refs", "w") as fh:
-        fh.write("5")  # reset the peak (VmHWM) to the current RSS
-    base = status("VmRSS")
+base = status("VmRSS")
 t0 = time.perf_counter()
 result = libpdf_spark.load(source, init_logging=False)
 wall = time.perf_counter() - t0

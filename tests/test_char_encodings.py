@@ -115,7 +115,8 @@ def test_big_endian_text_takes_list_path():
 
     def box_texts(text):
         chars = CharArrays(**dict(cols, text=text)).take(page1)
-        return [b.text for b in build_boxes(chars, DEFAULT_CONFIG)]
+        boxes, _ = build_boxes(chars, np.array([0, len(chars)]), DEFAULT_CONFIG, page1)
+        return [b.text for b in boxes]
 
     want = box_texts(cols["text"])
     assert want

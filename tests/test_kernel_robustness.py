@@ -216,6 +216,7 @@ def test_one_tall_line_does_not_widen_every_window(monkeypatch):
     own line only, so 2,000 lines stay at a few candidates per line
     (a page-wide band would make about L²/2)."""
     import numpy as np
+    from test_layout_equivalence import group_boxes
 
     from libpdf_spark.kernel import layout
 
@@ -238,7 +239,7 @@ def test_one_tall_line_does_not_widen_every_window(monkeypatch):
         return a, b
 
     monkeypatch.setattr(layout, "_window_pairs", counting)
-    groups, _ = layout.group_boxes(Page, [np.array([i]) for i in range(n)], 0.4)
+    groups, _ = group_boxes(Page, [np.array([i]) for i in range(n)], 0.4)
     assert sum(made) < 10 * n, sum(made)
     # every line joins the box through its pair with the tall line
     assert groups == [list(range(n))]

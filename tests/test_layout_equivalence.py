@@ -1,28 +1,34 @@
-"""Equivalence pins for the r8 layout-kernel micro-optimizations.
+"""Equivalence pins for the layout kernel's rewrites.
 
 Each rewrite below replaced a slower exact form; these tests pin the
 bit-level equivalence argument so a future refactor cannot silently
 change grouping or medians:
 
-* ``_median1d`` vs ``np.median`` (partition selection, even-count
-  mean, NaN propagation);
-* ``_connected_components`` (edge-list union-find, min-member root)
-  vs min-label propagation over the adjacency matrix — the label VALUE
-  is load-bearing (it orders the box groups);
-* vectorized ``group_lines`` (one stable lexsort + global
-  char_margin cut) vs the per-line reference loop;
-* the sort-based sweeps of ``group_boxes`` (y-band candidate pairs)
-  and ``order_boxes_reading`` (1-D interval sweep) vs the all-pairs
-  dense forms they replaced, kept below as oracles;
-* the one char→line→box path (lines as ``group_lines`` forms them,
-  every box of a page in one ``assemble_boxes`` pass) for table cells
-  and pages, and word cuts read from the assembled offsets, vs the
-  per-char cell loop with ``assemble_line_text``, the per-line
-  ``assemble_lines_bulk`` with the per-box loop of ``build_boxes``,
-  and the gap-rule ``box_words_lines`` they replaced, kept below as
-  oracles. Both text oracles put the word space before a flagged
-  glyph whenever a line holds a glyph that is not one char (see
-  ``test_word_space_before_ligature_next_to_empty_glyph``).
+* the segmented ``_median1d`` vs ``np.median`` and the one-page
+  partition median it replaced (selection, even-count mean, NaN
+  propagation per segment);
+* ``_connected_components`` (min-label pointer jumping) vs min-label
+  propagation over the adjacency matrix and the edge-list union-find
+  it replaced — the label VALUE is load-bearing (it orders the boxes);
+* ``_line_runs`` as one-page ``group_lines`` (one stable lexsort +
+  global char_margin cut) vs the per-line reference loop;
+* the sort-based sweeps of ``_box_labels`` (y-band candidate pairs,
+  as one-page ``group_boxes``) and ``order_boxes_reading`` (segmented
+  1-D interval sweep) vs the all-pairs dense forms they replaced, and
+  the reading order vs the per-box column loop it replaced, page by
+  page and over batches of pages;
+* the one char→line→box path (every box of a page in one
+  ``assemble_boxes`` pass) for table cells and pages, and word cuts
+  read from the assembled offsets, vs the per-char cell loop with
+  ``assemble_line_text``, the per-line ``assemble_lines_bulk`` with
+  the per-box loop of ``build_boxes`` (over the old union-find, the
+  old reading-order loop and the old median), and the gap-rule
+  ``box_words_lines`` they replaced, kept below as oracles. Both text
+  oracles put the word space before a flagged glyph whenever a line
+  holds a glyph that is not one char (see
+  ``test_word_space_before_ligature_next_to_empty_glyph``);
+* the batch pass: every turn of a batch laid out together reads as it
+  reads alone.
 """
 from __future__ import annotations
 
@@ -32,19 +38,133 @@ import numpy as np
 
 from libpdf_spark.config import ExtractConfig
 from libpdf_spark.kernel.geometry import chars_in_bbox_mask, crop_cell_box
+from libpdf_spark.kernel import layout
 from libpdf_spark.kernel.layout import (
     Box,
     CharArrays,
+    _box_labels,
     _connected_components,
+    _line_runs,
     _median1d,
     _uniform,
     assemble_boxes,
     box_words_lines,
     build_boxes,
-    group_boxes,
-    group_lines,
     order_boxes_reading,
 )
+
+
+# --- one-page forms of the segmented kernel, as the package had them --------
+def group_lines(chars, y_tolerance, char_margin=None):
+    """The lines of :func:`_line_runs` over one page, one index array
+    each, top to bottom."""
+    members, bounds = _line_runs(chars, y_tolerance, char_margin)
+    bl = bounds.tolist()
+    return [members[a:b] for a, b in zip(bl[:-1], bl[1:])]
+
+
+def group_boxes(chars, lines, line_margin):
+    """The labels of :func:`_box_labels` over one page's ``lines`` as
+    lists of line indices per box (ordered by their smallest line),
+    and the line hulls ``(lx0, ly0, lx1, ly1)``."""
+    if not lines:
+        return [], None
+    bounds = np.zeros(len(lines) + 1, dtype=np.int64)
+    np.cumsum([len(line) for line in lines], out=bounds[1:])
+    labels, hull = _box_labels(chars, np.concatenate(lines), bounds, line_margin)
+    boxes: dict[int, list[int]] = {}
+    for i, lab in enumerate(labels.tolist()):
+        boxes.setdefault(lab, []).append(i)
+    return list(boxes.values()), tuple(hull[:4])
+
+
+def _page_boxes(chars, cfg, char_index_base=None):
+    """:func:`build_boxes` over ``chars`` as one page."""
+    if char_index_base is None:
+        char_index_base = np.arange(len(chars), dtype=np.int64)
+    boxes, _ = build_boxes(chars, np.array([0, len(chars)]), cfg, char_index_base)
+    return boxes
+
+
+def _reading_order(metas, seg=None):
+    """:func:`order_boxes_reading` over ``(x0, y0, x1, y1)`` tuples."""
+    return order_boxes_reading(np.array(metas, dtype=np.float64).reshape(-1, 4).T, seg).tolist()
+
+
+# --- the step-2a forms the segmented kernel replaced, kept as oracles -------
+def _union_find_cc(n, ii, jj):
+    """Edge-list union-find attaching the larger root under the
+    smaller: the ``_connected_components`` the pointer jumping
+    replaced."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for i, j in zip(ii.tolist(), jj.tolist()):
+        ri, rj = find(i), find(j)
+        if ri != rj:
+            if ri < rj:
+                parent[rj] = ri
+            else:
+                parent[ri] = rj
+    for x in range(n):
+        parent[x] = parent[parent[x]]
+    return np.array(parent, dtype=np.int64)
+
+
+def _old_median1d(a):
+    """The one-page partition median the segmented median replaced."""
+    n = a.size
+    k = n >> 1
+    if n & 1:
+        part = np.partition(a, (k, n - 1))
+        lo = hi = part[k]
+    else:
+        part = np.partition(a, (k - 1, k, n - 1))
+        lo, hi = part[k - 1], part[k]
+    if np.isnan(part[-1]):
+        return float("nan")
+    return float((lo + hi) / 2.0)
+
+
+def _old_order_boxes_reading(boxes_meta):
+    """The per-box column loop ``order_boxes_reading`` was on one page."""
+    from bisect import bisect_left
+
+    B = len(boxes_meta)
+    bx0 = [b[0] for b in boxes_meta]
+    bx1 = [b[2] for b in boxes_meta]
+    order = sorted((i for i in range(B) if bx0[i] < bx1[i]), key=bx0.__getitem__)
+    x0s = [bx0[i] for i in order]
+    columns: list[list[int]] = []
+    col: list[int] = []
+    reach: list[float] = []
+    r = -np.inf
+    for i, x0 in zip(order, x0s):
+        if x0 >= r:
+            columns.append([])
+        columns[-1].append(i)
+        r = max(r, bx1[i])
+        col.append(len(columns) - 1)
+        reach.append(r)
+    for i in range(B):
+        if bx1[i] <= bx0[i]:
+            k = bisect_left(x0s, bx1[i])
+            if k and reach[k - 1] > bx0[i]:
+                columns[col[k - 1]].append(i)
+    label = list(range(B))
+    col_minx = [x if x == x else np.inf for x in bx0]
+    for members in columns:
+        lab, minx = min(members), bx0[members[0]]
+        for i in members:
+            label[i] = lab
+            col_minx[i] = minx
+    keys = [(col_minx[i], label[i], -boxes_meta[i][3], bx0[i]) for i in range(B)]
+    return sorted(range(B), key=keys.__getitem__)
 
 
 def _old_cc(adjacent: np.ndarray) -> np.ndarray:
@@ -106,14 +226,45 @@ def test_median1d_matches_np_median():
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
             ref = float(np.median(a))
-        got = _median1d(a.copy())
+        got = float(_median1d(a.copy(), np.array([0, n]))[0])
         assert ref == got or (np.isnan(ref) and np.isnan(got)), (n, ref, got)
 
 
 def test_median1d_tiny_and_even():
-    assert _median1d(np.array([4.0])) == 4.0
-    assert _median1d(np.array([1.0, 2.0])) == 1.5
-    assert _median1d(np.array([3.0, 1.0, 2.0])) == 2.0
+    def one(*v):
+        return float(_median1d(np.array(v), np.array([0, len(v)]))[0])
+
+    assert one(4.0) == 4.0
+    assert one(1.0, 2.0) == 1.5
+    assert one(3.0, 1.0, 2.0) == 2.0
+
+
+def test_median1d_per_segment():
+    """Each segment's median is the one it has alone: NaN stays in its
+    own segment, an empty segment reads NaN, and ±inf and ±0.0
+    neighbours do not leak."""
+    rng = np.random.default_rng(8)
+    for trial in range(500):
+        sizes = rng.integers(0, 12, int(rng.integers(1, 9)))
+        parts = [rng.choice([0.0, -0.0, 1.5, 3.0, np.inf, -np.inf, np.nan], k)
+                 if trial % 3 == 0 else rng.normal(10.0, 3.0, k) for k in sizes]
+        bounds = np.zeros(len(sizes) + 1, dtype=np.int64)
+        np.cumsum(sizes, out=bounds[1:])
+        with np.errstate(invalid="ignore"):
+            got = _median1d(np.concatenate(parts), bounds)
+            alone = [_median1d(p, np.array([0, len(p)]))[0] for p in parts]
+        for k, (g, part, a) in enumerate(zip(got.tolist(), parts, alone)):
+            if len(part) == 0:
+                assert np.isnan(g), (trial, k)
+                continue
+            with warnings.catch_warnings(), np.errstate(invalid="ignore"):
+                warnings.simplefilter("ignore")
+                ref = float(np.median(part))
+            with np.errstate(invalid="ignore"):
+                old = _old_median1d(part.copy())
+            assert repr(g) == repr(float(a)), (trial, k)
+            assert g == old or (np.isnan(g) and np.isnan(old)), (trial, k)
+            assert g == ref or (np.isnan(g) and np.isnan(ref)) or np.isinf(part).any(), (trial, k)
 
 
 def test_connected_components_matches_min_label_propagation():
@@ -125,11 +276,27 @@ def test_connected_components_matches_min_label_propagation():
         np.fill_diagonal(m, False)
         ii, jj = np.nonzero(m)
         assert np.array_equal(_old_cc(m), _connected_components(n, ii, jj))
+        assert np.array_equal(_union_find_cc(n, ii, jj), _connected_components(n, ii, jj))
         # one direction of each edge, shuffled, gives the same labels
         up = ii < jj
         perm = rng.permutation(int(up.sum()))
         got = _connected_components(n, jj[up][perm], ii[up][perm])
         assert np.array_equal(_old_cc(m), got)
+        assert np.array_equal(_union_find_cc(n, jj[up][perm], ii[up][perm]), got)
+
+
+def test_connected_components_long_chains_and_empty():
+    # a path numbered against the hooking direction and a shuffled
+    # path both end with every node under node 0; no edges, no rounds
+    rng = np.random.default_rng(12)
+    n = 3000
+    for path in (np.arange(n)[::-1], rng.permutation(n)):
+        got = _connected_components(n, path[:-1], path[1:])
+        assert np.array_equal(got, np.zeros(n, dtype=np.int64))
+        assert np.array_equal(got, _union_find_cc(n, path[:-1], path[1:]))
+    none = np.empty(0, dtype=np.int64)
+    assert np.array_equal(_connected_components(4, none, none), np.arange(4))
+    assert _connected_components(0, none, none).tolist() == []
 
 
 def test_group_lines_matches_per_line_reference():
@@ -178,7 +345,7 @@ def test_assemble_boxes_view_fast_path_and_empty_slot_fallback():
     def one_box_per_line(glyphs, dtype):
         bounds = np.arange(0, n + 1, per)
         boxes = assemble_boxes(
-            1, P(np.array(glyphs, dtype=dtype)), np.arange(n), bounds,
+            [1] * nlines, P(np.array(glyphs, dtype=dtype)), np.arange(n), bounds,
             np.arange(nlines), np.arange(nlines + 1), [(0.0, 0.0, 1.0, 1.0)] * nlines,
             0.1, np.arange(n),
         )
@@ -397,7 +564,31 @@ def test_order_boxes_reading_sweep_matches_dense():
         if trial % 6 == 5:
             _spoil(rng, (x0, x1, y1), 0.1)
         metas = list(zip(x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist()))
-        assert order_boxes_reading(metas) == _dense_order_boxes_reading(metas), trial
+        exp = _dense_order_boxes_reading(metas)
+        assert _old_order_boxes_reading(metas) == exp, trial
+        assert _reading_order(metas) == exp, trial
+
+
+def test_order_boxes_reading_segments_do_not_leak():
+    """Pages of the reading-order trials, in batches of 1–12 segments
+    (some empty), read each page as it reads alone: no column, running
+    max or zero-width join reaches across a segment."""
+    rng = np.random.default_rng(20)
+    kinds = ("columns", "grid", "wild")
+    for trial in range(400):
+        pages = []
+        for k in range(int(rng.integers(1, 13))):
+            n = int(rng.integers(0, 30))
+            x0, y0, x1, y1 = _random_metas(rng, kinds[(trial + k) % 3], n)
+            if rng.random() < 0.3:
+                _spoil(rng, (x0, x1, y1), 0.1)
+            pages.append(list(zip(x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist())))
+        seg = np.arange(len(pages)).repeat([len(p) for p in pages])
+        got = _reading_order([m for p in pages for m in p], seg)
+        base = 0
+        for p in pages:
+            assert got[base:base + len(p)] == [base + i for i in _old_order_boxes_reading(p)], trial
+            base += len(p)
 
 
 def test_order_boxes_reading_degenerate_boxes():
@@ -414,7 +605,9 @@ def test_order_boxes_reading_degenerate_boxes():
         [(np.inf, 0, np.inf, 9), (-np.inf, 0, np.inf, 5), (3.0, 0, 4.0, 1)],
     ]
     for metas in cases:
-        assert order_boxes_reading(metas) == _dense_order_boxes_reading(metas), metas
+        exp = _dense_order_boxes_reading(metas)
+        assert _old_order_boxes_reading(metas) == exp, metas
+        assert _reading_order(metas) == exp, metas
 
 
 # --- the single box path vs the cell loop, box loop and gap-rule words ------
@@ -559,10 +752,15 @@ def _old_build_boxes(
     if char_index_base is None:
         char_index_base = np.arange(len(chars), dtype=np.int64)
     heights = chars.y1 - chars.y0
-    med_h = _median1d(heights) if len(heights) else 10.0
+    med_h = _old_median1d(heights) if len(heights) else 10.0
     y_tol = max(cfg.line_overlap * med_h, 1e-9)
     lines = group_lines(chars, y_tol, char_margin=cfg.char_margin)
-    line_groups, hulls = group_boxes(chars, lines, cfg.line_margin)
+    # the box graph's components by the old union-find
+    real, layout._connected_components = layout._connected_components, _union_find_cc
+    try:
+        line_groups, hulls = group_boxes(chars, lines, cfg.line_margin)
+    finally:
+        layout._connected_components = real
     lx0, ly0, lx1, ly1 = hulls if hulls else (None, None, None, None)
     assembled = _old_assemble_lines_bulk(chars, lines, cfg.word_margin)
 
@@ -610,7 +808,7 @@ def _old_build_boxes(
         )
         metas.append((x0, y0, x1, y1))
 
-    order = order_boxes_reading(metas)
+    order = _old_order_boxes_reading(metas)
     return [boxes[i] for i in order]
 
 
@@ -811,7 +1009,7 @@ def _assert_cell_and_page_match(chars, bbox, cfg, trial, spoil_page_y=None):
         # not follow (test_cell_with_overflowing_y_centers_...)
         _spoil_with(spoil_page_y, (sub.y0, sub.y1), _EDGE)
     exp_boxes = _old_build_boxes(sub, cfg, char_index_base=on_page)
-    got_boxes = build_boxes(sub, cfg, char_index_base=on_page)
+    got_boxes = _page_boxes(sub, cfg, char_index_base=on_page)
     assert len(got_boxes) == len(exp_boxes), trial
     for g, e in zip(got_boxes, exp_boxes):
         assert _same_box_and_words(chars, g, e, cfg.word_margin), trial
@@ -864,7 +1062,7 @@ def test_cell_with_overflowing_y_centers_splits_like_build_boxes():
     cfg = ExtractConfig()
     bbox = (0.0, 1.0e308, 100.0, 1.79e308)
     with np.errstate(over="ignore", invalid="ignore"):
-        (page_box,) = build_boxes(chars, cfg)
+        (page_box,) = _page_boxes(chars, cfg)
         cell = crop_cell_box(chars, 1, bbox, cfg)
         old = _old_crop_cell_box(chars, 1, bbox, cfg)
     assert page_box.line_spans == cell.line_spans == [(0, 4)]
@@ -879,8 +1077,164 @@ def test_word_space_before_ligature_next_to_empty_glyph():
     x0 = np.array([10.0, 15.0, 40.0, 46.0])
     chars = _chars(x0, x0 + 5.0, np.full(4, 700.0), np.full(4, 710.0), ["a", "", "fi", "x"])
     cfg = ExtractConfig()
-    (page_box,) = build_boxes(chars, cfg)
+    (page_box,) = _page_boxes(chars, cfg)
     cell = crop_cell_box(chars, 1, (0.0, 690.0, 100.0, 720.0), cfg)
     for box in (page_box, cell):
         assert box.text == "a fi x"
         assert box.offsets.tolist() == [0, 1, 3, 5]
+
+
+# --- the batch pass: each turn as it reads alone -----------------------------
+_PAGE_W, _PAGE_H = 612.0, 792.0
+_CROP = {"crop_top": 40.0, "crop_bottom": 40.0, "crop_left": 20.0, "crop_right": 20.0}
+
+
+def _batch_doc(rng, u1):
+    """A payload of 1–4 pages, each normal, empty, inside the crop
+    margins only, with NaN or ±inf y and ±0.0 x, or of zero-width and
+    inverted chars; packed ``<U1`` text when ``u1``, else columnar
+    object text with "fi" and "" glyphs. Chars come shuffled, so the
+    pages arrive out of order."""
+    from libpdf_spark.payload import to_packed_chars
+
+    pool = list("abcdefgh") if u1 else list("abcdefgh") + ["fi", ""]
+    cols = {k: [] for k in ("page", "text", "x0", "y0", "x1", "y1", "fontname", "ncolor")}
+    n_pages = int(rng.integers(1, 5))
+    for p in range(1, n_pages + 1):
+        kind = rng.choice(["normal", "normal", "empty", "cropped", "edge", "zero"])
+        if kind == "empty":
+            continue
+        for r in range(int(rng.integers(1, 7))):
+            k = int(rng.integers(1, 10))
+            w = rng.choice([5.0, 5.0, 3.0, 0.0], k)
+            x0 = (40.0 + 150.0 * (r % 2) * (kind == "normal")
+                  + np.cumsum(rng.choice([0.0, 0.2, 1.0, 20.0], k) + w) - w)
+            top = _PAGE_H - 30.0 if kind == "cropped" else 700.0 - 12.0 * r
+            y0 = top + rng.choice([0.0, 0.0, 0.25, -0.25], k)
+            x1, y1 = x0 + w, y0 + rng.choice([10.0, 10.0, 6.0, 0.0], k)
+            if kind == "zero":
+                x1 = x0 - rng.choice([0.0, 0.0, 2.0], k)
+            if kind == "edge":
+                _spoil_with(rng, (y0, y1), (np.nan, np.inf, -np.inf), frac=0.3)
+                _spoil_with(rng, (x0, x1), (0.0, -0.0), frac=0.2)
+            cols["page"] += [p] * k
+            cols["text"] += [pool[i] for i in rng.integers(0, len(pool), k)]
+            for key, v in (("x0", x0), ("y0", y0), ("x1", x1), ("y1", y1)):
+                cols[key] += v.tolist()
+            cols["fontname"] += [("F1", "F2")[i] for i in rng.integers(0, 2, k)]
+            cols["ncolor"] += [_NCOLORS[i] for i in rng.integers(0, 3, k)]
+    perm = rng.permutation(len(cols["page"])).tolist()
+    cols = {k: [v[i] for i in perm] for k, v in cols.items()}
+    chars = (to_packed_chars(cols) if u1 else None) or cols
+    return {
+        "pages": [{"number": p, "width": _PAGE_W, "height": _PAGE_H} for p in range(1, n_pages + 1)],
+        "chars": chars, "lines": [], "rects": [], "figures": [], "annos": [], "outline": [],
+    }
+
+
+def _doc_fields(res):
+    return [
+        (e.kind, e.uid, e.page, repr(e.bbox), e.text, [_box_fields(b) for b in e.boxes])
+        for e in res.elements
+    ] + [res.extracted_text, res.n_chars, res.pages]
+
+
+@np.errstate(invalid="ignore", over="ignore")  # NaN and ±inf y on the edge pages
+def test_batch_layout_reads_each_turn_as_alone(monkeypatch):
+    """Batches of 1–40 turns, with edge, empty, fully cropped and
+    zero-width pages next to normal ones and ``<U1`` turns next to
+    object-text turns: every turn's boxes from the batch pass, and its
+    DocResult, equal the turn laid out alone, on every Box field. Every
+    fourth batch is cut into passes of at most 1–300 chars, so passes
+    also start and end inside a document."""
+    from libpdf_spark.kernel import document
+    from libpdf_spark.kernel.document import extract_document, lay_out_documents
+
+    # a batch pass that raised would rerun each turn alone and hide the
+    # fault, so every pass must run through
+    raised = []
+    real = document.boxes_for_page
+
+    def watched(docs, cfg):
+        try:
+            return real(docs, cfg)
+        except Exception as exc:
+            raised.append(exc)
+            raise
+
+    monkeypatch.setattr(document, "boxes_for_page", watched)
+    rng = np.random.default_rng(41)
+    default = layout._PASS_CHARS
+    for trial in range(120):
+        cfg = ExtractConfig(**(_CROP if trial % 2 else {}), **(
+            {"line_overlap": 2.0, "word_margin": 0.5} if trial % 3 == 2 else {}))
+        monkeypatch.setattr(
+            layout, "_PASS_CHARS", int(rng.integers(1, 301)) if trial % 4 == 3 else default
+        )
+        docs = [_batch_doc(rng, rng.random() < 0.5) for _ in range(int(rng.integers(1, 41)))]
+        for doc, laid in zip(docs, lay_out_documents(docs, cfg)):
+            (alone,) = lay_out_documents([doc], cfg)
+            assert laid.page_boxes.keys() == alone.page_boxes.keys(), trial
+            for pno, boxes in alone.page_boxes.items():
+                got = [_box_fields(b) for b in laid.page_boxes[pno]]
+                assert got == [_box_fields(b) for b in boxes], (trial, pno)
+            assert _doc_fields(extract_document(doc, cfg, laid)) == _doc_fields(
+                extract_document(doc, cfg)), trial
+    assert not raised, raised[0]
+
+
+def test_passes_take_whole_pages_up_to_the_cap(monkeypatch):
+    """Pages go to passes in batch order, each pass as many whole pages
+    as fit in ``_PASS_CHARS`` chars, a larger page alone, and packed
+    ``<U1`` text apart from object text."""
+    passes = []
+    real = layout.build_boxes
+
+    def recording(chars, bounds, cfg, char_index):
+        passes.append((chars.text.dtype.kind, (bounds[1:] - bounds[:-1]).tolist()))
+        return real(chars, bounds, cfg, char_index)
+
+    monkeypatch.setattr(layout, "build_boxes", recording)
+    monkeypatch.setattr(layout, "_PASS_CHARS", 10)
+
+    def doc(sizes, u1):
+        n = sum(sizes)
+        page = np.repeat(np.arange(1, len(sizes) + 1), sizes)
+        x0 = np.arange(n, dtype=float) * 6.0
+        chars = _chars(x0, x0 + 5.0, np.full(n, 700.0), np.full(n, 710.0), ["a"] * n, page, u1=u1)
+        return chars.keep_pages(list(range(1, len(sizes) + 1))) + ([(612.0, 792.0)] * len(sizes),)
+
+    layout.boxes_for_page(
+        [doc([4, 5, 0], True), doc([3], False), doc([12, 2, 3], True), doc([6, 6], False)],
+        ExtractConfig(),
+    )
+    assert passes == [("U", [4, 5, 0]), ("U", [12]), ("U", [2, 3]), ("O", [3, 6]), ("O", [6])]
+
+
+@np.errstate(invalid="ignore", over="ignore")  # NaN and ±inf y on the edge pages
+def test_mixed_batch_keeps_u1_text_path(monkeypatch):
+    """A batch of packed ``<U1`` turns and object-text turns assembles
+    in two passes: the ``<U1`` turns' glyphs reach ``assemble_boxes``
+    as one ``<U1`` array (the one-buffer page string), the others as
+    an object array."""
+    from libpdf_spark.kernel.document import lay_out_documents
+
+    seen = []
+    real = layout.assemble_boxes
+
+    def recording(pages, chars, *args):
+        seen.append((chars.text.dtype, len(chars)))
+        return real(pages, chars, *args)
+
+    monkeypatch.setattr(layout, "assemble_boxes", recording)
+    rng = np.random.default_rng(43)
+    docs = [_batch_doc(rng, u1) for u1 in (True, False, True, False, True)]
+    u1_chars = obj_chars = 0
+    for doc, laid in zip(docs, lay_out_documents(docs, ExtractConfig())):
+        if laid.chars.text.dtype == np.dtype("<U1"):
+            u1_chars += len(laid.chars)
+        else:
+            obj_chars += len(laid.chars)
+    assert u1_chars and obj_chars
+    assert sorted(seen, key=str) == sorted(
+        [(np.dtype("<U1"), u1_chars), (np.dtype(object), obj_chars)], key=str)

@@ -728,6 +728,46 @@ def test_aes128_known_answer_and_cbc():
     assert _aes_cbc_decrypt(key, ciphertext(3)) == bytes(13)
 
 
+def _rc4_tuple_swaps(key: bytes, data: bytes) -> bytes:
+    """The RC4 ``pdfmini._rc4`` replaced, verbatim: tuple swaps, the
+    key read modulo its length, the output built byte by byte."""
+    s = list(range(256))
+    j = 0
+    for i in range(256):
+        j = (j + s[i] + key[i % len(key)]) & 0xFF
+        s[i], s[j] = s[j], s[i]
+    out = bytearray(len(data))
+    i = j = 0
+    for k, b in enumerate(data):
+        i = (i + 1) & 0xFF
+        j = (j + s[i]) & 0xFF
+        s[i], s[j] = s[j], s[i]
+        out[k] = b ^ s[(s[i] + s[j]) & 0xFF]
+    return bytes(out)
+
+
+def test_rc4_matches_tuple_swap_form():
+    """``_rc4`` gives the old form's bytes over every key length from 8
+    to 256 bits (PDF allows 40–128, in 8-bit steps) and data lengths
+    0–2,000, and fails the same way on an empty key."""
+    import numpy as np
+
+    from libpdf_spark.pdfmini import _rc4
+
+    rng = np.random.default_rng(31)
+    for key_len in range(1, 33):
+        for data_len in (0, 1, 2, 15, 16, 17, 255, 256, 257, int(rng.integers(0, 2001)), 2000):
+            key = rng.bytes(key_len)
+            data = rng.bytes(data_len)
+            got = _rc4(key, data)
+            assert type(got) is bytes
+            assert got == _rc4_tuple_swaps(key, data), (key_len, data_len)
+    with pytest.raises(ZeroDivisionError):
+        _rc4_tuple_swaps(b"", b"x")
+    with pytest.raises(ZeroDivisionError):
+        _rc4(b"", b"x")
+
+
 @pytest.mark.parametrize("mode", ["rc4", "aes", "aes256"])
 def test_encrypted_pdf_empty_password_roundtrip(mode):
     """Standard security handler, empty user password (the common

@@ -275,6 +275,95 @@ def test_payload_stage_catches_every_exception_class(monkeypatch):
         assert exc_cls.__name__ in bad["error"], bad["error"]
 
 
+def _isolation_batch(special):
+    """Five family documents, one chatter turn and the ``special`` turn
+    in the middle, as one Arrow-batch frame."""
+    from libpdf_spark.fixtures import FAMILIES
+    from libpdf_spark.payload import embed
+
+    names = sorted(FAMILIES)[:5]
+    texts = [embed(FAMILIES[n]().build()) for n in names[:3]] + [special, "chatter"]
+    texts += [embed(FAMILIES[n]().build()) for n in names[3:]]
+    return pd.DataFrame({
+        "conv_id": ["c"] * len(texts),
+        "turn_idx": pd.array(range(len(texts)), dtype="int32"),
+        "text": texts,
+        "tool": [None] * len(texts),
+    })
+
+
+def _batch_and_alone(batch, cfg):
+    """The rows of ``batch`` run as one Arrow batch, and run one turn
+    at a time."""
+    from libpdf_spark.pipeline import make_extract_batch
+
+    fn = make_extract_batch(cfg)
+    together = pd.concat(list(fn(iter([batch]))), ignore_index=True)
+    alone = pd.concat(
+        [next(fn(iter([batch.iloc[i:i + 1]]))) for i in range(len(batch))], ignore_index=True
+    )
+    return together, alone
+
+
+def test_layout_failure_of_one_turn_is_isolated(monkeypatch):
+    """A turn that makes the batch's one layout pass raise reruns the
+    batch one document at a time: the bad turn is one failure row with
+    the error it has alone, and every row equals the turn run alone."""
+    from libpdf_spark.fixtures import doc_from_text
+    from libpdf_spark.kernel import document
+    from libpdf_spark.payload import embed
+
+    calls = []
+    real = document.boxes_for_page
+
+    def fragile(docs, cfg):
+        calls.append(len(docs))
+        if any(613.0 in (w for w, _ in sizes) for _, _, sizes in docs):
+            raise OverflowError("synthetic layout failure")
+        return real(docs, cfg)
+
+    monkeypatch.setattr(document, "boxes_for_page", fragile)
+    bad = doc_from_text("a page the layout cannot take").build()
+    bad["pages"][0]["width"] = 613.0
+    batch = _isolation_batch(embed(bad))
+    together, alone = _batch_and_alone(batch, ExtractConfig())
+    pd.testing.assert_frame_equal(together, alone)
+    row = together.iloc[3]
+    assert not row["parse_ok"] and row["doc_found"]
+    assert row["error"] == "extract: OverflowError: synthetic layout failure"
+    assert together.drop(index=3)["error"].isna().all()
+    assert together["parse_ok"].sum() == 5
+    # the batch: one pass that raised, then one per document; alone:
+    # one pass per turn (none of the chatter turn's)
+    assert calls == [6] + [1] * 6 + [1, 1, 1, 1, 0, 1, 1]
+
+
+def test_corrupt_chars_of_one_turn_are_isolated(monkeypatch):
+    """A payload whose packed chars fail to decode fails alone: its row
+    carries the decode error it has alone, every row equals the turn
+    run alone, and the good documents still share one layout pass."""
+    from libpdf_spark.fixtures import FAMILIES
+    from libpdf_spark.kernel import document
+    from libpdf_spark.payload import embed
+
+    calls = []
+    real = document.boxes_for_page
+    monkeypatch.setattr(
+        document, "boxes_for_page", lambda docs, cfg: calls.append(len(docs)) or real(docs, cfg)
+    )
+    turn = embed(FAMILIES["plain_paragraphs"]().build())
+    corrupt = turn.replace('"n":', '"n":1', 1)  # packed chars claim 1,000 more
+    assert corrupt != turn
+    batch = _isolation_batch(corrupt)
+    together, alone = _batch_and_alone(batch, ExtractConfig())
+    pd.testing.assert_frame_equal(together, alone)
+    row = together.iloc[3]
+    assert not row["parse_ok"] and row["doc_found"]
+    assert row["error"].startswith("extract: ValueError: corrupt packed chars"), row["error"]
+    assert together["parse_ok"].sum() == 5
+    assert calls[0] == 5  # the five good documents in one pass
+
+
 def test_pdf_variant_rotation_reaches_all_ten():
     """ADVICE r4: the old rotation (ci*3+ti)%6 shared parity with the
     (ci+ti)%2==0 embed gate, so variants 1/3/5 — FlateDecode-only and

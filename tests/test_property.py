@@ -164,7 +164,8 @@ def test_build_boxes_conserves_every_char(doc):
     from libpdf_spark.payload import decode_chars
 
     chars = CharArrays(**decode_chars(doc["chars"]))
-    boxes = build_boxes(chars, ExtractConfig())
+    n = len(chars)
+    boxes, _ = build_boxes(chars, np.array([0, n]), ExtractConfig(), np.arange(n))
     seen = np.concatenate([b.char_idx for b in boxes]) if boxes else np.array([])
     assert sorted(seen.tolist()) == list(range(len(chars)))
     for b in boxes:
@@ -178,6 +179,8 @@ def test_build_boxes_conserves_every_char(doc):
 def test_words_lines_partition_box_chars(doc):
     """The word/line tree re-partitions the box's chars exactly: word
     texts concatenated per line equal the line text without spaces."""
+    import numpy as np
+
     from libpdf_spark.config import ExtractConfig
     from libpdf_spark.kernel.layout import (
         CharArrays,
@@ -188,7 +191,8 @@ def test_words_lines_partition_box_chars(doc):
 
     cfg = ExtractConfig()
     chars = CharArrays(**decode_chars(doc["chars"]))
-    for b in build_boxes(chars, cfg):
+    n = len(chars)
+    for b in build_boxes(chars, np.array([0, n]), cfg, np.arange(n))[0]:
         words, lines = box_words_lines(chars, b)
         assert len(lines) == len(b.line_spans)
         for li, line in enumerate(lines):
