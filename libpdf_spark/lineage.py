@@ -7,18 +7,25 @@ Design (no custom Catalyst work — idempotent partition overwrites):
 
 * the corpus is bucketed by ``pmod(hash(conv_id), n_buckets)``
   (``pipeline.conv_bucket``);
-* buckets are processed in CHUNKS; each chunk is one Spark job, the
-  data write: one unsalted extraction whose only exchange is on
-  ``bucket``, landing in ``<out>/data/bucket=<k>/`` via dynamic
-  partition overwrite — re-running a chunk replaces exactly its
-  partitions (idempotent);
+* buckets are processed in CHUNKS; each chunk's data write is one
+  unsalted extraction whose only exchange is on ``bucket``, landing in
+  ``<out>/data/bucket=<k>/`` via dynamic partition overwrite —
+  re-running a chunk replaces exactly its partitions (idempotent). The
+  write is an adaptive plan, so it runs as two Spark jobs: the
+  shuffle-map stage, then the result stage that writes;
+* at most two chunks are in flight: chunk k+1 plans, scans and maps
+  while chunk k writes and commits. Each chunk runs on its own
+  ``InheritableThread`` (its jobs keep the caller's job group) and
+  writes through its own ``.spark-staging-<uuid>`` directory into
+  partitions no other chunk touches. A chunk's lineage ``wall_sec``
+  therefore overlaps its neighbour's;
 * the write's result stage observes the ``pipeline.BUCKET_SUMS`` of
   each bucket of the chunk (turns, docs, parse failures, elements,
   bytes — the ``pipeline.extraction_metrics`` sums) through
   ``DataFrame.observe``, so the lineage counts need no read-back; the
   sums of all the chunk's buckets are ONE SQL aggregate, so the
   driver's work per chunk does not grow with its buckets;
-* after the write, the driver appends the chunk's lineage rows (one
+* after the write, the chunk's thread appends its lineage rows (one
   per bucket, with wall time) to ``<out>/lineage`` as ONE parquet
   file, written through the output's Hadoop ``FileSystem`` under a
   hidden temporary name and then renamed into place: a reader sees the
@@ -27,8 +34,9 @@ Design (no custom Catalyst work — idempotent partition overwrites):
   :func:`completed_buckets` all skip;
 * resume = run again: the pending buckets are the bucket universe minus
   the buckets of the ``done`` lineage rows (a set difference on the
-  driver) — a killed run restarts at the first uncommitted chunk,
-  never re-doing committed work and never producing duplicates.
+  driver) — a killed run loses at most the two chunks in flight and
+  redoes them, never re-doing committed work and never producing
+  duplicates.
 
 On Iceberg the same structure maps to ``overwrite ... where bucket=k``
 snapshots; parquet dynamic partition overwrite is the sandbox
@@ -134,6 +142,31 @@ def _append_lineage(spark, output_dir: str, name: str, rows: list[tuple]) -> Non
         raise OSError(f"lineage append: cannot rename {tmp.toString()} to {name}")
 
 
+class _Chunk:
+    """One chunk committing on its own ``InheritableThread``, so its
+    Spark jobs keep the caller's job group and local properties."""
+
+    def __init__(self, commit, buckets: list[int]):
+        from pyspark import InheritableThread
+
+        self.buckets, self.error = buckets, None
+        self.thread = InheritableThread(target=self._run, args=(commit,))
+        self.thread.start()
+
+    def _run(self, commit) -> None:
+        try:
+            commit(self.buckets)
+        except BaseException as exc:  # noqa: BLE001 — raised by result()
+            self.error = exc
+
+    def result(self) -> list[int]:
+        """Wait for the chunk; its buckets, or the error it raised."""
+        self.thread.join()
+        if self.error is not None:
+            raise self.error
+        return self.buckets
+
+
 def run_resumable(
     spark,
     transcripts,
@@ -146,7 +179,26 @@ def run_resumable(
     """Run (or resume) the extraction job over ``transcripts``.
 
     Returns a summary dict. ``max_chunks`` bounds how many chunks this
-    invocation commits (useful to simulate interruption in tests).
+    invocation starts (useful to simulate interruption in tests);
+    ``committed_chunks`` lists the committed ones in chunk order.
+
+    Chunk k+1 starts while chunk k still writes, and the driver waits
+    for the oldest chunk before it starts a third. A chunk that raises
+    stops the run: no further chunk starts, and its error is raised
+    once the other chunk in flight has finished.
+
+    A chunk costs a fixed time beyond its Python work: with the chunks
+    laid end to end, a ``corpus_resumable`` pass (seed 5, ``local[2]``)
+    took 1.18-1.42 s in one chunk, 1.59-1.66 s in 2, 2.1-2.6 s in 4
+    and 3.7-4.1 s in 8, about 0.35 s a chunk: planning the write, the
+    gap between its two jobs, a result stage that runs as one task
+    (adaptive execution coalesces the chunk's shuffle into one
+    partition) and a scan of its own. Two chunks in flight keep both
+    cores busy through those gaps: in another session the same pass
+    took 1.80 / 1.90 / 2.66 s (median) in 1 / 2 / 4 chunks.
+    Repartitioning a chunk into one partition per bucket, to spread
+    that result stage over more tasks, was measured slower (1,837 ->
+    2,021 ms a pass).
 
     Each chunk scans ``transcripts`` again and filters it to its
     buckets. Persisting the bucketed input so a run scans it once was
@@ -173,8 +225,7 @@ def run_resumable(
 
     bucketed = transcripts.withColumn("bucket", conv_bucket(n_buckets))
 
-    committed = []
-    for chunk in chunks:
+    def commit(chunk: list[int]) -> None:
         t0 = time.time()
         # the bucket filter and the lineage sums are each ONE SQL
         # expression, so building a chunk's plan costs the driver the
@@ -215,7 +266,21 @@ def run_resumable(
             for b, observed in zip(chunk, obs.get["sums"])
         ]
         _append_lineage(spark, output_dir, f"part-{run_id}-{chunk[0]}.parquet", rows)
-        committed.append(chunk)
+
+    committed: list[list[int]] = []
+    flight: list[_Chunk] = []  # oldest first
+    try:
+        for chunk in chunks:
+            # wait for the oldest chunk before starting a third, and
+            # stop at a chunk that failed while an older one committed
+            while len(flight) == 2 or (flight and flight[-1].error is not None):
+                committed.append(flight.pop(0).result())
+            flight.append(_Chunk(commit, chunk))
+        while flight:
+            committed.append(flight.pop(0).result())
+    finally:
+        for c in flight:  # an error is raised once its neighbour is done
+            c.thread.join()
 
     done_now = {b for ch in committed for b in ch}
     return {

@@ -186,6 +186,11 @@ def make_extract_batch(cfg: ExtractConfig):
             # Popped in turn order, each turn's decoded document and
             # layout are freed once its row is built
             layouts = lay_out_documents([d for d in docs if d is not None], cfg)[::-1]
+            for doc in docs:
+                # decoded into each layout's CharArrays: the packed chars
+                # strings need not live until their turn's row is built
+                if doc is not None:
+                    doc.pop("chars", None)
             for i in range(len(pdf)):
                 text, tool, doc, err = texts[i], tools[i], docs[i], errors[i]
                 docs[i] = None

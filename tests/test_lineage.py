@@ -336,28 +336,39 @@ def test_lineage_append_only_and_crash_safe(spark, corpus_df):
 
 
 def _py4j_commands(fn) -> int:
-    """The py4j commands ``fn`` sends to the JVM from this thread. py4j's
-    finalizer thread releases Java objects of earlier garbage (one
-    command each) whenever the collector frees them; those are not
+    """The py4j commands ``fn`` sends to the JVM from this thread and
+    from the threads it starts (``run_resumable``'s chunk threads).
+    py4j's finalizer thread releases Java objects of earlier garbage
+    (one command each) whenever the collector frees them; those are not
     counted."""
     import threading
 
     import py4j.clientserver as cs
 
-    send = cs.ClientServerConnection.send_command
-    caller = threading.get_ident()
+    send, start = cs.ClientServerConnection.send_command, threading.Thread.start
+    caller = threading.current_thread()
+    started = set()
     n = 0
+
+    def starting(self):
+        if threading.current_thread() is caller:
+            started.add(self)
+        return start(self)
 
     def counting(self, command):
         nonlocal n
-        n += threading.get_ident() == caller
+        thread = threading.current_thread()
+        n += thread is caller or thread in started
         return send(self, command)
 
     cs.ClientServerConnection.send_command = counting
+    threading.Thread.start = starting
     try:
         fn()
     finally:
         cs.ClientServerConnection.send_command = send
+        threading.Thread.start = start
+    assert started, "fn started no thread"
     return n
 
 
@@ -388,3 +399,101 @@ def test_one_chunk_of_64_buckets(spark, corpus_df):
     lin = read_lineage(spark, out).toPandas()
     assert lin.n_turns.sum() == len(transcripts) and lin.n_parse_failures.sum() == 1
     _assert_lineage_matches_data(spark, out, 64)
+
+
+# How long a spy waits for the other chunk in flight. With the chunks
+# run one after another the other chunk never comes, and the run fails.
+IN_FLIGHT_WAIT_S = 30
+
+
+def test_two_chunks_in_flight_commit_in_chunk_order(spark, corpus_df, monkeypatch):
+    """The first data write is held until the second has started, and
+    chunk 1's lineage append until chunk 2's has finished: both chunks
+    are in flight at once, chunk 2 commits first, and
+    ``committed_chunks`` still lists the chunks in order."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import libpdf_spark.lineage as lineage
+
+    df, transcripts, _ = corpus_df
+    out = OUT + "_overlap"
+    shutil.rmtree(out, ignore_errors=True)
+    write, append = DataFrameWriter.parquet, lineage._append_lineage
+    writes, lock = [], threading.Lock()
+    second_write, second_appended = threading.Event(), threading.Event()
+
+    def spy_write(self, path, *args, **kwargs):
+        with lock:
+            writes.append(path)
+            first = len(writes) == 1
+        if first:
+            assert second_write.wait(IN_FLIGHT_WAIT_S), "no second write while the first waits"
+        else:
+            second_write.set()
+        return write(self, path, *args, **kwargs)
+
+    def spy_append(spark, output_dir, name, rows):
+        if rows[0][0] == 0:
+            assert second_appended.wait(IN_FLIGHT_WAIT_S), "chunk 2 did not commit first"
+        append(spark, output_dir, name, rows)
+        if rows[0][0] == 2:
+            second_appended.set()
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
+    monkeypatch.setattr(lineage, "_append_lineage", spy_append)
+    r = run_resumable(spark, df, out, ExtractConfig(), n_buckets=8, chunk_size=2)
+    assert r["committed_chunks"] == [[0, 1], [2, 3], [4, 5], [6, 7]]
+    assert len(writes) == 4 and r["remaining"] == []
+    data = spark.read.parquet(f"{out}/data")
+    assert data.count() == len(transcripts)
+    assert data.select("conv_id", "turn_idx").distinct().count() == len(transcripts)
+    _assert_lineage_matches_data(spark, out, 8)
+
+
+def test_failed_chunk_stops_the_run_and_a_rerun_completes(spark, corpus_df, monkeypatch):
+    """Chunk 2's lineage append raises while chunk 3 is in flight: the
+    run raises that error once chunk 3 has committed, chunk 4 never
+    starts, the committed buckets are whole chunks, and a rerun redoes
+    chunk 2 and finishes with no duplicate turn."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import libpdf_spark.lineage as lineage
+
+    df, transcripts, _ = corpus_df
+    out = OUT + "_fail"
+    shutil.rmtree(out, ignore_errors=True)
+    write, append = DataFrameWriter.parquet, lineage._append_lineage
+    writes, lock, third_write = [], threading.Lock(), threading.Event()
+
+    def spy_write(self, path, *args, **kwargs):
+        with lock:
+            writes.append(path)
+            if len(writes) == 3:  # chunks 1, 2 and 3 have all started writing
+                third_write.set()
+        return write(self, path, *args, **kwargs)
+
+    def failing_append(spark, output_dir, name, rows):
+        if rows[0][0] == 2:
+            assert third_write.wait(IN_FLIGHT_WAIT_S), "chunk 3 did not start"
+            raise OSError("lineage append failed")
+        append(spark, output_dir, name, rows)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
+    monkeypatch.setattr(lineage, "_append_lineage", failing_append)
+    with pytest.raises(OSError, match="lineage append failed"):
+        run_resumable(spark, df, out, ExtractConfig(), n_buckets=8, chunk_size=2)
+    assert len(writes) == 3  # chunk 4 never started
+    assert completed_buckets(spark, out) == {0, 1, 4, 5}
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    monkeypatch.setattr(lineage, "_append_lineage", append)
+    r = run_resumable(spark, df, out, ExtractConfig(), n_buckets=8, chunk_size=2)
+    assert r["committed_chunks"] == [[2, 3], [6, 7]]
+    data = spark.read.parquet(f"{out}/data")
+    assert data.count() == len(transcripts)
+    assert data.select("conv_id", "turn_idx").distinct().count() == len(transcripts)
+    _assert_lineage_matches_data(spark, out, 8)
